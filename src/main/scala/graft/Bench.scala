@@ -1,41 +1,20 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** Per-query timing of every registered query — the operator layer.
+  * Prints a full-precision JSON line, then a compact one LAST (the
+  * harness reads a 2000-char output tail). Writes no file: paired
+  * before/after comparison belongs to `perfbench/` (`python3
+  * perfbench/run.py`), which times both sides on the same host. */
 object Bench {
-  /** One run of the fixed 32-task shuffle+agg epoch probe — THE shared
-    * definition both the health gate here and [[ProbeSample]] time, so
-    * the calibration pinned in BASELINE.md can never silently diverge
-    * between the gauging instrument and the gating one (round-13
-    * review). */
-  private[graft] def sparkProbeOnce(spark: SparkSession): Double = {
-    val t0 = System.nanoTime()
-    spark.range(0L, 48000000L, 1L, 32)
-      .selectExpr("xxhash64(id) AS h", "pmod(xxhash64(id), 4096) AS b")
-      .groupBy("b").count()
-      .selectExpr("sum(count)").collect()
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  /** Everything one measurement attempt produced — kept raw so the
-    * final emission can render the CHOSEN attempt with the attempts
-    * audit trail appended (round-15 verdict #3). */
-  private final case class Attempt(
-      results: Seq[(String, Double)], total: Double,
-      rescued: List[String], retried: List[String], failed: List[String],
-      epochHealth: String, healthJson: String)
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // NOTE: AQE's coalescePartitions.parallelismFirst stays at the
     // default (true). Measured with false: post-shuffle stages coalesce
     // to 1 partition at this data size and every compute-heavy window/
     // agg serializes (ev03 0.4s → 2.1s) — task-scheduling floor is the
     // cheaper side of that trade here.
-    val spark = SessionDefaults(SparkSession.builder()
-        .master(s"local[$cpus]"), cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionDefaults.local()
     // A/B hook for the durability tax (SCALE.md "Checkpoint durability"):
     // SPARK_GRAFT_RELIABLE_CKPT=true flips every pipeline materialization
     // from localCheckpoint to a reliable checkpoint. Locally the dir is a
@@ -59,56 +38,6 @@ object Bench {
         try rm(dir) catch { case _: Throwable => () }
       }))
     }
-    // Host-health self-description: the local host's CPU cycles between
-    // healthy (~11M ops/s single-core on this fixed loop) and throttled
-    // (~8-9M) epochs, and identical code measures up to 1.7x slower
-    // throttled. Bracket the run with the canonical probe
-    // (tools/cpu_probe.py — same loop) and record both readings, plus a
-    // small same-epoch DuckDB anchor subtotal, so a reader can judge
-    // sample health from the artifact alone.
-    def py(script: String): Option[String] =
-      try {
-        val p = new ProcessBuilder("python3", "-c", script)
-          .redirectErrorStream(false).start()
-        val out = new String(p.getInputStream.readAllBytes()).trim
-        if (p.waitFor() == 0 && out.nonEmpty) Some(out) else None
-      } catch { case _: Throwable => None }
-    def cpuProbe(): Option[Long] = py(
-      """
-        |import time
-        |t0=time.perf_counter(); x=1; n=0
-        |while time.perf_counter()-t0 < 2.0:
-        |    for _ in range(100000): x=(x*31+7)&0xffffffff
-        |    n+=100000
-        |print(int(n/(time.perf_counter()-t0)))
-        |""".stripMargin).flatMap(_.toLongOption)
-    // Fixed 4-query DuckDB anchor on the same parquet dir (agg, join-agg,
-    // self-dedup, window): best-of-2 total seconds. Not the oracle gate —
-    // just a same-epoch reference point for the Spark/DuckDB ratio.
-    def duckdbAnchor(): Option[Double] = py(
-      s"""
-        |import time
-        |try:
-        |    import duckdb
-        |except Exception:
-        |    raise SystemExit(1)
-        |d = "$sfDir"
-        |qs = [
-        | f"SELECT l_returnflag,l_linestatus,sum(l_quantity),sum(l_extendedprice*(1-l_discount)),count(*) FROM '{d}/lineitem.parquet' GROUP BY 1,2",
-        | f"SELECT o_orderpriority, count(*) FROM '{d}/orders.parquet' o JOIN '{d}/lineitem.parquet' l ON o.o_orderkey=l.l_orderkey WHERE l.l_discount>0.05 GROUP BY 1",
-        | f"SELECT count(*) FROM (SELECT text, count(*) c FROM '{d}/documents.parquet' GROUP BY 1 HAVING count(*)>1)",
-        | f"SELECT max(rn) FROM (SELECT row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) rn FROM '{d}/orders.parquet')",
-        |]
-        |con = duckdb.connect()
-        |total = 0.0
-        |for q in qs:
-        |    best = float('inf')
-        |    for _ in range(2):
-        |        t0 = time.perf_counter(); con.sql(q).fetchall()
-        |        best = min(best, time.perf_counter()-t0)
-        |    total += best
-        |print(round(total, 4))
-        |""".stripMargin).flatMap(_.toDoubleOption)
     // Untimed warm-up: classloading, codegen compiler, parquet reader and
     // shuffle machinery init — otherwise whichever query runs first
     // absorbs ~4s of JVM start-up and the per-query numbers lie.
@@ -116,29 +45,10 @@ object Bench {
       spark.range(1000000).selectExpr("sum(id % 7)").collect()
       SparkEntry.entry(spark).count()
     } catch { case _: Throwable => () }
-    // Spark-side floor probe: a fixed deterministic 32-task hash+shuffle
-    // aggregate, best-of-2 wall seconds. Round 12 found an epoch class
-    // the OTHER two instruments cannot see: the python integer loop
-    // (single-core, register-bound) and the DuckDB anchor (mostly
-    // single-threaded) both read healthy while every multi-core Spark
-    // chain ran ~1.4x the committed record — same code, judged by a
-    // same-epoch old-vs-new source A/B. This probe times the degrading
-    // thing itself (JVM-wide shuffle/agg throughput); its healthy
-    // reference lives in BASELINE.md next to the artifact of record,
-    // and a record taken while it reads high is not record-class no
-    // matter what the CPU probe says.
-    def sparkProbe(): Double = {
-      val s = math.min(sparkProbeOnce(spark), sparkProbeOnce(spark))
-      math.round(s * 10000).toDouble / 10000
-    }
-    // Best of two runs per query: the first pays codegen compilation and
-    // shuffle-file warmup, the second is the steady-state number a
-    // long-running cluster actually sees.
     // None = the action THREW: a crashed query must never be recorded as a
     // (tiny) time — round 5 logged 21 analysis-time crashes as 60 ms
     // "wins" and poisoned the bench comparison.
-    def time(fn: (org.apache.spark.sql.SparkSession, String)
-        => org.apache.spark.sql.DataFrame): Option[Double] = {
+    def time(fn: (SparkSession, String) => DataFrame): Option[Double] = {
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
       catch { case e: Throwable =>
@@ -151,252 +61,56 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .filter(_.nonEmpty) // empty/blank var = no filter, not an empty run
-    def jn[A](o: Option[A]): String = o.map(_.toString).getOrElse("null")
-    // a present-but-unparseable override FAILS LOUDLY instead of
-    // silently falling back to the pinned calibration — the silent
-    // fallback is exactly the faster-host-minting-while-throttled
-    // hazard the override exists to prevent
-    def gateEnv[T](name: String, parse: String => Option[T],
-        default: T): T =
-      sys.env.get(name).map(v => parse(v).getOrElse(sys.error(
-        s"$name='$v' is not parseable; refusing to run the health " +
-          "gate with a silently-ignored calibration override")))
-        .getOrElse(default)
-    val HealthyOps =
-      gateEnv("SPARK_GRAFT_HEALTHY_OPS", _.toLongOption, 7200000L)
-    val HealthyAnchorRefSec =
-      gateEnv("SPARK_GRAFT_ANCHOR_REF_SEC", _.toDoubleOption, 0.148)
-    val SparkProbeGateSec =
-      gateEnv("SPARK_GRAFT_SPARK_PROBE_GATE_SEC", _.toDoubleOption, 0.90)
-
-    /** One full measurement pass: probe bracket + per-query best-of-2
-      * sampling + the three-instrument health verdict. */
-    def measure(): Attempt = {
-      val probeBefore = cpuProbe()
-      val sparkProbeBefore = sparkProbe()
-      var rescued = List.empty[String]
-      var retried = List.empty[String]
-      var failed = List.empty[String]
-      val results = SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (name, _) => only.forall(_.contains(name)) }
-        .map { case (name, fn) =>
-          // scheduler_state_after_run must price a REAL scheduler pass
-          // per sample, not a hit on the memoized run another query
-          // triggered. dd16 is the inverse: its gated form bootstraps
-          // the signature store AND ingests, but the number users size
-          // clusters with is steady-state ingest (production amortizes
-          // the bootstrap across every arriving batch), so the bench
-          // times the ingest-only form against a per-session memoized
-          // store.
-          val benchFn = if (name == "dd16_incremental_lsh") {
-            // the memoized store bootstrap is priced NOWHERE: warm it
-            // before the first timed sample
-            graft.pipeline.IncrementalDedup.warmDd16BenchStore(spark, sfDir)
-            graft.pipeline.IncrementalDedup.dd16IngestOnly _
-          } else if (name == "dd17_forget_store") {
-            // same discipline for the takedown: the gate builds the
-            // full store per sample for self-containedness; users size
-            // takedowns by the forget against an EXISTING store
-            graft.pipeline.IncrementalDedup.warmDd17BenchStore(spark, sfDir)
-            graft.pipeline.IncrementalDedup.dd17ForgetOnly _
-          } else fn
-          def sample(): Option[Double] = {
-            if (name == "scheduler_state_after_run")
-              graft.scheduler.SchedulerQueries.clearRealRunCache()
-            // guide §1.5: label the jobs so a UI/event-log trace of a
-            // 151-query run maps back to queries (thread-local, cleared
-            // with the group below; no effect on the measurement)
-            spark.sparkContext.setJobDescription(s"bench: $name")
-            try time(benchFn)
-            finally spark.sparkContext.setJobDescription(null)
-          }
-          // best-of-2, plus a rescue attempt when the two samples
-          // disagree by >2× — the run was hit by an external
-          // CPU-contention window, not by the query itself. Rescued
-          // queries are recorded in the JSON so the methodology shift
-          // (min-of-3) stays visible; a query where exactly ONE sample
-          // threw goes to "retried" instead (a crash-retry is not a
-          // contention rescue). A query whose BOTH samples throw is
-          // listed in "failed" and OMITTED from the queries map — a
-          // crash is not a time, and a -1 sentinel in the map would
-          // corrupt any consumer that sums it.
-          (sample(), sample()) match {
-            case (None, None) => failed ::= name; name -> None
-            case (a, b) =>
-              val ts = Seq(a, b).flatten
-              val best = ts.min
-              name -> Some(
-                if (ts.size < 2) {
-                  retried ::= name
-                  math.min(best, sample().getOrElse(best))
-                } else if (ts.max > 2 * best) {
-                  rescued ::= name
-                  math.min(best, sample().getOrElse(best))
-                } else best)
-          }
+    val timed = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .map { case (name, fn) =>
+        // scheduler_state_after_run must price a REAL scheduler pass
+        // per sample, not a hit on the memoized run another query
+        // triggered. dd16 is the inverse: its gated form bootstraps
+        // the signature store AND ingests, but the number users size
+        // clusters with is steady-state ingest (production amortizes
+        // the bootstrap across every arriving batch), so the bench
+        // times the ingest-only form against a per-session memoized
+        // store.
+        val benchFn = if (name == "dd16_incremental_lsh") {
+          // the memoized store bootstrap is priced NOWHERE: warm it
+          // before the first timed sample
+          graft.pipeline.IncrementalDedup.warmDd16BenchStore(spark, sfDir)
+          graft.pipeline.IncrementalDedup.dd16IngestOnly _
+        } else if (name == "dd17_forget_store") {
+          // same discipline for the takedown: the gate builds the
+          // full store per sample for self-containedness; users size
+          // takedowns by the forget against an EXISTING store
+          graft.pipeline.IncrementalDedup.warmDd17BenchStore(spark, sfDir)
+          graft.pipeline.IncrementalDedup.dd17ForgetOnly _
+        } else fn
+        def sample(): Option[Double] = {
+          if (name == "scheduler_state_after_run")
+            graft.scheduler.SchedulerQueries.clearRealRunCache()
+          // guide §1.5: label the jobs so a UI/event-log trace of a
+          // 151-query run maps back to queries (thread-local, cleared
+          // with the group below; no effect on the measurement)
+          spark.sparkContext.setJobDescription(s"bench: $name")
+          try time(benchFn)
+          finally spark.sparkContext.setJobDescription(null)
         }
-        .collect { case (name, Some(t)) => name -> t }
-      val total = results.map(_._2).sum
-      // End-of-run health bracket + same-epoch DuckDB anchor. A record
-      // is only epoch-trustworthy when BOTH probes read healthy
-      // (>=10.5M standalone on this container, see tools/cpu_probe.py
-      // calibration); the anchor gives the ratio denominator without a
-      // separate archaeology step.
-      val probeAfter = cpuProbe()
-      val sparkProbeAfter = sparkProbe()
-      val anchor = if (only.isEmpty) duckdbAnchor() else None
-      // Explicit verdict so downstream tooling doesn't re-derive the
-      // band. Healthy requires ALL THREE instruments to agree
-      // (round-12 verdict #1: the CPU-floor-only flag labeled a
-      // 2.4x-anchor throttled run "healthy"):
-      //  - both CPU probes >= 7.2e6 ops/s (the in-bench healthy floor —
-      //    the standalone ~10.5e6 minus the constant ~30% co-residency
-      //    cost; tools/cpu_probe.py calibration);
-      //  - the DuckDB anchor <= 1.3x its pinned healthy reference
-      //    (0.148 s — the r11 record's window; healthy windows measure
-      //    0.145-0.166, the r12 throttled driver epoch 0.352);
-      //  - the spark probe's best reading <= its pinned
-      //    gross-degradation gate (0.90 s = 2x the 0.45 s best steady
-      //    state; healthy windows measure a noisy 0.45-0.70 band and
-      //    the known throttle epochs 0.33-0.65, so this instrument can
-      //    only catch GROSS JVM-chain degradation — the anchor and the
-      //    per-query record comparison carry the finer discrimination;
-      //    calibration in BASELINE.md round-13 addendum).
-      // A full run missing its anchor -> "unknown", never silently
-      // healthy. Subset runs (no anchor by design) gate on the other
-      // two. The three pinned values are THIS container's calibration
-      // (tools/cpu_probe.py + BASELINE.md); overridable via env, with
-      // the effective values recorded in the emitted JSON.
-      val cpuOk = (probeBefore, probeAfter) match {
-        case (Some(a), Some(b)) => Some(a >= HealthyOps && b >= HealthyOps)
-        case _ => None
+        // Min of two samples: the first pays codegen compilation and
+        // shuffle-file warmup, the second is the steady-state number a
+        // long-running cluster actually sees. A query with ANY sample
+        // that threw is failed — a crash is not a time, and it stays
+        // out of the queries map and the total.
+        name -> sample().flatMap(a => sample().map(math.min(a, _)))
       }
-      val anchorOk =
-        if (only.isEmpty) anchor.map(_ <= 1.3 * HealthyAnchorRefSec)
-        else Some(true) // subset runs skip the anchor by design
-      val sparkProbeOk =
-        math.min(sparkProbeBefore, sparkProbeAfter) <= SparkProbeGateSec
-      val epochHealth = (cpuOk, anchorOk) match {
-        case (Some(c), Some(a)) =>
-          if (c && a && sparkProbeOk) "healthy" else "degraded"
-        case _ => "unknown"
-      }
-      val health = s""""probe_before":${jn(probeBefore)},"probe_after":${jn(probeAfter)},"spark_probe_sec_before":$sparkProbeBefore,"spark_probe_sec_after":$sparkProbeAfter,"duckdb_anchor_sec":${jn(anchor)},"gate":{"healthy_ops":$HealthyOps,"anchor_ref_sec":$HealthyAnchorRefSec,"spark_probe_gate_sec":$SparkProbeGateSec},"epoch_health":"$epochHealth""""
-      Attempt(results, total, rescued, retried, failed, epochHealth, health)
-    }
-
-    def fullJson(a: Attempt, attemptsJson: String): String = {
-      val resc = a.rescued.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val retr = a.retried.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val failJson = a.failed.sorted.map("\"" + _ + "\"")
-        .mkString("[", ",", "]")
-      val qsFull = a.results.map { case (k, v) => s"\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${a.total},"unit":"sec","queries":$qsFull,"sf":"$sfDir","method":"per-query min of 2 samples; 3rd sample if max>2*min (rescued lists those) or if one sample threw (retried lists those); a query whose samples all threw is listed in failed and omitted from queries/total; probes are tools/cpu_probe.py ops/s run co-resident with this JVM, which costs a constant ~30% vs standalone: healthy epoch reads >= ~7.2e6 here (>= ~10.5e6 standalone); duckdb_anchor_sec is a fixed 4-query same-epoch DuckDB subtotal on the same dir; spark_probe_sec_* is a fixed 32-task shuffle+agg best-of-2 timed in THIS JVM (calibration in BASELINE.md); epoch_health=healthy requires cpu probes >= the gate's healthy_ops AND anchor <= 1.3x its anchor_ref_sec AND min spark_probe <= its spark_probe_gate_sec (pinned container calibration by default, overridable via SPARK_GRAFT_HEALTHY_OPS / SPARK_GRAFT_ANCHOR_REF_SEC / SPARK_GRAFT_SPARK_PROBE_GATE_SEC; effective values in the gate field) — a failing full run is quarantined to BENCH_DEGRADED_LOCAL.json and never overwrites BENCH_FULL_LOCAL.json, and a HEALTHY run overwrites the record only when its total BEATS the committed one (slower healthy samples go to BENCH_HEALTHY_LAST.json); a degraded FULL run gets up to TWO cool-down re-measures (45 s, then 120 s; attempts lists every pass; the emitted line is the best-labeled attempt) and the degraded history file keeps only its last 12 samples; dd16_incremental_lsh times INGEST ONLY and dd17_forget_store times the FORGET ONLY, each against a per-session memoized signature store (the gated queries' one-time store build is amortized in production)","rescued":$resc,"retried":$retr,"failed":$failJson,"attempts":$attemptsJson,${a.healthJson}}"""
-    }
-
-    /** Persist one attempt under the record/quarantine discipline —
-      * UNCHANGED from before the retry existed (round-15 verdict #3:
-      * the retry only affects which attempt the final stdout lines
-      * show). Persist only FULL runs: a SPARK_GRAFT_BENCH_ONLY dev
-      * subset must not clobber the repo's full-suite record.
-      * QUARANTINE (round-12 verdict #1/#2): a sample whose health gate
-      * fails goes to BENCH_DEGRADED_LOCAL.json and NEVER touches
-      * BENCH_FULL_LOCAL.json. MONOTONE record (round-13 verdict #1):
-      * healthy-window noise spreads ~8-18%, so the record file only
-      * improves; a healthy sample that does NOT beat the committed
-      * total lands in BENCH_HEALTHY_LAST.json (still visible, never
-      * shadowing), and EVERY healthy full sample appends to
-      * BENCH_HEALTHY_HISTORY.jsonl (round-14 verdict #6). "unknown"
-      * runs (probe tooling absent) quarantine too: a host without the
-      * probes cannot mint records. */
-    def persist(a: Attempt, attemptsJson: String): Unit =
-      if (only.isEmpty) try {
-        val full = fullJson(a, attemptsJson)
-        if (a.epochHealth == "healthy") {
-          val committedTotal: Option[Double] =
-            try {
-              val f = java.nio.file.Paths.get("BENCH_FULL_LOCAL.json")
-              if (!java.nio.file.Files.exists(f)) None
-              else """"value":([0-9][0-9.eE+-]*)""".r
-                .findFirstMatchIn(java.nio.file.Files.readString(f))
-                .map(_.group(1).toDouble)
-            } catch { case _: Throwable => None }
-          val dest =
-            if (committedTotal.forall(a.total < _)) "BENCH_FULL_LOCAL.json"
-            else "BENCH_HEALTHY_LAST.json"
-          val w = new java.io.PrintWriter(dest)
-          try w.println(full) finally w.close()
-          val h = new java.io.FileWriter("BENCH_HEALTHY_HISTORY.jsonl", true)
-          try h.write(full + "\n") finally h.close()
-        } else {
-          // latest rejected sample stays visible at the fixed name, and
-          // the full sequence is APPENDED to a history file — each
-          // degraded sample is epoch-forensics evidence (round-13
-          // review)
-          val w = new java.io.PrintWriter("BENCH_DEGRADED_LOCAL.json")
-          try w.println(full) finally w.close()
-          val h = new java.io.FileWriter("BENCH_DEGRADED_HISTORY.jsonl", true)
-          try h.write(full + "\n") finally h.close()
-          // BOUNDED tail (round-16 verdict #8): a degraded sample's
-          // only value is epoch forensics for RECENT windows — keep the
-          // last 12 and drop the rest, so quarantine noise cannot grow
-          // without bound (the healthy history stays append-only: every
-          // healthy sample is a real measurement of record).
-          val hp = java.nio.file.Paths.get("BENCH_DEGRADED_HISTORY.jsonl")
-          val lines = java.nio.file.Files.readAllLines(hp)
-          if (lines.size > 12) {
-            val keep = lines.subList(lines.size - 12, lines.size)
-            java.nio.file.Files.write(hp, keep)
-          }
-        }
-      } catch { case _: Throwable => () }
-
-    // ---- measurement, with the degraded-gate one-retry (round-15
-    // verdict #3): four consecutive rounds of degraded DRIVER artifacts
-    // while the honest committed record improved was a presentation
-    // bug — when the gate reads degraded on a FULL run, cool down once
-    // and re-measure; the final stdout lines carry the better-labeled
-    // attempt, with every attempt recorded in the attempts field and
-    // in the quarantine/record files (per-attempt, logic untouched).
-    val a1 = measure()
-    def attemptSummary(as: Seq[Attempt]): String =
-      as.zipWithIndex.map { case (a, i) =>
-        s"""{"attempt":${i + 1},"epoch_health":"${a.epochHealth}","value":${a.total}}"""
-      }.mkString("[", ",", "]")
-    val attempts: Seq[Attempt] =
-      if (a1.epochHealth != "degraded" || only.nonEmpty) Seq(a1)
-      else {
-        System.err.println("[bench] epoch gate read degraded; one " +
-          "cool-down re-measure in 45 s (round-15 verdict #3)")
-        Thread.sleep(45000L)
-        val a2 = measure()
-        if (a2.epochHealth != "degraded") Seq(a1, a2)
-        else {
-          // second, LONGER cool-down (round-16 verdict #6): the r16
-          // driver artifact stayed degraded through the single 45 s
-          // retry — one more re-measure after 120 s before emitting.
-          // Presentation only: every attempt still persists under the
-          // unchanged record/quarantine logic.
-          System.err.println("[bench] still degraded after the 45 s " +
-            "retry; one final re-measure in 120 s (round-16 verdict #6)")
-          Thread.sleep(120000L)
-          Seq(a1, a2, measure())
-        }
-      }
-    val attemptsJson = attemptSummary(attempts)
-    attempts.foreach(persist(_, attemptsJson))
-    // better-labeled attempt wins: healthy > unknown > degraded; ties
-    // go to the lower total
-    def rank(h: String): Int = h match {
-      case "healthy" => 2; case "unknown" => 1; case _ => 0
-    }
-    val chosen = attempts.maxBy(a => (rank(a.epochHealth), -a.total))
-    val full = fullJson(chosen, attemptsJson)
-    println(full)
-    // Compact: 2-decimal per-query seconds (trailing zeros stripped),
-    // rescued as a count. 72 queries ≈ 1.85k chars — fits the tail window
-    // together with sbt's trailing "[success] Total time" line.
+    val results = timed.collect { case (name, Some(t)) => name -> t }
+    val failed = timed.collect { case (name, None) => name }
+    val total = results.map(_._2).sum
+    val failJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val qsFull = results.map { case (k, v) => s"\"" + k + "\":" + v }
+      .mkString("{", ",", "}")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,"sf":"$sfDir","method":"per-query min of 2 samples; a query with any sample that threw is listed in failed and omitted from queries/total; dd16_incremental_lsh times INGEST ONLY and dd17_forget_store times the FORGET ONLY, each against a per-session memoized signature store (the gated queries' one-time store build is amortized in production)","failed":$failJson}""")
+    // Compact: 2-decimal per-query seconds (trailing zeros stripped).
+    // 72 queries ≈ 1.85k chars — fits the tail window together with
+    // sbt's trailing "[success] Total time" line.
     def short(v: Double, dp: Int): String = {
       val s = java.math.BigDecimal.valueOf(v)
         .setScale(dp, java.math.RoundingMode.HALF_UP).toPlainString
@@ -408,21 +122,19 @@ object Bench {
     // trailing "[success] Total time: ..." line.
     val MaxLine = 1880
     def render(keep: Int): String = {
-      val failJson = chosen.failed.sorted.map("\"" + _ + "\"")
-        .mkString("[", ",", "]")
-      val byCost = chosen.results.sortBy { case (k, v) => (-v, k) }
+      val byCost = results.sortBy { case (k, v) => (-v, k) }
       val kept = byCost.take(keep).sortBy(_._1)
       val omitted = byCost.drop(keep)
       val qs = kept.map { case (k, v) => s"\"" + k + "\":" + short(v, 2) }
         .mkString("{", ",", "}")
       val om = if (omitted.isEmpty) ""
         else s""","omitted":${omitted.size},"omitted_sec":${short(omitted.map(_._2).sum, 2)}"""
-      s"""{"metric":"total","value":${short(chosen.total, 2)},"unit":"sec","queries":$qs,"sf":"$sfName","rescued":${chosen.rescued.size},"retried":${chosen.retried.size},"failed":$failJson,"attempts":$attemptsJson,${chosen.healthJson}$om}"""
+      s"""{"metric":"total","value":${short(total, 2)},"unit":"sec","queries":$qs,"sf":"$sfName","failed":$failJson$om}"""
     }
     // Keep the SLOWEST queries (the ones a grader compares) and fold the
     // rest into an omitted-count + omitted-seconds summary if the full map
     // would overflow the tail window and get truncated mid-line again.
-    var keep = chosen.results.size
+    var keep = results.size
     var compact = render(keep)
     while (compact.length > MaxLine && keep > 10) {
       keep -= 5; compact = render(keep)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Deterministic SKEWED-corpus stress fixture (VERDICT r7 #2): the
@@ -32,12 +32,7 @@ object GenSkew {
   def main(args: Array[String]): Unit = {
     val src = args(0)
     val dst = args(1)
-    val spark = SessionDefaults(SparkSession.builder()
-        .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"),
-        "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionDefaults.local()
 
     def write(df: DataFrame, name: String, files: Int = 4): Unit = {
       df.repartition(files)

@@ -364,9 +364,9 @@ object Main {
       return
     }
 
+    val cpus = SessionDefaults.cpus()
     val spark = SessionDefaults(SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_MASTER", "local[32]")),
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+        .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]")), cpus)
       .appName("graft").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftExtensions.register(spark)

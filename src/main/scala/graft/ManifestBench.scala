@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.catalog.{InventoryRow, TableManifest}
 
 /** Measures the run-prologue manifest capture (Scheduler stage ~9.5,
@@ -17,9 +15,7 @@ import graft.catalog.{InventoryRow, TableManifest}
 object ManifestBench {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toInt else 20000
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionDefaults.local()
     val base = java.nio.file.Files
       .createTempDirectory("graft-manifests").toString
     (0 until n).foreach { i =>

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: dump the physical plan of each named query (or all headline
   * ones) so pushdown / pruning / join strategy can be audited.
@@ -17,9 +16,7 @@ object PlanAudit {
       (parts(0), if (parts.length > 1) parts(1) else "plan")
     }
     out.foreach { case (dir, _) => new java.io.File(dir).mkdirs() }
-    val spark = SessionDefaults(
-        SparkSession.builder().master("local[8]"), "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = SessionDefaults.local()
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.allQueries
       .filter(q => names.isEmpty || names(q.name))

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.streaming.Streams
@@ -11,12 +10,7 @@ import graft.streaming.Streams
 object StreamDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SessionDefaults(SparkSession.builder()
-        .master(s"local[$cpus]"), cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionDefaults.local()
 
     val tumbling = Streams.runToMemory(spark,
       Streams.tumblingCounts(Streams.eventsStream(spark, sfDir)),

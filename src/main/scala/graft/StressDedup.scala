@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Runs the dedup tier against the [[GenSkew]] stress fixture in BOTH
   * bucket-cap modes and reports, per query, one JSON line with wall
@@ -53,11 +52,7 @@ object StressDedup {
     val dir = args(0)
     val modes = if (args.length > 1) args(1).split(",").toSeq
       else Seq("throw", "truncate")
-    val spark = SessionDefaults(SparkSession.builder()
-        .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"),
-        "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SessionDefaults.local()
     spark.sparkContext.setLogLevel("ERROR")
     val listener = new PeakListener
     spark.sparkContext.addSparkListener(listener)

@@ -51,7 +51,7 @@ object Winnow {
     val bytes = s.getBytes
     val n = bytes.length
     val nh = n - k + 1
-    if (nh < w) return new GenericArrayData(Array.empty[Long])
+    if (nh < w || maxPieces <= 0) return new GenericArrayData(Array.empty[Long])
     var bk = 1L // B^(k-1) mod M
     var j = 0
     while (j < k - 1) { bk = bk * B % M; j += 1 }

@@ -58,12 +58,7 @@ object ScaleVerify {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("local-data/sf1")
     val sampleOut = args.lift(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.SessionDefaults(
-        SparkSession.builder().master(s"local[$cpus]"), cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SessionDefaults.local()
     val results = runAll(spark, sfDir)
     results.foreach { r =>
       println(f"[scaleverify] ${if (r.pass) "PASS" else "FAIL"} " +

@@ -530,9 +530,11 @@ object Streams {
 
   /** Non-hidden data files currently under `src`, by bare URI path —
     * the same recursive/hidden-component discipline as the arrival
-    * modes' landing probe (graft.Main.hasLandedFiles). */
+    * modes' landing probe (graft.Main.hasLandedFiles). Zero-length
+    * files carry no rows and are skipped unless `includeEmpty`
+    * ([[archiveDrained]] must still sweep them). */
   private[graft] def listDataFiles(spark: SparkSession,
-      src: String): Seq[String] = {
+      src: String, includeEmpty: Boolean = false): Seq[String] = {
     val raw = new org.apache.hadoop.fs.Path(src)
     val fs = raw.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val srcP = fs.makeQualified(raw)
@@ -540,7 +542,8 @@ object Streams {
     else if (fs.getFileStatus(srcP).isFile) {
       // a single-file table (DuckDB COPY / pandas layout): the file was
       // explicitly named, so no hidden-component filtering applies
-      if (fs.getFileStatus(srcP).getLen > 0) Seq(srcP.toUri.getPath)
+      if (includeEmpty || fs.getFileStatus(srcP).getLen > 0)
+        Seq(srcP.toUri.getPath)
       else Nil
     } else {
       val basePath = srcP.toUri.getPath.stripSuffix("/") + "/"
@@ -551,7 +554,7 @@ object Streams {
         val rel = st.getPath.toUri.getPath.stripPrefix(basePath)
         val hidden = rel.split("/").exists(c =>
           c.startsWith("_") || c.startsWith("."))
-        if (st.isFile && st.getLen > 0 && !hidden)
+        if (st.isFile && (includeEmpty || st.getLen > 0) && !hidden)
           buf += st.getPath.toUri.getPath
       }
       buf.toSeq
@@ -819,11 +822,13 @@ object Streams {
     * cross-filesystem copy, atomic per file on any sane fs. A file
     * that fails its rename (concurrent reader holding it, permissions)
     * is left in place and retried next pass — archival is best-effort
-    * hygiene, never a drain-blocking step. Driver-side metadata only;
-    * zero Spark jobs. Returns how many files moved. */
+    * hygiene, never a drain-blocking step. Committed zero-length files
+    * are swept too, or each would be listed again on every pass.
+    * Driver-side metadata only; zero Spark jobs. Returns how many files
+    * moved. */
   private[graft] def archiveDrained(spark: SparkSession, src: String,
       checkpoint: String): Long = {
-    val onDisk = listDataFiles(spark, src)
+    val onDisk = listDataFiles(spark, src, includeEmpty = true)
     if (onDisk.isEmpty) return 0L
     val seen = seenFiles(spark, checkpoint)
     val drained = onDisk.filter(seen.contains)

@@ -659,6 +659,33 @@ class StreamingSpec extends AnyFunSuite {
     assert(sup.contains(s"$src/compacted.parquet"), sup.toString)
   }
 
+  test("archiveDrained sweeps a committed zero-length drained file " +
+      "into _archived/ (or every pass would list it again)") {
+    val base = java.nio.file.Files
+      .createTempDirectory("graft-archempty").toString
+    val fs = new org.apache.hadoop.fs.Path(base)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val src = s"$base/forget"
+    def put(p: String, body: String): Unit = {
+      val out = fs.create(new org.apache.hadoop.fs.Path(p), true)
+      out.writeBytes(body); out.close()
+    }
+    put(s"$src/empty.parquet", "")
+    put(s"$src/full.parquet", "x")
+    val ckpt = s"$base/ckpt"
+    put(s"$ckpt/sources/0/0",
+      s"""v1\n{"path":"file://$src/empty.parquet","timestamp":1,"batchId":0}\n""" +
+        s"""{"path":"file://$src/full.parquet","timestamp":1,"batchId":0}""")
+    put(s"$ckpt/commits/0", "v1\n{}")
+    assert(Streams.archiveDrained(spark, src, ckpt) === 2L)
+    val archived = new java.io.File(s"$src/_archived").list().toSet
+      .filterNot(_.startsWith(".")) // the local fs's .crc sidecars
+    assert(archived === Set("empty.parquet", "full.parquet"))
+    assert(!new java.io.File(s"$src/empty.parquet").exists())
+    // nothing left to sweep on the next pass
+    assert(Streams.archiveDrained(spark, src, ckpt) === 0L)
+  }
+
   test("session_window built-in agrees with the lag-based sessionization") {
     // two independent implementations of 30-min-gap sessions must agree on
     // (user, session_start, session_end, n_events)

@@ -36,8 +36,10 @@ class WinnowSpec extends AnyFunSuite {
       (0 until 200).map(i => ('a' + i % 26).toChar).mkString,
       "x" * 23,                            // exactly k+w-1: ONE full window
     )
-    for (t <- texts; k <- Seq(4, 8); w <- Seq(3, 16)) {
-      assert(kernel(t, k, w, 8) === direct(t, k, w, 8), s"text=$t k=$k w=$w")
+    // maxPieces <= 0 asks for no pieces: empty, never a throw
+    for (t <- texts; k <- Seq(4, 8); w <- Seq(3, 16); mp <- Seq(8, 0, -1)) {
+      assert(kernel(t, k, w, mp) === direct(t, k, w, mp),
+        s"text=$t k=$k w=$w maxPieces=$mp")
     }
   }
 
