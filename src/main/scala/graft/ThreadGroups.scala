@@ -5,7 +5,7 @@ import org.apache.spark.SparkContext
 /** Spark's job-group/description properties are THREAD-LOCAL, so a
   * query that submits independent job chains from concurrent threads
   * (sim09's two trainers, dd08's two candidate generators) silently
-  * drops the caller's group on those chains: `JobCount` undercounts
+  * drops the caller's group on those chains: `Dev.Gauge` undercounts
   * them (round-16 audit: sim09 read 10 jobs when its trainers schedule
   * ~12 more), and `cancelJobGroup` cannot stop them. Capture the
   * caller's properties before the fork and re-apply them on the

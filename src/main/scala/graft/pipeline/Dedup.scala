@@ -805,7 +805,7 @@ object Dedup {
       // two aggs) runs twice. One long per doc — trivially small.
       .materialized
     // EXACT-SIGNATURE STAR COLLAPSE before any pair expansion — the dd03
-    // sigWithRep discipline, which the skew stress fixture (GenSkew's
+    // sigWithRep discipline, which the skew stress fixture (`Dev genskew`'s
     // 10⁵-copy boilerplate pile) proved this query was missing: identical
     // docs share a simhash, and emitting the full clique is C(n,2) —
     // measured 5.2×10⁹ output rows on the 100k pile. Collapse each
@@ -859,7 +859,7 @@ object Dedup {
     * the pair space linear-ish; the all-pairs fallback is sim01).
     *
     * EXACT-VECTOR STAR COLLAPSE first (the dd03/dd04 discipline, added
-    * after GenSkew's 5k-identical-vector pile measured a C(n,2) clique
+    * after `Dev genskew`'s 5k-identical-vector pile measured a C(n,2) clique
     * in the output): bit-identical embeddings collapse to their min-id
     * representative; members attach by |group|-1 star pairs (cosine
     * computed through the same formula — identical vectors, so it is
@@ -1203,7 +1203,7 @@ object Dedup {
     // (weighting unchanged), but pair expansion runs on distinct-vector
     // representatives only, so an exact-dup pile contributes |pile|-1
     // star rows instead of an in-cell clique (measured 12.5M rows on
-    // GenSkew's 5k pile before this). No fixture contains duplicate
+    // `Dev genskew`'s 5k pile before this). No fixture contains duplicate
     // embeddings, so fixture results are bit-identical; the collapse is
     // pinned by DedupPropertySpec's pile case.
     // rep = min(vec_id) OVER (PARTITION BY embedding) — round-17 job

@@ -918,7 +918,7 @@ object Similarity {
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
     // the forked chains inherit the caller's job group (thread-local in
-    // Spark): without this, JobCount/cancelJobGroup cannot see the two
+    // Spark): without this, `Dev.Gauge`/cancelJobGroup cannot see the two
     // trainers' jobs (round-16 sim09 audit)
     val grp = graft.ThreadGroups.captured(s.sparkContext)
     val fPr = Future(graft.ThreadGroups.withCaptured(s.sparkContext, grp)(

@@ -116,6 +116,12 @@ final case class ArrivalReport(stages: Seq[StageResult],
   * store's lease exactly while writing it. */
 object ArrivalPass {
 
+  /** Thrown inside a forget-queue micro-batch whose ids target a store
+    * root that does not exist — before the batch commits, so the stage
+    * fails and the request drains on a later pass. */
+  private final class AbsentStoreRoot(msg: String)
+      extends RuntimeException(msg)
+
   /** Stage detail for an ingest drain: the normal summary, or — when
     * the drain stopped at the pass deadline — the drained/remaining
     * accounting the operator needs to size tomorrow's backlog. */
@@ -519,37 +525,9 @@ object ArrivalPass {
         // (Forget.hardRetrain) — so a legal-grade erasure is ALSO just
         // a file drop, no CLI run needed
         val hasHardCol = schema.fieldNames.contains("hard")
-        // vanish-only drain (round-18 advice): with an empty unseen
-        // set the stream runs only to COMMIT the tombstone batch —
-        // nothing will be scrubbed, and the guard columns above came
-        // from already-drained historical files — so the absent-store
-        // guard must not apply (a store root removed after those files
-        // drained would otherwise wedge the stage on every pass and
-        // the tombstone batch could never commit)
-        val vanishOnly = newFiles.isEmpty
         if (!hasDocCol && !hasVecCol)
           ("failed", s"takedown files under $forgetDir carry neither " +
             "a doc_id nor a vec_id column; nothing to propagate")
-        // ABSENT-STORE guard (round-17 advice, mirroring the CLI
-        // --forget's exit(3)): a takedown drained while a targeted
-        // store root is absent/misconfigured would run Forget as a
-        // rows=0 no-op, advance the checkpoint, and permanently
-        // consume the request — the exact '0 rows looks complete'
-        // hazard. Fail WITHOUT advancing the checkpoint; the operator
-        // fixes the config and the same files drain next pass. (An
-        // absent PAIR sink is legitimately empty — scrubPairs handles
-        // it — so only the sig/ann store roots gate, and only when the
-        // drain has NEW files to scrub — see vanishOnly above.)
-        else if (!vanishOnly && hasDocCol && !rootExists(cfg.sigStorePath))
-          ("failed", s"takedown files under $forgetDir target doc_id " +
-            s"but the signature store root ${cfg.sigStorePath} does " +
-            "not exist — draining would consume the request as a " +
-            "no-op; checkpoint NOT advanced")
-        else if (!vanishOnly && hasVecCol && !rootExists(cfg.annStorePath))
-          ("failed", s"takedown files under $forgetDir target vec_id " +
-            s"but the ANN store root ${cfg.annStorePath} does not " +
-            "exist — draining would consume the request as a no-op; " +
-            "checkpoint NOT advanced")
         else {
           import org.apache.spark.sql.functions.{col, count, lit, when,
             input_file_name}
@@ -566,7 +544,8 @@ object ArrivalPass {
           // tail retrain below is exempt from the deadline deferral
           // when the debt predates tonight
           val owedAtEntry = forgetHardPending
-          val stopped = graft.streaming.Streams.incrementalCheckById(
+          graft.streaming.Streams.onPreDrainSnapshot()
+          val stopped = try graft.streaming.Streams.incrementalCheckById(
             spark, forgetDir, schema,
             (batch, id) => {
               val b = batch.toDF()
@@ -586,6 +565,28 @@ object ArrivalPass {
                   when(col("hard") === lit(true), lit(1))
                   else lit(null)).as("h"))
                 .head()
+              // ABSENT-STORE guard (round-17 advice, mirroring the CLI
+              // --forget's exit(3)): draining a takedown while a targeted
+              // store root is absent would run Forget as a rows=0 no-op,
+              // commit, and consume the request for good. Checked on the
+              // ids THIS batch carries — a file landing after any
+              // pre-stream probe is still planned by the stream's own
+              // listing. Throwing fails the stage before the commit, so
+              // the same file drains once the config is fixed. Only the
+              // sig/ann roots gate (an absent PAIR sink is legitimately
+              // empty); a tombstone batch of vanished files carries no
+              // ids and always commits.
+              def absent(ids: Long, idCol: String, what: String,
+                  root: String): Unit =
+                if (ids > 0L && !rootExists(root))
+                  throw new AbsentStoreRoot(s"takedown file $src " +
+                    s"targets $idCol but the $what root $root does not " +
+                    "exist — draining would consume the request as a " +
+                    "no-op; checkpoint NOT advanced")
+              absent(cnts.getLong(0), "doc_id", "signature store",
+                cfg.sigStorePath)
+              absent(cnts.getLong(1), "vec_id", "ANN store",
+                cfg.annStorePath)
               val docIds = if (cnts.getLong(0) > 0L)
                 Some(b.filter(col("doc_id").isNotNull).select("doc_id"))
                 else None
@@ -640,6 +641,14 @@ object ArrivalPass {
             deadline = deadline, clock = clock,
             maxFilesPerBatch = Some(1),
             heartbeat = () => passLease.renew())
+          catch { case e: org.apache.spark.sql.streaming
+              .StreamingQueryException =>
+            // the stream wraps a batch's failure: fail the stage with
+            // the absent-store guard's own message when it is the cause
+            throw Iterator.iterate[Throwable](e)(_.getCause)
+              .takeWhile(_ != null)
+              .collectFirst { case a: AbsentStoreRoot => a }.getOrElse(e)
+          }
           val cut = if (!stopped) ""
             else s" stopped-at-deadline (remaining≈${
               graft.streaming.Streams.unseenFiles(spark, forgetDir,

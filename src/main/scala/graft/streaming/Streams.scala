@@ -783,7 +783,8 @@ object Streams {
   /** Test seam: called right after an ingest drain takes its pre-drain
     * disk snapshot, BEFORE the stream starts — a spec lands a file here
     * to deterministically exercise the snapshot→planning window the
-    * mid-drain reconciliation covers. No-op in production. */
+    * mid-drain reconciliation covers (and, in the forget-queue drain,
+    * the in-batch absent-store guard). No-op in production. */
   private[graft] var onPreDrainSnapshot: () => Unit = () => ()
 
   /** How many landed files `checkpoint` has NOT yet committed — the

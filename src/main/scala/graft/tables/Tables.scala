@@ -18,7 +18,7 @@ object Tables {
     * footer-read job per CALL to infer the schema — a query touching the
     * same catalog of tables pays that job once per table reference
     * (check_fk_containment scheduled 10 of its 16 jobs on exactly this;
-    * graft.JobCount round-14). A real deployment reads CATALOG tables
+    * the job-count gauge, now `graft.Dev jobs`, round-14). A real deployment reads CATALOG tables
     * whose schema is known at plan time; this memo gives path reads the
     * same property: infer once, then plan every later read with
     * `.schema(...)` (no inference job, no footer touch). The key carries

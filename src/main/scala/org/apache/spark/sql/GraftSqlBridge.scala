@@ -26,4 +26,10 @@ object GraftSqlBridge {
   def serializableHadoopConf(conf: org.apache.hadoop.conf.Configuration)
       : org.apache.spark.util.SerializableConfiguration =
     new org.apache.spark.util.SerializableConfiguration(conf)
+
+  /** Blocks until every event already posted to the (asynchronous,
+    * private[spark]) listener bus has been delivered, so a listener's
+    * counts include every action that returned before the call. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

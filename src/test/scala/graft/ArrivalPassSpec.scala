@@ -1127,6 +1127,74 @@ class ArrivalPassSpec extends AnyFunSuite {
     assert(sig.load().get.filter($"doc_id" === 101L).count() === 0L)
   }
 
+  test("forget_queue absent-store guard holds for a takedown file that " +
+      "lands AFTER the drain's unseen-file probe: on a vanish-only " +
+      "drain the stream's own listing still plans it, and its batch " +
+      "fails the stage instead of committing as a silent no-op") {
+    val base = java.nio.file.Files
+      .createTempDirectory("graft-arrival-latetakedown").toString
+    val forgetDir = s"$base/landing/forget"
+    val ckpt = s"$base/ckpt/forget_ckpt"
+    (1L to 2L).foreach { i =>
+      Seq(Tuple1(900L + i)).toDF("doc_id")
+        .coalesce(1).write.mode("append").parquet(forgetDir)
+    }
+    // drain the queue by hand to a deadline stop: one file commits, the
+    // other is planned and refused, then vanishes with no compaction
+    // record — so the next drain's unseen set is EMPTY (vanish-only)
+    val clock = new ManualClock(Instant.parse("2026-01-01T00:00:00Z"))
+    assert(graft.streaming.Streams.incrementalCheckById(spark, forgetDir,
+      spark.read.parquet(forgetDir).schema,
+      (b, _) => { clock.advance(60000L); b }, ckpt, s"$base/setup-out",
+      deadline = Some(Instant.parse("2026-01-01T00:00:30Z")),
+      clock = clock, maxFilesPerBatch = Some(1)))
+    val seen = graft.streaming.Streams.seenFiles(spark, ckpt)
+    val pending = graft.streaming.Streams.listDataFiles(spark, forgetDir)
+      .filterNot(seen.contains)
+    assert(pending.size === 1, pending.toString)
+    val fs = new org.apache.hadoop.fs.Path(base)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.delete(new org.apache.hadoop.fs.Path(pending.head), false))
+    val log = new CommandLog(spark, None)
+    val cfg = ArrivalConfig(landing = s"$base/landing", dbs = Map.empty,
+      checkpointRoot = s"$base/ckpt", sigStorePath = s"$base/sigs",
+      dedupOut = s"$base/pairs", annStorePath = s"$base/ann")
+    // the takedown lands after the probe, before the stream lists the
+    // queue; no documents were ever ingested, so no sig store exists
+    val late = new java.util.concurrent.atomic.AtomicReference[String]()
+    val r1 =
+      try {
+        graft.streaming.Streams.onPreDrainSnapshot = () =>
+          if (late.get == null) {
+            val before = graft.streaming.Streams
+              .listDataFiles(spark, forgetDir).toSet
+            Seq(Tuple1(101L)).toDF("doc_id")
+              .coalesce(1).write.mode("append").parquet(forgetDir)
+            late.set(graft.streaming.Streams.listDataFiles(spark, forgetDir)
+              .filterNot(before.contains).head)
+          }
+        ArrivalPass.run(spark, cfg, log, SystemClock)
+      } finally graft.streaming.Streams.onPreDrainSnapshot = () => ()
+    assert(late.get != null, "the seam never ran")
+    val f1 = r1.stages.find(_.stage == "forget_queue").get
+    assert(f1.status === "failed" &&
+      f1.detail.contains("does not exist") &&
+      f1.detail.contains("checkpoint NOT advanced"), f1.toString)
+    assert(graft.streaming.Streams.unseenFileList(spark, forgetDir, ckpt)
+      === Seq(late.get))
+    // documents land; dedup_ingest bootstraps the sig store and the
+    // same pass's forget_queue drains the preserved request
+    Seq((101L, "web", "the quick brown fox doc one"))
+      .toDF("doc_id", "source", "text")
+      .coalesce(1).write.parquet(s"$base/landing/documents")
+    val r2 = ArrivalPass.run(spark, cfg, log, SystemClock)
+    val f2 = r2.stages.find(_.stage == "forget_queue").get
+    assert(f2.status === "ran", f2.toString)
+    val sig = new graft.pipeline.IncrementalDedup.SigStore(
+      spark, s"$base/sigs")
+    assert(sig.load().get.filter($"doc_id" === 101L).count() === 0L)
+  }
+
   test("forget_queue flags an all-null-id file loudly (round-17 " +
       "advice): a misspelled id column beside valid files is consumed " +
       "but surfaces EMPTY_NOOP_FILES in the stage detail, never a " +

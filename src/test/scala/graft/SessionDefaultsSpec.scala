@@ -46,4 +46,15 @@ class SessionDefaultsSpec extends AnyFunSuite {
     }
     assert(hits.size === 1, hits.mkString(", "))
   }
+
+  test("the only mains under src/main are Main, Bench, Verify, Dev and " +
+      "pipeline.ScaleVerify") {
+    // a new tool is a Dev subcommand on Dev's one session, not a main
+    val mains = mainSources.collect {
+      case (p, src) if src.contains("def main(") =>
+        p.toString.stripPrefix("src/main/scala/").stripSuffix(".scala")
+    }.sorted
+    assert(mains === Seq("graft/Bench", "graft/Dev", "graft/Main",
+      "graft/Verify", "graft/pipeline/ScaleVerify"))
+  }
 }
