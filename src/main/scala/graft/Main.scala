@@ -59,25 +59,31 @@ import graft.state.StateStore
   */
 object Main {
 
+  /** One standalone ingest drain over `src`, its report printed through
+    * the stage formatter. Schema inference needs a landed file: with
+    * none, log a visible skip instead of dying in spark.read.parquet's
+    * "unable to infer schema". */
+  private def drainLanding(spark: SparkSession, src: String, what: String,
+      normal: String)(
+      run: org.apache.spark.sql.types.StructType =>
+        streaming.Streams.DrainReport): Unit =
+    if (streaming.Streams.listDataFiles(spark, src).nonEmpty)
+      println(run(spark.read.parquet(src).schema).detail(normal))
+    else println(s"no arrivals found under $src, skipping $what " +
+      "stream (nothing ingested this run)")
+
   /** Arrival-ANN mode (the sim14 tier from the product entry point):
     * stream newly landed vector files into the persisted incremental
-    * ANN index. Same recursive landing probe as the dedup mode: the
-    * first-run/no-arrivals case logs a visible skip instead of dying
-    * in schema inference. */
+    * ANN index. */
   private[graft] def annIngestRun(spark: SparkSession, src: String,
       annStorePath: String, checkpointRoot: String,
       deadline: Option[java.time.Instant] = None,
       maxFilesPerBatch: Option[Int] = None): Unit = {
-    if (hasLandedFiles(spark, src)) {
-      val schema = spark.read.parquet(src).schema
-      val r = streaming.Streams.incrementalAnnStream(spark, src, schema,
+    drainLanding(spark, src, "ANN", s"index=$annStorePath") { schema =>
+      streaming.Streams.incrementalAnnStream(spark, src, schema,
         annStorePath, checkpointRoot, deadline, SystemClock,
         maxFilesPerBatch)
-      if (r.stoppedAtDeadline)
-        println(s"drained=${r.drained} remaining≈${r.remainingFiles} " +
-          "files (budget; checkpoint resumes next run)")
-    } else println(s"no arrivals found under $src, skipping ANN " +
-      "stream (nothing ingested this run)")
+    }
     val store = new pipeline.IncrementalAnn.AnnIndexStore(spark,
       annStorePath)
     store.load() match {
@@ -88,59 +94,20 @@ object Main {
     }
   }
 
-  /** RECURSIVE non-hidden-data-file probe shared by the arrival modes —
-    * arrivals may land under partition subdirs (date=.../part.parquet)
-    * that a top-level listing misses; anything under a hidden (_/.)
-    * path component (stream metadata, staging dirs) is skipped. */
-  private[graft] def hasLandedFiles(spark: SparkSession,
-      src: String): Boolean = {
-    val raw = new org.apache.hadoop.fs.Path(src)
-    val srcFs = raw.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // QUALIFY the base before computing relative components: a relative
-    // or scheme-less src would otherwise fail the string stripPrefix
-    // and the hidden-check would scan ancestor directories OUTSIDE the
-    // landing zone — a workspace under a dot-dir would silently
-    // classify every arrival hidden (round-12 review finding)
-    val srcP = srcFs.makeQualified(raw)
-    srcFs.exists(srcP) && {
-      val basePath = srcP.toUri.getPath.stripSuffix("/") + "/"
-      val it = srcFs.listFiles(srcP, true)
-      var found = false
-      while (!found && it.hasNext) {
-        val st = it.next()
-        val rel = st.getPath.toUri.getPath.stripPrefix(basePath)
-        val hidden = rel.split("/").exists(c =>
-          c.startsWith("_") || c.startsWith("."))
-        found = st.isFile && st.getLen > 0 && !hidden
-      }
-      found
-    }
-  }
-
   /** Arrival-dedup mode (the dd16 tier from the product entry point):
     * stream newly landed document files through the persisted signature
-    * store; pairs land under batch_id partitions. Schema inference
-    * needs at least one landed file, probed RECURSIVELY — arrivals may
-    * land under partition subdirs (date=.../part.parquet) that a
-    * top-level listing misses — skipping anything under a hidden (_/.)
-    * path component (stream metadata, staging dirs); the intended
-    * first-run/no-arrivals case logs a visible skip instead of dying in
-    * spark.read.parquet's "unable to infer schema". */
+    * store; pairs land under batch_id partitions. */
   private[graft] def dedupIngestRun(spark: SparkSession, src: String,
       sigStorePath: String, checkpointRoot: String,
       dedupOut: String,
       deadline: Option[java.time.Instant] = None,
       maxFilesPerBatch: Option[Int] = None): Unit = {
-    if (hasLandedFiles(spark, src)) {
-      val schema = spark.read.parquet(src).schema
-      val r = streaming.Streams.incrementalDedupStream(spark, src,
-        schema, sigStorePath, checkpointRoot, dedupOut, deadline,
-        SystemClock, maxFilesPerBatch)
-      if (r.stoppedAtDeadline)
-        println(s"drained=${r.drained} remaining≈${r.remainingFiles} " +
-          "files (budget; checkpoint resumes next run)")
-    } else println(s"no arrivals found under $src, skipping dedup " +
-      "stream (nothing ingested this run)")
+    drainLanding(spark, src, "dedup",
+        s"store=$sigStorePath pairs under $dedupOut") { schema =>
+      streaming.Streams.incrementalDedupStream(spark, src, schema,
+        sigStorePath, checkpointRoot, dedupOut, deadline, SystemClock,
+        maxFilesPerBatch)
+    }
     val outP = new org.apache.hadoop.fs.Path(dedupOut)
     val fs = outP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(outP)) {

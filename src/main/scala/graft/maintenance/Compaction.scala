@@ -160,6 +160,16 @@ object Compaction {
     * bounded by merge history; a table rebase/teardown removes it. */
   private[graft] val RecordDirName = "_graft_compacted"
 
+  /** `v` as a quoted JSON string. Paths are operator data, not trusted
+    * JSON: a quote or backslash in a legal filename would otherwise
+    * corrupt the record (or audit row) it is written into. */
+  private[graft] def jstr(v: String): String = "\"" + v.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   /** Every path the durable compaction records (plus any in-flight
     * `.compact-tmp` manifests — a crash window leaves the group's
     * manifest there) declare superseded by a merge under `tableDir`,
@@ -317,15 +327,6 @@ object Compaction {
       // row-count forensics exercise. On success it is PROMOTED to the
       // durable record dir (see RecordDirName), not discarded.
       val manifest = new Path(tmp, s"manifest-$i.json")
-      // paths are operator data, not trusted JSON: escape them (a quote
-      // or backslash in a legal filename would otherwise corrupt the one
-      // artifact that exists for crash recovery)
-      def jstr(v: String): String = "\"" + v.flatMap {
-        case '"'  => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
       val mout = fs.create(manifest, true)
       try mout.write(
         (s"""{"merged": ${jstr(dest.toString)}, "supersedes": [""" +

@@ -122,30 +122,6 @@ object ArrivalPass {
   private final class AbsentStoreRoot(msg: String)
       extends RuntimeException(msg)
 
-  /** Stage detail for an ingest drain: the normal summary, or — when
-    * the drain stopped at the pass deadline — the drained/remaining
-    * accounting the operator needs to size tomorrow's backlog. */
-  private def drainDetail(r: graft.streaming.Streams.DrainReport,
-      normal: String): String = {
-    // unexplained vanishes (planned files gone with no compaction
-    // record — see Streams.vanishedUnexplained) ride the detail
-    // loudly; 0 is the healthy case and stays silent
-    val van = if (r.vanishedUnexplained == 0L) ""
-      else s" vanished_unexplained=${r.vanishedUnexplained} file(s) " +
-        "(planned files missing with no compaction record)"
-    // mid-drain vanishes COMMIT with their batch, so this detail line
-    // is their one surfacing (Streams.vanishedMidDrain, round-15
-    // verdict #2)
-    val mid = if (r.vanishedMidDrain == 0L) ""
-      else s" vanished_mid_drain=${r.vanishedMidDrain} file(s) " +
-        "(planned and committed this drain, never observed on disk, " +
-        "no compaction record — skipped unprocessed)"
-    if (r.stoppedAtDeadline)
-      s"drained=${r.drained} remaining≈${r.remainingFiles} files " +
-        s"(budget; checkpoint resumes next pass)$van$mid $normal"
-    else s"drained=${r.drained}$van$mid $normal"
-  }
-
   def run(spark: SparkSession, cfg: ArrivalConfig, log: CommandLog,
       clock: Clock): ArrivalReport = {
     // PASS-LEVEL lease on the checkpoint root: the reference's
@@ -290,12 +266,12 @@ object ArrivalPass {
     // since the stage's checkpoint (the quiet fast path — an
     // accumulated landing zone must not pay three stream spin-ups per
     // quiet night; same probe the integrity tier runs per table)
+    def landed(dir: String): Boolean =
+      graft.streaming.Streams.listDataFiles(spark, dir).nonEmpty
     val docsDir = s"${cfg.landing}/documents"
-    val docsLanded = graft.Main.hasLandedFiles(spark, docsDir)
+    val docsLanded = landed(docsDir)
     val vecsDir = s"${cfg.landing}/embeddings"
-    val vecsLanded = graft.Main.hasLandedFiles(spark, vecsDir)
-    def newUnder(src: String, ckpt: String): Boolean =
-      !graft.streaming.Streams.nothingNewLanded(spark, src, ckpt)
+    val vecsLanded = landed(vecsDir)
     // a pending UNEXPLAINED VANISH counts as work (the integrity
     // tier's quiet-gate bypass, mirrored — round-15 review): the
     // vanish candidates are by definition files NOT on disk, so a
@@ -305,8 +281,9 @@ object ArrivalPass {
     // file), surfaces vanished_unexplained in the drain detail once,
     // and the next pass is genuinely quiet.
     def pendingWork(src: String, ckpt: String): Boolean =
-      newUnder(src, ckpt) || graft.streaming.Streams
-        .vanishedUnexplained(spark, src, ckpt).nonEmpty
+      !graft.streaming.Streams.nothingNewLanded(spark, src, ckpt) ||
+        graft.streaming.Streams.vanishedUnexplained(spark, src, ckpt)
+          .nonEmpty
     val docsNew = docsLanded &&
       pendingWork(docsDir, s"${cfg.checkpointRoot}/dedup")
     val vecsNew = vecsLanded &&
@@ -317,7 +294,7 @@ object ArrivalPass {
     // <landing>/forget, drained by this pass like every ingest stage —
     // same probes, so a quiet queue costs a driver listing, zero jobs
     val forgetDir = s"${cfg.landing}/forget"
-    val forgetLanded = graft.Main.hasLandedFiles(spark, forgetDir)
+    val forgetLanded = landed(forgetDir)
     val forgetNew = forgetLanded &&
       pendingWork(forgetDir, s"${cfg.checkpointRoot}/forget_ckpt")
     def rootExists(p: String): Boolean = {
@@ -375,7 +352,7 @@ object ArrivalPass {
     }
 
     // an EMPTIED landing whose only pending data vanished (round-15
-    // second review): hasLandedFiles is false so the stream cannot run
+    // second review): no data file is landed, so the stream cannot run
     // (schema inference needs a file) and its planned batch can never
     // commit — surface the loss LOUDLY in the skip detail on every
     // pass until either new data lands (the stream then commits the
@@ -389,47 +366,39 @@ object ArrivalPass {
         "with no compaction record — pending data vanished before " +
         "ingest"
     }
-    stage("dedup_ingest", hasWork = docsNew, resumable = true) {
-      if (!docsLanded)
-        ("skipped_empty", s"no arrivals under $docsDir" +
-          emptiedVanish(docsDir, "dedup"))
-      else if (!docsNew)
-        ("skipped_empty", "no NEW document files since the last pass " +
-          s"under $docsDir (checkpoint covers the landing; stream " +
-          "spin-up skipped)")
-      else {
-        val schema = spark.read.parquet(docsDir).schema
-        // the pass deadline flows INTO the drain (IC:644's inner-loop
-        // clock check): a backlogged landing zone admitted late in the
-        // budget stops at a batch boundary instead of overrunning
-        // unboundedly; the checkpoint keeps the remainder
-        val r = graft.streaming.Streams.incrementalDedupStream(spark,
-          docsDir, schema, cfg.sigStorePath,
-          s"${cfg.checkpointRoot}/dedup", cfg.dedupOut,
-          deadline, clock, Some(cfg.maxFilesPerBatch),
-          heartbeat = () => passLease.renew())
-        ("ran", drainDetail(r,
-          s"store=${cfg.sigStorePath} pairs under ${cfg.dedupOut}"))
+    // one ingest stage: its two input-skip arms, else the drain of `dir`
+    // through `run` against `<checkpointRoot>/<ckpt>`
+    def ingestStage(name: String, dir: String, ckpt: String,
+        landedHere: Boolean, isNew: Boolean, what: String, normal: String)(
+        run: (org.apache.spark.sql.types.StructType, String) =>
+          graft.streaming.Streams.DrainReport): Unit =
+      stage(name, hasWork = isNew, resumable = true) {
+        if (!landedHere)
+          ("skipped_empty", s"no arrivals under $dir" +
+            emptiedVanish(dir, ckpt))
+        else if (!isNew)
+          ("skipped_empty", s"no NEW $what files since the last pass " +
+            s"under $dir (checkpoint covers the landing; stream " +
+            "spin-up skipped)")
+        else ("ran", run(spark.read.parquet(dir).schema,
+          s"${cfg.checkpointRoot}/$ckpt").detail(normal))
       }
+    // the pass deadline flows INTO the drain (IC:644's inner-loop clock
+    // check): a backlogged landing zone admitted late in the budget
+    // stops at a batch boundary instead of overrunning unboundedly; the
+    // checkpoint keeps the remainder
+    ingestStage("dedup_ingest", docsDir, "dedup", docsLanded, docsNew,
+        "document", s"store=${cfg.sigStorePath} pairs under " +
+          cfg.dedupOut) { (schema, ckpt) =>
+      graft.streaming.Streams.incrementalDedupStream(spark, docsDir,
+        schema, cfg.sigStorePath, ckpt, cfg.dedupOut, deadline, clock,
+        Some(cfg.maxFilesPerBatch), heartbeat = () => passLease.renew())
     }
-
-    stage("ann_ingest", hasWork = vecsNew, resumable = true) {
-      if (!vecsLanded)
-        ("skipped_empty", s"no arrivals under $vecsDir" +
-          emptiedVanish(vecsDir, "ann"))
-      else if (!vecsNew)
-        ("skipped_empty", "no NEW vector files since the last pass " +
-          s"under $vecsDir (checkpoint covers the landing; stream " +
-          "spin-up skipped)")
-      else {
-        val schema = spark.read.parquet(vecsDir).schema
-        val r = graft.streaming.Streams.incrementalAnnStream(spark,
-          vecsDir, schema, cfg.annStorePath,
-          s"${cfg.checkpointRoot}/ann",
-          deadline, clock, Some(cfg.maxFilesPerBatch),
-          heartbeat = () => passLease.renew())
-        ("ran", drainDetail(r, s"index=${cfg.annStorePath}"))
-      }
+    ingestStage("ann_ingest", vecsDir, "ann", vecsLanded, vecsNew,
+        "vector", s"index=${cfg.annStorePath}") { (schema, ckpt) =>
+      graft.streaming.Streams.incrementalAnnStream(spark, vecsDir, schema,
+        cfg.annStorePath, ckpt, deadline, clock,
+        Some(cfg.maxFilesPerBatch), heartbeat = () => passLease.renew())
     }
 
     // TAKEDOWN QUEUE drain (round-16 verdict #1): `--forget` gave the
@@ -490,16 +459,6 @@ object ArrivalPass {
           s"under $forgetDir (checkpoint covers the queue; stream " +
           "spin-up skipped)" + archivedDetail(archiveDrained()))
       else {
-        // a vanished PENDING takedown file is the worst vanish class —
-        // the request it carried was never propagated; surface it on
-        // every pass until remediated (same posture as the ingest
-        // stages, stated more loudly)
-        val vanished = graft.streaming.Streams.vanishedUnexplained(
-          spark, forgetDir, s"${cfg.checkpointRoot}/forget_ckpt").size
-        val vanDetail = if (vanished == 0) ""
-          else s" vanished_unexplained=$vanished takedown file(s) " +
-            "missing with no compaction record — the takedown they " +
-            "carried was NEVER propagated"
         // files may carry doc_id, vec_id, or both — merge the queue's
         // schemas so a mixed queue streams under one reader (a file
         // missing a column reads it as null; the per-batch counts
@@ -531,7 +490,6 @@ object ArrivalPass {
         else {
           import org.apache.spark.sql.functions.{col, count, lit, when,
             input_file_name}
-          val files = new java.util.concurrent.atomic.AtomicLong(0L)
           val sigRows = new java.util.concurrent.atomic.AtomicLong(0L)
           val pairRows = new java.util.concurrent.atomic.AtomicLong(0L)
           val annRows = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -544,8 +502,7 @@ object ArrivalPass {
           // tail retrain below is exempt from the deadline deferral
           // when the debt predates tonight
           val owedAtEntry = forgetHardPending
-          graft.streaming.Streams.onPreDrainSnapshot()
-          val stopped = try graft.streaming.Streams.incrementalCheckById(
+          val r = try graft.streaming.Streams.incrementalCheckById(
             spark, forgetDir, schema,
             (batch, id) => {
               val b = batch.toDF()
@@ -622,7 +579,6 @@ object ArrivalPass {
                   hardFiles.add(src)
                   "requested"
                 } else if (cnts.getLong(2) > 0L) "skipped" else ""
-              files.incrementAndGet()
               sigRows.addAndGet(out.sig.rowsForgotten)
               pairRows.addAndGet(out.pairs.rowsForgotten)
               annRows.addAndGet(out.ann.rowsForgotten)
@@ -649,11 +605,6 @@ object ArrivalPass {
               .takeWhile(_ != null)
               .collectFirst { case a: AbsentStoreRoot => a }.getOrElse(e)
           }
-          val cut = if (!stopped) ""
-            else s" stopped-at-deadline (remaining≈${
-              graft.streaming.Streams.unseenFiles(spark, forgetDir,
-                s"${cfg.checkpointRoot}/forget_ckpt")} files; " +
-              "checkpoint resumes next pass)"
           // DRAIN TAIL: the one hard retrain this drain owes. A
           // deadline-stopped drain defers it (marker persists — the
           // next pass finishes the queue and retrains at ITS tail, so
@@ -666,7 +617,7 @@ object ArrivalPass {
           // (round-18 advice).
           val hard =
             if (!forgetHardPending) ""
-            else if (stopped && !owedAtEntry)
+            else if (r.stoppedAtDeadline && !owedAtEntry)
               " hard_retrain_deferred (deadline; marker persists — " +
                 "the next pass retrains at its drain tail)"
             else {
@@ -678,7 +629,7 @@ object ArrivalPass {
               graft.pipeline.Forget.hardRetrain(spark, cfg.annStorePath,
                 log, clock, context = ctx)
               forgetHardFs.delete(forgetHardMarker, false)
-              if (stopped)
+              if (r.stoppedAtDeadline)
                 " hard_retrains=1 (deadline-exempt: retrain owed from " +
                   "a prior pass)"
               else " hard_retrains=1"
@@ -692,10 +643,13 @@ object ArrivalPass {
           // place for the next pass by construction (only seen files
           // move)
           val archived = archiveDrained()
-          ("ran", s"files=${files.get()} sig_rows=${sigRows.get()} " +
-            s"pairs=${pairRows.get()} ann_vectors=${annRows.get()}" +
-            s"$hard$noop$cut$vanDetail${archivedDetail(archived)} " +
-            s"(outcomes under ${cfg.checkpointRoot}/forget)")
+          // a vanished takedown file (either class) is the worst vanish:
+          // the request it carried was never propagated
+          ("ran", r.detail(s"files=${r.drained} " +
+            s"sig_rows=${sigRows.get()} pairs=${pairRows.get()} " +
+            s"ann_vectors=${annRows.get()}$hard$noop" +
+            s"${archivedDetail(archived)} " +
+            s"(outcomes under ${cfg.checkpointRoot}/forget)"))
         }
       }
     }
@@ -738,12 +692,8 @@ object ArrivalPass {
     }
 
     stage("oov_qc", hasWork = oovNew, resumable = true) {
-      val resident = cfg.dbs.toSeq.sortBy(_._1).map(_._2 + "/documents.parquet")
-        .find { p =>
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .exists(hp)
-        }
+      val resident = cfg.dbs.toSeq.sortBy(_._1)
+        .map(_._2 + "/documents.parquet").find(rootExists)
       if (!docsLanded)
         ("skipped_empty", s"no arrivals under $docsDir" +
           emptiedVanish(docsDir, "oov_ckpt"))
@@ -756,18 +706,6 @@ object ArrivalPass {
             s"pass (cumulative report under ${cfg.checkpointRoot}/oov; " +
             "stream spin-up skipped)")
         case Some(res) =>
-          // pre-drain vanish reconciliation, surfaced in THIS stage's
-          // detail (round-15 second review): the oov drain has no
-          // DrainReport, and a vanish pending only on the oov
-          // checkpoint (dedup already committed the file) would
-          // otherwise be consumed silently by the replay — the file
-          // was never QC'd and nothing said so
-          val oovVanished = graft.streaming.Streams.vanishedUnexplained(
-            spark, docsDir, s"${cfg.checkpointRoot}/oov_ckpt").size
-          val vanDetail = if (oovVanished == 0) ""
-            else s" vanished_unexplained=$oovVanished file(s) " +
-              "(planned files missing with no compaction record; " +
-              "never QC'd)"
           // the same checkpointed O(new files) discipline as the ingest
           // stages: only files arrived since the last pass are QC'd
           // (an accumulating landing zone must not be re-scored
@@ -784,7 +722,7 @@ object ArrivalPass {
           // deadline + heartbeat ride the drain like the ingest
           // stages: a backlogged landing admitted late QCs what fits
           // (checkpoint resumes), and the pass lease stays live
-          val stoppedAtDeadline =
+          val r =
             graft.streaming.Streams.incrementalCheckById(spark, docsDir,
               schema,
               (batch, id) => {
@@ -796,18 +734,17 @@ object ArrivalPass {
               deadline = deadline, clock = clock,
               maxFilesPerBatch = Some(cfg.maxFilesPerBatch),
               heartbeat = () => passLease.renew())
-          // vanDetail rides BOTH ran arms (round-15 advice): the
-          // zero-batch arm is exactly the vanish-only night — the
-          // pending planned batch replayed, skipped its missing file,
-          // and committed, so without the detail here the loss would
-          // be consumed with no report at all. Detail-only like the
-          // ingest stages' drain reports (the violations tally stays
-          // the integrity tier's: the SAME vanished file pends on the
-          // dedup, ann and oov checkpoints at once, and counting it
+          // the drain report rides BOTH ran arms (round-15 advice): a
+          // vanish pending only on the oov checkpoint (dedup already
+          // committed the file) is consumed by the replay, so without
+          // it the file would never be QC'd and nothing would say so.
+          // Detail-only like the ingest stages (the violations tally
+          // stays the integrity tier's: the SAME vanished file pends on
+          // the dedup, ann and oov checkpoints at once, and counting it
           // per checkpoint would triple-bill one loss).
           if (passBatches.isEmpty)
-            ("ran", "no new document files since the last pass " +
-              s"(cumulative report under $out)$vanDetail")
+            ("ran", r.detail("no new document files since the last " +
+              s"pass (cumulative report under $out)"))
           else {
             import scala.jdk.CollectionConverters._
             val ids = passBatches.asScala.toSeq
@@ -816,10 +753,9 @@ object ArrivalPass {
                 .isInCollection(ids))
             val flagged = rows.filter(org.apache.spark.sql.functions
               .col("flagged")).count()
-            val cut = if (!stoppedAtDeadline) ""
-              else " stopped-at-deadline (checkpoint resumes next pass)"
-            ("ran", s"batches=${ids.size} report_rows=${rows.count()} " +
-              s"flagged=$flagged report=$out resident=$res$cut$vanDetail")
+            ("ran", r.detail(s"batches=${ids.size} " +
+              s"report_rows=${rows.count()} flagged=$flagged " +
+              s"report=$out resident=$res"))
           }
       }
     }

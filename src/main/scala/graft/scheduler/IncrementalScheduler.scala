@@ -107,24 +107,27 @@ object IncrementalScheduler {
         val cmd = s"CHECKTABLE INCREMENTAL [$db].[${o.schema_name}]." +
           s"[${o.object_name}] WITH NO_INFOMSGS, DATA_PURITY"
         val ckpt = s"$checkpointRoot/$db/${o.object_name}/_checkpoint"
-        def skipRow(why: String): Unit = {
-          skipped += (obj -> why)
-          // error_number/error_message stay PAIRED-on-failure-only
-          // (the CommandExecutor invariant; Model.scala documents
-          // error_number=None as running/dry-run) — a budget skip is
-          // not a failure, so the reason rides extended_info where a
-          // log consumer classifying by `error_message IS NOT NULL`
-          // cannot miscount it as a failed check (round-13 review)
+        // error_number/error_message stay PAIRED-on-failure-only (the
+        // CommandExecutor invariant; Model.scala documents
+        // error_number=None as running/dry-run) — a budget skip or a
+        // vanish is not a failed check, so its reason rides
+        // extended_info where a log consumer classifying by
+        // `error_message IS NOT NULL` cannot miscount it (round-13
+        // review)
+        def auditRow(extendedInfo: String): Unit = {
+          val ts = java.sql.Timestamp.from(clock.observe())
           log.append(graft.model.CommandLogEntry(
             id = java.util.UUID.randomUUID().toString,
             database_name = db, schema_name = o.schema_name,
             object_name = o.object_name, object_type = o.object_type,
-            extended_info =
-              s"""{"status":"admission_skipped","reason":"$why"}""",
+            extended_info = extendedInfo,
             command = cmd, command_type = "DBCC_CHECKTABLE_INC",
-            start_time = java.sql.Timestamp.from(clock.observe()),
-            end_time = Some(java.sql.Timestamp.from(clock.observe())),
+            start_time = ts, end_time = Some(ts),
             error_number = None, error_message = None))
+        }
+        def skipRow(why: String): Unit = {
+          skipped += (obj -> why)
+          auditRow(s"""{"status":"admission_skipped","reason":"$why"}""")
         }
         // QUIET-TABLE fast path: when the table's checkpoint already
         // covers every landed file, the stream would plan and drain
@@ -147,34 +150,21 @@ object IncrementalScheduler {
         // probe because the vanish candidates are exactly files NOT on
         // disk: a table whose only pending work vanished would read
         // quiet and hide the loss. Cost on the quiet path: two driver
-        // listStatus calls (no Spark job) — the probe's own order.
+        // listStatus calls (no Spark job) — the probe's own order. The
+        // mid-drain class is counted the same way, from the drain report.
+        def reportVanished(vanished: Seq[String], reason: String): Unit =
+          if (vanished.nonEmpty) {
+            violations += vanished.size
+            auditRow(s"""{"status":"vanished_files",""" +
+              s""""count":${vanished.size},"examples":[""" +
+              vanished.take(3).map(graft.maintenance.Compaction.jstr)
+                .mkString(",") + s"""],"reason":"$reason"}""")
+          }
         val vanished = graft.streaming.Streams.vanishedUnexplained(
           spark, o.path, ckpt)
-        if (vanished.nonEmpty) {
-          violations += vanished.size
-          def jesc(s: String): String = s.flatMap {
-            case '"' => "\\\""
-            case '\\' => "\\\\"
-            case c if c < ' ' => f"\\u${c.toInt}%04x"
-            case c => c.toString
-          }
-          val ts = java.sql.Timestamp.from(clock.observe())
-          log.append(graft.model.CommandLogEntry(
-            id = java.util.UUID.randomUUID().toString,
-            database_name = db, schema_name = o.schema_name,
-            object_name = o.object_name, object_type = o.object_type,
-            extended_info =
-              s"""{"status":"vanished_files",""" +
-              s""""count":${vanished.size},"examples":[""" +
-              vanished.take(3).map(p => "\"" + jesc(p) + "\"")
-                .mkString(",") +
-              """],"reason":"planned-but-uncommitted files missing """ +
-              """from disk with no compaction record; data vanished """ +
-              """before validation"}""",
-            command = cmd, command_type = "DBCC_CHECKTABLE_INC",
-            start_time = ts, end_time = Some(ts),
-            error_number = None, error_message = None))
-        }
+        reportVanished(vanished, "planned-but-uncommitted files missing " +
+          "from disk with no compaction record; data vanished before " +
+          "validation")
         def runTable(): Unit = {
           val t0 = System.nanoTime()
           // The per-batch tally lives OUTSIDE the retried action and is
@@ -188,6 +178,9 @@ object IncrementalScheduler {
           // double-counting.
           val perBatch =
             new java.util.concurrent.ConcurrentHashMap[Long, Long]()
+          // set by the one attempt whose drain returns (a retry runs only
+          // after the body threw)
+          var vanishedMid = Seq.empty[String]
           val res = executor.run(db, o.schema_name, o.object_name,
             o.object_type, cmd, "DBCC_CHECKTABLE_INC") {
             val schema = spark.read.parquet(o.path).schema
@@ -199,19 +192,22 @@ object IncrementalScheduler {
             // the pass deadline ALSO bounds this table's own drain
             // (IC:644): a table admitted with little budget left
             // checks what fits and its checkpoint resumes next pass
-            Streams.incrementalCheckById(spark, o.path, schema,
-              (batch, id) => summarize(batch, id, perBatch),
+            vanishedMid = Streams.incrementalCheckById(spark, o.path,
+              schema, (batch, id) => summarize(batch, id, perBatch),
               ckpt,
               s"$checkpointRoot/$db/${o.object_name}/summaries",
               deadline = deadline, clock = clock,
               maxFilesPerBatch = maxFilesPerBatch,
-              heartbeat = heartbeat)
+              heartbeat = heartbeat).vanishedMidDrain
             import scala.jdk.CollectionConverters._
             perBatch.values().asScala.foldLeft(0L)(_ + _)
           }
           executed += cmd
           if (res.violations < 0L) errors += 1
           else violations += res.violations
+          reportVanished(vanishedMid, "planned files a batch committed " +
+            "this drain, never observed on disk, with no compaction " +
+            "record; data vanished before validation")
           // fold the run into the per-table history (IC:706 recurrence)
           // so the NEXT pass's IC:677 gate has an estimate for this
           // table

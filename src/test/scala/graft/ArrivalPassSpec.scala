@@ -1147,7 +1147,7 @@ class ArrivalPassSpec extends AnyFunSuite {
       spark.read.parquet(forgetDir).schema,
       (b, _) => { clock.advance(60000L); b }, ckpt, s"$base/setup-out",
       deadline = Some(Instant.parse("2026-01-01T00:00:30Z")),
-      clock = clock, maxFilesPerBatch = Some(1)))
+      clock = clock, maxFilesPerBatch = Some(1)).stoppedAtDeadline)
     val seen = graft.streaming.Streams.seenFiles(spark, ckpt)
     val pending = graft.streaming.Streams.listDataFiles(spark, forgetDir)
       .filterNot(seen.contains)
@@ -1193,6 +1193,75 @@ class ArrivalPassSpec extends AnyFunSuite {
     val sig = new graft.pipeline.IncrementalDedup.SigStore(
       spark, s"$base/sigs")
     assert(sig.load().get.filter($"doc_id" === 101L).count() === 0L)
+  }
+
+  test("forget_queue reports a takedown file that vanishes mid-drain: " +
+      "it lands after the drain's pre-drain snapshot, is planned, and " +
+      "is deleted before its batch processes — the batch commits, so " +
+      "the detail's vanished_mid_drain is the request's one surfacing") {
+    val base = java.nio.file.Files
+      .createTempDirectory("graft-arrival-forgetmid").toString
+    val forgetDir = s"$base/landing/forget"
+    val fs = new org.apache.hadoop.fs.Path(base)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val log = new CommandLog(spark, None)
+    val cfg = ArrivalConfig(landing = s"$base/landing", dbs = Map.empty,
+      timeLimitSeconds = Some(3600L),
+      checkpointRoot = s"$base/ckpt", sigStorePath = s"$base/sigs",
+      dedupOut = s"$base/pairs", annStorePath = s"$base/ann")
+    // pass 1 bootstraps the signature store
+    Seq((101L, "web", "the quick brown fox doc one"),
+        (102L, "web", "a lazy dog sleeps in the sun"))
+      .toDF("doc_id", "source", "text")
+      .coalesce(1).write.parquet(s"$base/landing/documents")
+    ArrivalPass.run(spark, cfg, log,
+      new ManualClock(Instant.parse("2026-01-01T00:00:00Z")))
+    // pass 2: one takedown is queued; a second lands in the
+    // snapshot→planning window, future-dated so it forms the LAST
+    // one-file batch, and is deleted at the first per-batch clock read
+    // (admitBatch observes the clock because a deadline is set)
+    Seq(Tuple1(101L)).toDF("doc_id")
+      .coalesce(1).write.parquet(forgetDir)
+    val victim = new java.util.concurrent.atomic.AtomicReference[String]()
+    val landed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val manual = new ManualClock(Instant.parse("2026-01-02T00:00:00Z"))
+    val clock = new graft.model.Clock {
+      def now(): Instant = manual.now()
+      override def observe(): Instant = {
+        val f = victim.getAndSet(null)
+        if (f != null)
+          assert(fs.delete(new org.apache.hadoop.fs.Path(f), false))
+        manual.observe()
+      }
+      override def elapsedMs(startNanos: Long): Long =
+        manual.elapsedMs(startNanos)
+    }
+    val r2 =
+      try {
+        graft.streaming.Streams.onPreDrainSnapshot = () =>
+          if (landed.compareAndSet(false, true)) {
+            val before = graft.streaming.Streams
+              .listDataFiles(spark, forgetDir).toSet
+            Seq(Tuple1(102L)).toDF("doc_id")
+              .coalesce(1).write.mode("append").parquet(forgetDir)
+            val f = graft.streaming.Streams.listDataFiles(spark, forgetDir)
+              .filterNot(before.contains).head
+            fs.setTimes(new org.apache.hadoop.fs.Path(f),
+              System.currentTimeMillis() + 3600000L, -1L)
+            victim.set(f)
+          }
+        ArrivalPass.run(spark, cfg, log, clock)
+      } finally graft.streaming.Streams.onPreDrainSnapshot = () => ()
+    assert(landed.get && victim.get == null, "the victim was never deleted")
+    val f2 = r2.stages.find(_.stage == "forget_queue").get
+    assert(f2.status === "ran", f2.toString)
+    assert(f2.detail.contains("vanished_mid_drain=1"), f2.detail)
+    assert(!f2.detail.contains("vanished_unexplained"), f2.detail)
+    // the queued request drained; the vanished one never did
+    val sig = new graft.pipeline.IncrementalDedup.SigStore(
+      spark, s"$base/sigs").load().get
+    assert(sig.filter($"doc_id" === 101L).count() === 0L)
+    assert(sig.filter($"doc_id" === 102L).count() > 0L)
   }
 
   test("forget_queue flags an all-null-id file loudly (round-17 " +

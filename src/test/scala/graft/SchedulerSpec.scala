@@ -307,7 +307,7 @@ class SchedulerSpec extends AnyFunSuite {
         (b, _) => { clock.advance(6000L); b.agg(count(lit(1)).as("n")) },
         s"$cp/db/$t/_checkpoint", s"$cp/db/$t/summaries",
         deadline = Some(Instant.parse("2026-01-01T00:00:10Z")),
-        clock = clock, maxFilesPerBatch = Some(1))
+        clock = clock, maxFilesPerBatch = Some(1)).stoppedAtDeadline
       assert(stopped, s"$t's drain must stop at the deadline")
     }
     def pendingFile(t: String): String = {
@@ -363,6 +363,70 @@ class SchedulerSpec extends AnyFunSuite {
     val log2 = new CommandLog(spark, None)
     val r2 = IncrementalScheduler.run(spark, inv, cp, log2,
       new ManualClock(Instant.parse("2026-01-03T00:00:00Z")))
+    assert(r2.violations === 0L, r2.toString)
+    assert(!log2.entries.exists(
+      _.extended_info.contains("vanished_files")))
+    assert(r2.quiet.contains("db.main.nation"), r2.toString)
+  }
+
+  test("a file that lands after the integrity drain's pre-drain " +
+      "snapshot and vanishes before its batch processes commits with " +
+      "that batch — the drain's mid-drain reconciliation makes it a " +
+      "VIOLATION with a vanished_files audit row, reported once") {
+    import graft.scheduler.IncrementalScheduler
+    import graft.streaming.Streams
+    val base = java.nio.file.Files.createTempDirectory("graft-midvanish")
+      .toString
+    val dbDir = s"$base/db"
+    val table = s"$dbDir/nation.parquet"
+    val fs = new org.apache.hadoop.fs.Path(base)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Tables(spark, sfDir, "nation").limit(1)
+      .coalesce(1).write.parquet(table)
+    val inv = new DirInventory(spark, Map("db" -> dbDir))
+    // the second file lands in the snapshot→planning window,
+    // future-dated so it forms the LAST one-file micro-batch; the
+    // heartbeat's first per-batch call (the per-table call comes
+    // before the seam) deletes it between its planning and processing
+    val victim = new java.util.concurrent.atomic.AtomicReference[String]()
+    val deleted = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val log = new CommandLog(spark, None)
+    val r =
+      try {
+        Streams.onPreDrainSnapshot = () =>
+          if (victim.get == null) {
+            val before = Streams.listDataFiles(spark, table).toSet
+            Tables(spark, sfDir, "nation").limit(1)
+              .coalesce(1).write.mode("append").parquet(table)
+            val f = Streams.listDataFiles(spark, table)
+              .filterNot(before.contains).head
+            fs.setTimes(new org.apache.hadoop.fs.Path(f),
+              System.currentTimeMillis() + 3600000L, -1L)
+            victim.set(f)
+          }
+        IncrementalScheduler.run(spark, inv, s"$base/cp", log,
+          new ManualClock(Instant.parse("2026-01-01T00:00:00Z")),
+          heartbeat = () =>
+            if (victim.get != null && deleted.compareAndSet(false, true))
+              assert(fs.delete(new org.apache.hadoop.fs.Path(victim.get),
+                false)),
+          maxFilesPerBatch = Some(1))
+      } finally Streams.onPreDrainSnapshot = () => ()
+    assert(r.violations === 1L, r.toString)
+    assert(deleted.get, "the victim was never deleted")
+    assert(r.errors === 0L)
+    val vrows = log.entries.filter(
+      _.extended_info.contains("vanished_files"))
+    assert(vrows.size === 1, vrows.map(_.extended_info).mkString("\n"))
+    assert(vrows.head.object_name === "nation")
+    assert(vrows.head.extended_info.contains("\"count\":1") &&
+      vrows.head.extended_info.contains(victim.get),
+      vrows.head.extended_info)
+
+    // the victim's batch committed: the next pass is quiet and clean
+    val log2 = new CommandLog(spark, None)
+    val r2 = IncrementalScheduler.run(spark, inv, s"$base/cp", log2,
+      new ManualClock(Instant.parse("2026-01-02T00:00:00Z")))
     assert(r2.violations === 0L, r2.toString)
     assert(!log2.entries.exists(
       _.extended_info.contains("vanished_files")))

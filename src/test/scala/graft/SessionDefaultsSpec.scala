@@ -47,6 +47,24 @@ class SessionDefaultsSpec extends AnyFunSuite {
     assert(hits.size === 1, hits.mkString(", "))
   }
 
+  test("src/main has one arrival drain: Trigger.AvailableNow and the " +
+      "\"sources/0\" offset-log path each sit on exactly one code line") {
+    // a second drain or offset-log parser would drift from the first
+    // (the mid-drain vanish check once ran in only two of three drains)
+    def codeLines(needle: String): Seq[String] = mainSources.flatMap {
+      case (p, src) => src.linesIterator.zipWithIndex.collect {
+        case (l, i) if l.contains(needle) && {
+            val t = l.trim
+            !t.startsWith("//") && !t.startsWith("*") && !t.startsWith("/*")
+          } => s"$p:${i + 1}"
+      }
+    }
+    val drains = codeLines("Trigger.AvailableNow")
+    assert(drains.size === 1, drains.mkString(", "))
+    val parsers = codeLines("\"sources/0\"")
+    assert(parsers.size === 1, parsers.mkString(", "))
+  }
+
   test("the only mains under src/main are Main, Bench, Verify, Dev and " +
       "pipeline.ScaleVerify") {
     // a new tool is a Dev subcommand on Dev's one session, not a main

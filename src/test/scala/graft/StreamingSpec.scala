@@ -646,6 +646,18 @@ class StreamingSpec extends AnyFunSuite {
     val flagged = graft.streaming.Streams.vanishedUnexplained(
       spark, src, ckpt)
     assert(flagged === Seq(s"$src/lost.parquet"), flagged.toString)
+    // the same offset-log reader's other views: the committed set is
+    // batch 0's file only (the 2.compact past the commit adds nothing),
+    // and the mid-drain window (-1, 0] flags batch 0's missing file
+    // unless the pre-drain snapshot observed it
+    assert(graft.streaming.Streams.seenFiles(spark, ckpt) ===
+      Set(s"$src/archived.parquet"))
+    assert(graft.streaming.Streams.vanishedMidDrain(spark, src, ckpt,
+      preDisk = Set.empty, preCommitted = -1L) ===
+      Seq(s"$src/archived.parquet"))
+    assert(graft.streaming.Streams.vanishedMidDrain(spark, src, ckpt,
+      preDisk = Set(s"$src/archived.parquet"), preCommitted = -1L)
+      .isEmpty)
     // supersededPaths round-trips escaped exotic paths (quotes,
     // backslashes, \uXXXX control chars — the jstr escape the writer
     // applies); built by concatenation so the Scala lexer cannot
