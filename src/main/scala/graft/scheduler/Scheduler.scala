@@ -27,9 +27,10 @@ import graft.state.StateStore
   *    plus a 1-minute grace (ref IC:677-680); a table already checked today
   *    is not re-checked (ref IC:664-665).
   *
-  * Each check is one Spark action; the cluster is the parallelism inside
-  * the action (the reference's MAXDOP analog, SURVEY §3.1). The driver loop
-  * only schedules — it never iterates over data rows.
+  * CHECKALLOC and CHECKCATALOG run no Spark job (driver-side listings and
+  * footers); each CHECKTABLE is one Spark job, and the cluster is the
+  * parallelism inside it (the reference's MAXDOP analog, SURVEY §3.1). The
+  * driver loop only schedules — it never iterates over data rows.
   */
 final case class SchedulerReport(
     executedCommands: Seq[String],

@@ -1,6 +1,12 @@
 package org.apache.spark.sql
 
+import org.apache.hadoop.fs.FileStatus
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Bridge into Spark's `private[sql]` Column ⇄ Expression converters so
   * graft can attach custom Catalyst expressions (e.g.
@@ -32,4 +38,21 @@ object GraftSqlBridge {
     * counts include every action that returned before the call. */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** The schema `spark.read.parquet` infers from one parquet file, read
+    * on the driver from its footer, with no Spark job. Spark's own
+    * (non-merging) inference reads the footer of one file and converts
+    * it the same way: the Spark schema stored in the footer if there is
+    * one, else the parquet schema under the session conf (`nanosAsLong`,
+    * `inferTimestampNTZ`, ...), made nullable as every file source is.
+    * Throws if the file cannot be opened or its footer does not parse. */
+  def parquetFooterSchema(spark: SparkSession, file: FileStatus)
+      : StructType = {
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromStatus(file, spark.sessionState.newHadoopConf()))
+    val footer =
+      try new Footer(file.getPath, reader.getFooter) finally reader.close()
+    ParquetFileFormat.readSchemaFromFooter(footer,
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf)).asNullable
+  }
 }

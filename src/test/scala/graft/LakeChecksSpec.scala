@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.catalog.DirInventory
+import graft.catalog.{DirInventory, InventoryRow, TableManifest}
 import graft.checks.LakeChecks
 import graft.tables.Tables
 
@@ -124,5 +124,96 @@ class LakeChecksSpec extends AnyFunSuite {
       tdir.getPath)
     val (_, action) = LakeChecks.checkAlloc(spark, "testdb", Seq(t), 0)
     assert(action() >= 1L)
+  }
+
+  test("CHECKFILEGROUP reads a directly written clean slice as clean, " +
+      "and still flags a zero-byte data file in it") {
+    val out = java.nio.file.Files
+      .createTempDirectory("graft-fg-direct").toString + "/t"
+    // a direct write leaves its zero-byte `_SUCCESS` marker in the slice
+    spark.read.parquet(s"$sfDir/nation.parquet").write.parquet(s"$out/k=1")
+    assert(new java.io.File(s"$out/k=1/_SUCCESS").length() === 0L)
+    val t = InventoryRow("testdb", "main", "t", "U", 1L, out)
+    val (_, clean) =
+      LakeChecks.checkFileGroup(spark, t, "k=1", dataPurity = true, 0)
+    assert(clean() === 0L)
+    java.nio.file.Files.createFile(
+      java.nio.file.Paths.get(s"$out/k=1/part-99999.parquet"))
+    val (_, broken) =
+      LakeChecks.checkFileGroup(spark, t, "k=1", dataPurity = true, 0)
+    assert(broken() >= 1L)
+  }
+
+  test("CHECKALLOC and CHECKCATALOG run no Spark job, and a default-tier " +
+      "CHECKTABLE runs exactly one") {
+    val tables = inv.objects("testdb")
+    val manifests = tables.map(t =>
+      (t.database_name, t.schema_name, t.object_name) ->
+        TableManifest.capture(spark, t)).toMap
+    val gauge = new Dev.Gauge(spark.sparkContext)
+    try {
+      val alloc = gauge.measure("CHECKALLOC")(LakeChecks.checkAlloc(
+        spark, "testdb", tables, 0, manifests)._2())
+      assert((alloc, gauge.jobs.get()) === ((0L, 0L)))
+      val cat = gauge.measure("CHECKCATALOG")(LakeChecks.checkCatalog(
+        spark, "testdb", tables, manifests)._2())
+      assert((cat, gauge.jobs.get()) === ((0L, 0L)))
+      tables.foreach { t =>
+        val (_, check) = LakeChecks.checkTable(spark, t,
+          physicalOnly = false, dataPurity = false, maxDop = 0,
+          manifests.get((t.database_name, t.schema_name, t.object_name)))
+        val v = gauge.measure(s"CHECKTABLE ${t.object_name}")(check())
+        assert((v, gauge.jobs.get()) === ((0L, 1L)), t.object_name)
+      }
+    } finally gauge.close()
+  }
+
+  test("the driver-side footer schema equals Spark's inferred schema " +
+      "for every fixture table") {
+    Tables.all.foreach { name =>
+      val m = TableManifest.capture(spark,
+        InventoryRow("testdb", "main", name, "U", 0L,
+          s"$sfDir/$name.parquet"))
+      assert(m.files.nonEmpty, name)
+      assert(LakeChecks.pinnedSchema(spark, m) ===
+        spark.read.parquet(m.paths: _*).schema, name)
+    }
+  }
+
+  test("a vanished pinned file is a violation even when it is not the " +
+      "first one") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-vanish")
+      .toString + "/two.parquet"
+    spark.read.parquet(s"$sfDir/nation.parquet").repartition(2)
+      .write.parquet(dir)
+    val t = InventoryRow("testdb", "main", "two", "U", 1L, dir)
+    val m = TableManifest.capture(spark, t)
+    assert(m.files.size === 2)
+    new java.io.File(new java.net.URI(m.files(1).path)).delete()
+    val pinned = Map(("testdb", "main", "two") -> m)
+    val (_, alloc) = LakeChecks.checkAlloc(spark, "testdb", Seq(t), 0, pinned)
+    assert(alloc() >= 1L)
+    val (_, cat) = LakeChecks.checkCatalog(spark, "testdb", Seq(t), pinned)
+    assert(cat() === 1L)
+  }
+
+  test("CHECKTABLE counts each failed check once per row, and a null " +
+      "fails none") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-ct")
+      .toString + "/t.parquet"
+    Seq[(Option[Double], Option[String])](
+      (Some(Double.NaN), Some("2020-01-01 00:00:00")),
+      (Some(Double.PositiveInfinity), Some("1800-01-01 00:00:00")),
+      (None, None),
+      (Some(1.0), Some("2020-01-01 00:00:00")))
+      .toDF("x", "ts").withColumn("ts", col("ts").cast("timestamp"))
+      .write.parquet(dir)
+    val t = InventoryRow("testdb", "main", "t", "U", 1L, dir)
+    def run(physicalOnly: Boolean, dataPurity: Boolean): Long =
+      LakeChecks.checkTable(spark, t, physicalOnly, dataPurity, 0)._2()
+    assert(run(physicalOnly = false, dataPurity = false) === 2L)
+    assert(run(physicalOnly = false, dataPurity = true) === 3L)
+    assert(run(physicalOnly = true, dataPurity = false) === 0L)
   }
 }
