@@ -1,7 +1,7 @@
 package graft.checks
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Encoders, GraftSqlBridge,
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge,
   SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -14,15 +14,19 @@ import graft.functions.Strings.quoteName
   * reproduces the reference's command-text format so dry-run goldens are
   * meaningful (ref IntegrityChecks_VLDB.sql:547-555, 683-687), and the
   * action returns a violation count. The coarse checks (CHECKALLOC,
-  * CHECKCATALOG) run no Spark job, and CHECKTABLE runs one.
+  * CHECKCATALOG) run no Spark job, and a pinned CHECKTABLE runs one Spark
+  * action, its scan's aggregate. (Adaptive execution submits that
+  * aggregate's shuffle map stage as a job of its own, and Spark lists more
+  * files than `spark.sql.sources.parallelPartitionDiscovery.threshold` in
+  * a job too.)
   *
   * Scale notes: CHECKALLOC/CHECKCATALOG touch only filesystem metadata and
   * parquet footers, read on the driver (no data scan). CHECKTABLE is
-  * exactly one full scan whose tasks each sum their rows' violations for
-  * the driver to add ([[sumRows]]: no shuffle) — the minimal plan for
-  * content validation — and its PHYSICAL_ONLY tier decodes no column.
-  * Every schema comes from [[pinnedSchema]], never from Spark's
-  * inference, which would start a job of its own to read one footer.
+  * exactly one full scan with map-side partial aggregation — the minimal
+  * plan for content validation — and its PHYSICAL_ONLY tier reads footers
+  * only. Every pinned schema comes from [[pinnedSchema]], never from
+  * Spark's inference, which would start a job of its own to read one
+  * footer.
   */
 object LakeChecks {
 
@@ -49,11 +53,10 @@ object LakeChecks {
         if (m.files.isEmpty) 1L
         else {
           val zero = m.files.count(_.length == 0L).toLong
-          // footer parse, no data scan; every PINNED file must still
-          // exist, so a pinned-then-deleted file surfaces here instead of
-          // silently dropping out
+          // footer parse, no data scan; a pinned-then-deleted file reads
+          // as bad too (see checkedSchema)
           val footerBad =
-            try { pinnedSchema(spark, m); 0L }
+            try { checkedSchema(spark, m); 0L }
             catch { case _: Throwable => 1L }
           zero + footerBad
         }
@@ -72,7 +75,7 @@ object LakeChecks {
     (cmd, () => {
       tables.map { t =>
         try {
-          val schema = pinnedSchema(spark, manifestFor(spark, t, manifests))
+          val schema = checkedSchema(spark, manifestFor(spark, t, manifests))
           val dupCols =
             schema.fieldNames.map(_.toLowerCase).groupBy(identity)
               .count(_._2.length > 1).toLong
@@ -104,11 +107,12 @@ object LakeChecks {
     (cmd, () => {
       // pinned manifest (ref IC:519-571): the scan covers exactly the
       // run's snapshot of the table — phase 2 profiles the same rows
-      // phase 1 allocated, even if a writer appended files in between;
-      // an unpinned direct call captures one, as CHECKALLOC does
-      val df = readPinned(spark,
-        manifest.getOrElse(TableManifest.capture(spark, t)))
-      if (physicalOnly) { sumRows(df, lit(1L)); 0L } // row count, no decode
+      // phase 1 allocated, even if a writer appended files in between
+      val df = manifest match {
+        case Some(m) => readPinned(spark, m)
+        case None => readTable(spark, t.path)
+      }
+      if (physicalOnly) { df.count(); 0L } // footer-driven count, no decode
       else violationCount(df, dataPurity)
     })
   }
@@ -171,58 +175,72 @@ object LakeChecks {
     })
   }
 
-  /** One-pass violation count over a DataFrame of any schema: each row
-    * scores the checks it fails. */
-  private def violationCount(df: DataFrame, dataPurity: Boolean): Long = {
-    val failed: Seq[Column] = df.schema.fields.toSeq.flatMap { f =>
+  /** One-pass violation aggregate over a DataFrame of any schema. */
+  private[checks] def violationCount(df: DataFrame, dataPurity: Boolean): Long = {
+    val checks: Seq[Column] = df.schema.fields.toSeq.flatMap { f =>
       val c = col(quoted(f.name))
       f.dataType match {
         case DoubleType | FloatType =>
-          Seq(isnan(c) || c === Double.PositiveInfinity ||
-            c === Double.NegativeInfinity)
+          Seq(count(when(isnan(c) || c === Double.PositiveInfinity ||
+            c === Double.NegativeInfinity, 1)))
         case TimestampType if dataPurity =>
-          Seq(c < lit("1900-01-01 00:00:00").cast("timestamp") ||
-            c > lit("2100-01-01 00:00:00").cast("timestamp"))
+          Seq(count(when(
+            c < lit("1900-01-01 00:00:00").cast("timestamp") ||
+              c > lit("2100-01-01 00:00:00").cast("timestamp"), 1)))
         case StringType if dataPurity =>
           // impossible lengths flag decode corruption
-          Seq(length(c) < 0)
+          Seq(count(when(length(c) < 0, 1)))
         case _ => Seq.empty
       }
     }
-    // a null test fails nothing, as `count(when(test, 1))` would have it
-    sumRows(df, failed.map(when(_, 1L).otherwise(0L)).foldLeft(lit(0L))(_ + _))
+    if (checks.isEmpty) { df.count(); 0L }
+    else {
+      val row = df.agg(checks.head, checks.tail: _*).head()
+      (0 until row.length).map(i => row.getLong(i)).sum
+    }
   }
 
-  /** The sum of a per-row LONG over `df`, in exactly one Spark job: each
-    * scan task folds its rows and the driver adds the task results. The
-    * equivalent `df.agg` shuffles its partial sums to one reducer, which
-    * adaptive execution submits as a second job. */
-  private def sumRows(df: DataFrame, perRow: Column): Long =
-    df.select(perRow).as(Encoders.scalaLong).rdd.fold(0L)(_ + _)
-
   /** The schema `spark.read.parquet(m.paths: _*)` would infer, read on
-    * the driver with no Spark job. Like Spark's path check, it throws
-    * when any pinned file is gone (one status call per file); like
-    * Spark's non-merging inference, it decodes the first file's footer.
-    * Lake tables may carry TIMESTAMP(NANOS), which Spark refuses without
-    * the legacy mapping — a legal table must not surface as a violation.
-    * An empty manifest throws; callers guard on `m.files.isEmpty` first
-    * where that is a violation. */
+    * the driver with no Spark job: like Spark's non-merging inference, it
+    * decodes the first pinned file's footer. Lake tables may carry
+    * TIMESTAMP(NANOS), which Spark refuses without the legacy mapping — a
+    * legal table must not surface as a violation. An empty manifest
+    * throws; callers guard on `m.files.isEmpty` first where that is a
+    * violation. */
   private[graft] def pinnedSchema(spark: SparkSession, m: TableManifest)
       : StructType = {
     require(m.files.nonEmpty, "empty manifest: no schema to read")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    GraftSqlBridge.parquetFooterSchema(spark, new Path(m.paths.head))
+  }
+
+  /** [[pinnedSchema]] for the coarse checks, which have no read of their
+    * own to check the file set: every PINNED file must still exist, so a
+    * pinned-then-deleted file throws here instead of silently dropping out
+    * (one status call per file after the first, which the footer read
+    * opens). */
+  private def checkedSchema(spark: SparkSession, m: TableManifest)
+      : StructType = {
+    val schema = pinnedSchema(spark, m)
     val conf = spark.sparkContext.hadoopConfiguration
-    val statuses = m.paths.map { f =>
+    m.paths.tail.foreach { f =>
       val p = new Path(f)
       p.getFileSystem(conf).getFileStatus(p)
     }
+    schema
+  }
+
+  /** The unpinned read: the table directory as it is now, partitions
+    * included. Nanosecond timestamps as in [[pinnedSchema]]. */
+  private def readTable(spark: SparkSession, path: String) = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    GraftSqlBridge.parquetFooterSchema(spark, statuses.head)
+    spark.read.parquet(path)
   }
 
   /** Read EXACTLY a pinned manifest's files (explicit file list — Spark
     * never re-lists the directory, so the run's snapshot governs), under
-    * the footer schema, so the scan's own action is its only job. */
+    * the footer schema, so inference starts no job. Spark's path check
+    * throws if any pinned file is gone. */
   private def readPinned(spark: SparkSession, m: TableManifest) =
     spark.read.schema(pinnedSchema(spark, m)).parquet(m.paths: _*)
 

@@ -28,7 +28,7 @@ import graft.state.StateStore
   *    is not re-checked (ref IC:664-665).
   *
   * CHECKALLOC and CHECKCATALOG run no Spark job (driver-side listings and
-  * footers); each CHECKTABLE is one Spark job, and the cluster is the
+  * footers); each CHECKTABLE is one Spark action, and the cluster is the
   * parallelism inside it (the reference's MAXDOP analog, SURVEY §3.1). The
   * driver loop only schedules — it never iterates over data rows.
   */

@@ -1,6 +1,6 @@
 package org.apache.spark.sql
 
-import org.apache.hadoop.fs.FileStatus
+import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -45,13 +45,12 @@ object GraftSqlBridge {
     * it the same way: the Spark schema stored in the footer if there is
     * one, else the parquet schema under the session conf (`nanosAsLong`,
     * `inferTimestampNTZ`, ...), made nullable as every file source is.
-    * Throws if the file cannot be opened or its footer does not parse. */
-  def parquetFooterSchema(spark: SparkSession, file: FileStatus)
-      : StructType = {
+    * Throws if the file is gone, cannot be opened or its footer does not
+    * parse. */
+  def parquetFooterSchema(spark: SparkSession, file: Path): StructType = {
     val reader = ParquetFileReader.open(
-      HadoopInputFile.fromStatus(file, spark.sessionState.newHadoopConf()))
-    val footer =
-      try new Footer(file.getPath, reader.getFooter) finally reader.close()
+      HadoopInputFile.fromPath(file, spark.sessionState.newHadoopConf()))
+    val footer = try new Footer(file, reader.getFooter) finally reader.close()
     ParquetFileFormat.readSchemaFromFooter(footer,
       new ParquetToSparkSchemaConverter(spark.sessionState.conf)).asNullable
   }
