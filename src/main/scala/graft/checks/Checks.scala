@@ -111,9 +111,8 @@ object Checks {
       .mapPartitions { it =>
         val conf = bconf.value.value
         it.map { case (t, path) =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(new org.apache.hadoop.fs.Path(path), conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+          val r = org.apache.spark.sql.GraftSqlBridge.openParquet(
+            conf, new org.apache.hadoop.fs.Path(path))
           try (t, r.getRecordCount) finally r.close()
         }
       }

@@ -6,7 +6,8 @@ import java.util.UUID
 import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
 
 import graft.model.{Clock, CommandLogEntry}
 
@@ -22,12 +23,14 @@ final class CommandLog(spark: SparkSession, path: Option[String]) {
   def entries: Seq[CommandLogEntry] = synchronized { buf.toSeq }
 
   /** Append-flush to parquet (ref CommandLog INSERT/UPDATE collapsed into
-    * start+completion rows, SURVEY §2.1 S11). */
+    * start+completion rows, SURVEY §2.1 S11): the buffer is written on the
+    * driver as one more file in the log directory, with no Spark job, and
+    * reads back through `spark.read.parquet` like a Spark append
+    * (`GraftSqlBridge.writeParquetFile`). */
   def flush(): Unit = path.foreach { p =>
     import spark.implicits._
     val rows = entries
-    if (rows.nonEmpty)
-      rows.toDS().coalesce(1).write.mode(SaveMode.Append).parquet(p)
+    if (rows.nonEmpty) GraftSqlBridge.writeParquetFile(spark, new Path(p), rows)
   }
 }
 

@@ -4,7 +4,7 @@ import java.sql.{Date, Timestamp}
 import java.time.{Instant, LocalDate, ZoneOffset}
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
 
 import graft.catalog.InventoryRow
 import graft.model.CheckObject
@@ -18,6 +18,11 @@ import graft.model.CheckObject
   * a parquet dataset rewritten atomically (write-temp-and-swap,
   * SURVEY.md §7.4 hard-problem #3); the MERGE itself is pure Scala over the
   * loaded rows, with identical semantics to the reference's 3 clauses.
+  * Both load and save run on the driver with no Spark job: the rows are
+  * decoded and encoded by Spark's own parquet reader and writer
+  * (`GraftSqlBridge.readParquetRows`/`writeParquetFile`), so the files are
+  * those a one-partition Spark write leaves and `spark.read.parquet` reads
+  * them as before; the swap around the write is unchanged.
   */
 final class StateStore(spark: SparkSession, path: String,
     leaseTtlMs: Long = 10 * 60 * 1000L) {
@@ -117,10 +122,11 @@ final class StateStore(spark: SparkSession, path: String,
       else if (fs.exists(new Path(path + ".old"))) Some(path + ".old")
       else None
     src.fold(Seq.empty[CheckObject])(s =>
-      spark.read.parquet(s).as[CheckObject].collect().toSeq)
+      GraftSqlBridge.readParquetRows[CheckObject](spark, new Path(s)))
   }
 
-  /** Atomic rewrite: write `<path>.tmp`, swap via rename so a killed run
+  /** Atomic rewrite: write `<path>.tmp` (its data file under a hidden name
+    * until closed, then `_SUCCESS`), swap via rename so a killed run
     * never leaves a half-written state (ref: DBMS atomicity, §7.4 #3).
     * The whole write+swap runs under the state lease (see acquireLease):
     * a second driver on the same path fails loudly instead of silently
@@ -128,14 +134,12 @@ final class StateStore(spark: SparkSession, path: String,
   def save(rows: Seq[CheckObject]): Unit = {
     acquireLease()
     try {
-      val ds: Dataset[CheckObject] = rows.toDS()
-      val tmp = path + ".tmp"
-      val old = path + ".old"
-      ds.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
       val p = new Path(path)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val pTmp = new Path(tmp)
-      val pOld = new Path(old)
+      val pTmp = new Path(path + ".tmp")
+      val pOld = new Path(path + ".old")
+      fs.delete(pTmp, true) // a tmp left by a save that died mid-write
+      GraftSqlBridge.writeParquetFile(spark, pTmp, rows)
       if (fs.exists(pOld)) fs.delete(pOld, true)
       if (fs.exists(p)) fs.rename(p, pOld)
       fs.rename(pTmp, p)

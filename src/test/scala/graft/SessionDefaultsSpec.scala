@@ -65,6 +65,32 @@ class SessionDefaultsSpec extends AnyFunSuite {
     assert(parsers.size === 1, parsers.mkString(", "))
   }
 
+  test("src/main opens parquet files only in GraftSqlBridge, and every " +
+      "open there takes read options built from the caller's conf") {
+    // parquet's default read options build a fresh Hadoop Configuration
+    // per open, which re-parses the default resources: about 40 times
+    // the cost of a footer read with a conf the caller already holds
+    val parquetIo = ("""ParquetFileReader\s*\.\s*(open|readFooter)|""" +
+      """new\s+ParquetFileReader|Parquet(Reader|Writer)\s*\.\s*builder|""" +
+      """(Parquet|Hadoop)ReadOptions\s*\.\s*builder|""" +
+      """ExampleParquetWriter|AvroParquet(Reader|Writer)""").r
+    val bridge = "src/main/scala/org/apache/spark/sql/GraftSqlBridge.scala"
+    val outside = mainSources.collect {
+      case (p, src) if p.toString != bridge &&
+          parquetIo.findFirstIn(src).isDefined => p.toString
+    }
+    assert(outside.isEmpty, outside.mkString(", "))
+    val src = mainSources.collectFirst {
+      case (p, s) if p.toString == bridge => s }.get
+    // every open passes the file's conf into its read options as well
+    val opens = """ParquetFileReader\.open\(""".r.findAllIn(src).size
+    val confOpens = ("""ParquetFileReader\.open\(HadoopInputFile\.fromPath""" +
+      """\((\w+), (\w+)\),\s*HadoopReadOptions\.builder\(\2, \1\)\.build\(\)\)""")
+      .r.findAllIn(src).size
+    assert(opens > 0 && confOpens === opens)
+    assert(!src.contains("ParquetReadOptions.builder"))
+  }
+
   test("the only mains under src/main are Main, Bench, Verify, Dev and " +
       "pipeline.ScaleVerify") {
     // a new tool is a Dev subcommand on Dev's one session, not a main
