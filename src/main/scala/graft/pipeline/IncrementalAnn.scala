@@ -80,136 +80,29 @@ object IncrementalAnn {
     Similarity.quantVecs(s, dir)
 
   /** The persisted index: centroids in `_graft_meta.json`, cell rows
-    * parquet partitioned by (batch_id, cluster). Single-writer is
-    * ENFORCED best-effort by the shared [[graft.tables.StoreLease]]
-    * (the SigStore's hardened round-10/11 semantics): writes go
+    * parquet partitioned by (batch_id, cluster), generations kept by
+    * [[graft.tables.Generations]] (a tmp generation is complete once it
+    * holds `_SUCCESS` and the metadata). Single-writer is ENFORCED
+    * best-effort by its shared [[graft.tables.StoreLease]]: writes go
     * through [[withLease]] or assert ownership first, so a second
-    * writer fails loudly instead of interleaving generation swaps. */
+    * writer fails loudly instead of interleaving generation swaps. An
+    * interrupted APPEND needs no restore step: its partial partition is
+    * rewritten wholesale when the batch replays (dynamic overwrite of
+    * `batch_id=<id>`). */
   final class AnnIndexStore(spark: SparkSession, path: String) {
     private def fs = new Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     private def metaPath(root: String) = new Path(root, "_graft_meta.json")
-    // crash-safety archive for forget()'s partition overwrite (the one
-    // write here that REMOVES resident rows — see recover's restore)
-    private def bakPath = new Path(path + ".bakparts")
 
-    private val lease =
-      new graft.tables.StoreLease(spark, path, "AnnIndexStore")
+    private val gens = new graft.tables.Generations(spark, path,
+      "AnnIndexStore", Seq("_SUCCESS", "_graft_meta.json"))
+    private def lease = gens.lease
     def acquireLease(
         ttlMs: Long = graft.tables.StoreLease.DefaultTtlMs): Unit =
       lease.acquire(ttlMs)
     def renewLease(): Unit = lease.renew()
     def releaseLease(): Unit = lease.release()
     def withLease[T](f: => T): T = lease.withLease(f)
-
-    /** Normalize on-disk state after a crash: complete an interrupted
-      * bootstrap swap (tmp generation fully written = meta present);
-      * stray-file maintenance (dropping garbage tmp bytes, sweeping
-      * staging dirs) runs only when safe — this instance holds the
-      * writer lease, or no writer holds one (StoreLease.canMaintain). An
-      * interrupted APPEND needs no restore step: its partial partition
-      * is rewritten wholesale when the batch replays (dynamic
-      * overwrite of `batch_id=<id>`). */
-    def recover(): Unit = {
-      val tmp = new Path(path + ".tmp")
-      val p = new Path(path)
-      val pOld = new Path(path + ".old")
-      // Swap completion is MAINTENANCE (canMaintain-gated, round-13
-      // review): an unleased reader promoting a complete tmp while a
-      // LIVE leased writer is mid-save() can interleave with the
-      // writer's own renames so that the reader's trailing pOld
-      // cleanup removes the generation the writer just archived — the
-      // one interleaving where the round-12 checked renames still lost
-      // a generation. Gated, a reader only completes swaps left by a
-      // DEAD writer (no lock, or a stale one); while a writer lives,
-      // the writer's own save()/recover() handles its swap. Belt and
-      // braces: the completed swap's pOld is renamed to a uniquely
-      // named trash dir (swept below) rather than hard-deleted, so
-      // even an undisciplined-racer interleaving cannot destroy the
-      // only surviving generation. The `.spark-staging` sweep is
-      // equally canMaintain-gated: on an unleased read path it would
-      // delete a concurrent ingest's in-flight staging.
-      if (fs.exists(new Path(tmp, "_SUCCESS")) &&
-          fs.exists(metaPath(path + ".tmp")) && lease.canMaintain) {
-        // CHECKED renames (round-12 review): two recover() calls can
-        // race here (any two unleased readers) — the loser of either
-        // rename must stop and restore, never fall through to a
-        // delete that could drop the only surviving generation. pOld
-        // is trashed only by the racer that COMPLETED the swap.
-        // A forget archive from an older interrupted commit predates
-        // this full rebuild — drop it, never restore it over the
-        // newer generation (the SigStore discipline).
-        if (fs.exists(bakPath)) fs.delete(bakPath, true)
-        if (fs.exists(pOld)) fs.delete(pOld, true)
-        if (fs.exists(p) && !fs.rename(p, pOld)) return ()
-        if (!fs.rename(tmp, p)) {
-          if (!fs.exists(p) && fs.exists(pOld)) fs.rename(pOld, p)
-          return ()
-        }
-        if (fs.exists(pOld))
-          fs.rename(pOld, new Path(path + ".trash." +
-            System.currentTimeMillis() + "." +
-            java.util.UUID.randomUUID().toString))
-      } else if (fs.exists(tmp) &&
-          !(fs.exists(new Path(tmp, "_SUCCESS")) &&
-            fs.exists(metaPath(path + ".tmp"))) && lease.canMaintain) {
-        // garbage tmp bytes: discarded only when no LIVE writer could
-        // be mid-write to tmp (we hold the lease, or nobody does)
-        fs.delete(tmp, true)
-      }
-      // canMaintain-gated like every other recovery mutation (round-13
-      // review sweep): p-missing + pOld-present is ALSO a live
-      // writer's save() mid-swap, and an unleased reader renaming pOld
-      // back would make that save fail spuriously
-      if (!fs.exists(p) && fs.exists(pOld) && lease.canMaintain)
-        fs.rename(pOld, p)
-      if (fs.exists(bakPath) && lease.canMaintain) {
-        // interrupted FORGET commit (the only writer of this archive —
-        // ingest/save never archive, their partitions are replayable):
-        // restore every archived partition the overwrite had removed
-        // but not yet rewritten, exactly the SigStore discipline; the
-        // forget retry then re-removes the forgotten rows.
-        fs.listStatus(bakPath).filter(_.isDirectory).foreach { d0 =>
-          fs.listStatus(d0.getPath).filter(_.isDirectory).foreach { d1 =>
-            val dest = new Path(new Path(p, d0.getPath.getName),
-              d1.getPath.getName)
-            if (!fs.exists(dest)) {
-              fs.mkdirs(dest.getParent)
-              fs.rename(d1.getPath, dest)
-            }
-          }
-        }
-        fs.delete(bakPath, true)
-      }
-      if (fs.exists(p) && lease.canMaintain) {
-        fs.listStatus(p).filter(s => s.isDirectory &&
-            s.getPath.getName.startsWith(".spark-staging"))
-          .foreach(s => fs.delete(s.getPath, true))
-      }
-      if (lease.canMaintain) {
-        // stray stale-lease tombstones + TTL-aged completed-swap trash
-        // (both shared StoreLease definitions, so the liveness
-        // contract cannot fork between the persisted stores)
-        lease.sweepTombstones()
-        lease.sweepTrash()
-      }
-      ()
-    }
-
-    /** Which generation an UNLEASED read serves while a LIVE writer is
-      * mid-swap (round-13 advice): `p` missing + `pOld` present +
-      * canMaintain false is exactly a live save() between its two
-      * renames (or a writer crashed with its lock not yet TTL-stale) —
-      * the gated recover() correctly refuses to MUTATE, but refusing to
-      * READ turned that safety into up-to-15-minutes of "store absent"
-      * for pure readers. Serve the archived generation READ-ONLY
-      * (nothing renamed, nothing swept); all mutations stay
-      * lease-gated. Everywhere else the live root is served. */
-    private def serveRoot(): String =
-      if (!fs.exists(new Path(path)) &&
-          fs.exists(new Path(path + ".old")) && !lease.canMaintain)
-        path + ".old"
-      else path
 
     private def writeMeta(root: String,
         centroids: Seq[(Int, Array[Long])],
@@ -262,9 +155,9 @@ object IncrementalAnn {
       * discipline: a guessed index silently mis-assigns). */
     def centroids: Seq[(Int, Array[Long])] = {
       def attempt(): Option[Seq[(Int, Array[Long])]] =
-        readMetaText(serveRoot()).flatMap(parseMeta)
+        readMetaText(gens.serveRoot()).flatMap(parseMeta)
       attempt().getOrElse {
-        recover()
+        gens.recover()
         attempt().getOrElse(throw new IllegalStateException(
           s"AnnIndexStore at $path has no _graft_meta.json: its frozen " +
             "centroids are unknown, and assigning against re-trained " +
@@ -281,44 +174,15 @@ object IncrementalAnn {
       * the probed partitions, no join back to the corpus. */
     def save(cents: Seq[(Int, Array[Long])],
         assignments: DataFrame,
-        origin: Option[String] = None): Unit = {
-      lease.assertStillHeld()
-      val tmp = path + ".tmp"
-      assignments.select(col("vec_id"), col("qv"), col("cluster"))
-        .withColumn("batch_id", lit(0L))
-        .repartition(col("cluster"))
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("batch_id", "cluster").parquet(tmp)
-      writeMeta(tmp, cents, origin)
-      // re-assert after the (possibly long) tmp write: a lease broken
-      // mid-write must abort BEFORE the swap, not interleave with the
-      // usurper's commits (round-12 review)
-      lease.assertStillHeld()
-      val p = new Path(path)
-      val pOld = new Path(path + ".old")
-      // a stale forget archive predates this new generation
-      if (fs.exists(bakPath)) fs.delete(bakPath, true)
-      if (fs.exists(pOld)) fs.delete(pOld, true)
-      // every rename checked: an interfering process (e.g. a racing
-      // recover that already promoted this tmp) must make the save
-      // FAIL LOUDLY with both generations still on disk — never reach
-      // a delete that could drop the only surviving copy
-      if (fs.exists(p) && !fs.rename(p, pOld))
-        throw new IllegalStateException(
-          s"AnnIndexStore at $path: could not archive the live " +
-            "generation before the swap (concurrent writer?); store " +
-            "left untouched")
-      if (!fs.rename(new Path(tmp), p)) {
-        // put the archived generation back before failing
-        if (!fs.exists(p) && fs.exists(pOld)) fs.rename(pOld, p)
-        throw new IllegalStateException(
-          s"AnnIndexStore at $path: tmp generation vanished before " +
-            "the swap (a racing recover may have promoted it); " +
-            "re-read the store before retrying")
+        origin: Option[String] = None): Unit =
+      gens.writeGeneration { tmp =>
+        assignments.select(col("vec_id"), col("qv"), col("cluster"))
+          .withColumn("batch_id", lit(0L))
+          .repartition(col("cluster"))
+          .write.mode(SaveMode.Overwrite)
+          .partitionBy("batch_id", "cluster").parquet(tmp)
+        writeMeta(tmp, cents, origin)
       }
-      fs.delete(pOld, true)
-      ()
-    }
 
     /** Ingest an arriving batch: assign against the frozen centroids
       * (zero-shuffle projection) and commit as a dynamic overwrite of
@@ -388,15 +252,15 @@ object IncrementalAnn {
       *
       * Work shape: LOCATE is one column-pruned scan (vec_id + the two
       * partition columns) aggregated to ≤ |ids| touched cells; REWRITE
-      * reads and rewrites only the touched rectangle under the
-      * archive-then-dynamic-overwrite commit (recover() restores the
+      * reads and rewrites only the touched cells under the
+      * archive-then-dynamic-overwrite commit (recovery restores the
       * archive after a crash; the retry converges — the SigStore
       * forget discipline, see its doc for the crash caveat). An
       * emptied cell stays absent after the archive rename. Every
       * committed forget re-arms the maintain() watermark exactly like
       * ingest — the occupancy the last decision measured is gone. */
     def forget(ids: DataFrame): IncrementalDedup.ForgetReport = {
-      recover()
+      gens.recover()
       lease.assertStillHeld()
       val loaded = load().getOrElse(
         return IncrementalDedup.ForgetReport(0L, 0))
@@ -409,24 +273,8 @@ object IncrementalAnn {
       val cells = hit.map(_._1)
       // EXACT touched-cell scope (the SigStore.forget reasoning): a
       // takedown's vectors scatter across batches and clusters
-      // independently, so the (batch × cluster) rectangle balloons;
-      // past 1024 cells the predicate tree stops being worth it and
-      // the rectangle takes over
-      val cellPred =
-        if (cells.length <= 1024)
-          cells.map { case (b, c) =>
-            col("batch_id") === lit(b) && col("cluster") === lit(c)
-          }.reduce(_ || _)
-        else
-          col("batch_id").isInCollection(cells.map(_._1).distinct.toSeq) &&
-            col("cluster").isInCollection(cells.map(_._2).distinct.toSeq)
-      val archiveCells: Seq[(Long, Int)] =
-        if (cells.length <= 1024) cells.toSeq
-        else {
-          val bs = cells.map(_._1).distinct.toSeq
-          val cs = cells.map(_._2).distinct.toSeq
-          for (b <- bs; c <- cs) yield (b, c)
-        }
+      val (cellPred, archiveCells) =
+        gens.cellScope("batch_id", "cluster", cells.toSeq)
       val out = loaded
         .filter(cellPred)
         .join(broadcast(idsD), Seq("vec_id"), "left_anti")
@@ -447,57 +295,17 @@ object IncrementalAnn {
             "watermark before the forget commit — a stale quiet-night " +
             "skip over the rewritten store would serve pre-forget " +
             "measurements; delete _graft_maintain.json and retry")
-      fs.mkdirs(bakPath)
-      archiveCells.foreach { case (b, c) =>
-        val part = new Path(path, s"batch_id=$b/cluster=$c")
-        if (fs.exists(part)) {
-          val dest = new Path(bakPath, s"batch_id=$b/cluster=$c")
-          fs.mkdirs(dest.getParent)
-          fs.rename(part, dest)
-        }
-      }
-      out.write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id", "cluster").parquet(path)
-      graft.tables.Tables.invalidateSchemaMemo(path)
-      fs.delete(bakPath, true)
+      gens.commitCells(out, "batch_id", "cluster", archiveCells)
       IncrementalDedup.ForgetReport(rows, hit.length)
     }
 
     /** All cell rows so far: (vec_id, qv, cluster, batch_id). Partition
       * pruning applies on both partition columns — a one-cell probe
       * reads only that cluster's directories. */
-    def load(): Option[DataFrame] = {
-      recover()
-      // a live writer mid-swap: serve the archived generation read-only
-      // instead of reporting the store absent (round-13 advice)
-      val root = serveRoot()
-      if (!fs.exists(new Path(root))) None
-      // memoized-schema read (layout protocol-fixed; listing per-read,
-      // so a second-ago ingest is visible): no footer-inference job per
-      // search/metrics call
-      else try Some(graft.tables.Tables.memoizedParquet(spark, root)
-        .select(col("vec_id"), col("qv"),
-          col("cluster").cast("int").as("cluster"),
-          col("batch_id").cast("long").as("batch_id")))
-      catch {
-        // a store EMPTIED by a whole-corpus forget() holds zero data
-        // files — read as "no generation" (the SigStore discipline);
-        // any other inference failure is corruption and propagates
-        case e: org.apache.spark.sql.AnalysisException
-            if !hasDataFile(root) => None
-      }
-    }
-
-    /** Any leaf parquet file under `root`? (first-hit short-circuit —
-      * only consulted on the load() inference-failure path). */
-    private def hasDataFile(root: String): Boolean = {
-      val it = fs.listFiles(new Path(root), true)
-      var found = false
-      while (!found && it.hasNext)
-        found = it.next().getPath.getName.endsWith(".parquet")
-      found
-    }
+    def load(): Option[DataFrame] =
+      gens.read().map(_.select(col("vec_id"), col("qv"),
+        col("cluster").cast("int").as("cluster"),
+        col("batch_id").cast("long").as("batch_id")))
 
     /** Top-k nearest neighbors for `queryVecs` (vec_id, qv) SERVED FROM
       * THE STORE — the IVF query path: per query, the `nprobe` nearest

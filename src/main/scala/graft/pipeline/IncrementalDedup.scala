@@ -360,31 +360,25 @@ object IncrementalDedup {
   /** Parquet-backed signature store, partitioned by the band-key bucket
     * columns (pb0, pb1) so [[ingest]]'s reads and
     * [[saveIncremental]]'s writes prune to the partitions a batch
-    * touches. Generation discipline:
+    * touches. Generation discipline is [[graft.tables.Generations]]'s
+    * (a tmp generation is complete once it holds `_SUCCESS` and
+    * `_graft_meta.json`):
     *
-    *  - [[save]] (bootstrap / full rebuild): write to `path.tmp`, then
-    *    swap (path → path.old, tmp → path, drop old). [[load]] FIRST
-    *    COMPLETES any interrupted swap — promote a complete tmp
-    *    generation to `path`, discard an incomplete one, restore from
-    *    `path.old` if a crash left no `path` — and then ALWAYS reads
-    *    from `path`. (Reading the tmp directory lazily, as a previous
-    *    release did, deadlocks the next save(): it must overwrite tmp
-    *    while the loaded plan still reads it.)
-    *  - [[saveIncremental]] (per arriving batch): dynamic partition
-    *    overwrite of ONLY the partitions the batch touched, with the
-    *    partitions' retained rows re-read through a pruned scan and
-    *    materialized BEFORE the overwrite (never read-and-overwrite the
-    *    same files), and the touched partitions' CURRENT content
-    *    archived to `path.bakparts` before the overwrite starts. A
-    *    crash anywhere in the commit leaves every touched partition
-    *    either old-complete (restorable from the archive) or
-    *    new-complete — never LOST, which matters because a partition
-    *    holds untouched co-resident classes a batch replay cannot
-    *    reconstruct. [[recover]] restores any archived partition
-    *    missing from the store, after which the at-least-once replay of
-    *    the batch recomputes every touched partition to the same bytes
-    *    (ingest's membership dedup makes re-arrival idempotent), so the
-    *    store converges on restart.
+    *  - [[save]] (bootstrap / full rebuild) writes a whole generation
+    *    and swaps it in. [[load]] FIRST COMPLETES any interrupted swap
+    *    and then ALWAYS reads from `path` (reading the tmp directory
+    *    lazily, as a previous release did, deadlocks the next save():
+    *    it must overwrite tmp while the loaded plan still reads it).
+    *  - [[saveIncremental]] (per arriving batch) rewrites ONLY the
+    *    partitions the batch touched, with their retained rows re-read
+    *    through a pruned scan and materialized BEFORE the overwrite,
+    *    under the archive-then-dynamic-overwrite cell commit. A crash
+    *    anywhere in it leaves every touched partition old-complete
+    *    (restored from the archive) or new-complete — never LOST, which
+    *    matters because a partition holds untouched co-resident classes
+    *    a batch replay cannot reconstruct — and the at-least-once replay
+    *    of the batch then recomputes every touched partition to the same
+    *    bytes (ingest's membership dedup makes re-arrival idempotent).
     *
     * Both writers repartition on (pb0, pb1) before the partitioned
     * write, so a store lands as ONE file per populated partition cell —
@@ -398,25 +392,20 @@ object IncrementalDedup {
     * it); a store without the metadata is refused loudly rather than
     * scanned with a guessed modulus that would silently mis-prune.
     *
-    * Single-writer is enforced BEST-EFFORT (exactly as strong as the
-    * filesystem's `create(overwrite=false)` — atomic on HDFS-like
-    * stores, check-then-write on the local FS and S3A): [[acquireLease]]
-    * creates `path.lock` with the writer's UUID, re-reads it to verify
-    * the UUID survived (a lost creation race fails loudly), and a stale
-    * lease is only broken by RENAMING the lock aside first, so exactly
-    * one of several would-be breakers wins. The heartbeat
-    * ([[renewLease]]) REWRITES the lock content with a fresh timestamp
-    * (object stores where `setTimes` is a no-op keep working), and
-    * every store write re-verifies ownership, so a writer that lost its
-    * lease aborts instead of interleaving commits (the reference's
-    * queue-claim semantics, DIC:1111 UPDLOCK, in lake form). Staleness
-    * compares the holder's written timestamp with the breaker's clock —
-    * single-host exact, cross-host best-effort under skew. */
+    * Single-writer is enforced best-effort by the shared
+    * [[graft.tables.StoreLease]] ([[acquireLease]], [[renewLease]],
+    * [[withLease]]): every store write re-verifies ownership, so a
+    * writer that lost its lease aborts instead of interleaving commits
+    * (the reference's queue-claim semantics, DIC:1111 UPDLOCK, in lake
+    * form). */
   final class SigStore(spark: SparkSession, path: String) {
     private def fs = new Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-    private def bakPath = new Path(path + ".bakparts")
+    private val gens = new graft.tables.Generations(spark, path,
+      "SigStore", Seq("_SUCCESS", "_graft_meta.json"))
+    private def lease = gens.lease
+
     private def metaPath(root: String) = new Path(root, "_graft_meta.json")
 
     /** (fan-out, meta-file mtime, meta-file length) — the cached read
@@ -440,11 +429,12 @@ object IncrementalDedup {
           if (st.getModificationTime == mt && st.getLen == len) return b
         } catch { case _: java.io.IOException => () }
       }
-      recover()
-      // the read-only mid-swap window serves pOld (see serveRoot): its
-      // METADATA must come from the same generation, or a reader would
-      // prune pOld's layout with the default modulus
-      val root = serveRoot()
+      gens.recover()
+      // the read-only mid-swap window serves the archived generation
+      // (Generations.serveRoot): its METADATA must come from the same
+      // generation, or a reader would prune its layout with the default
+      // modulus
+      val root = gens.serveRoot()
       if (!fs.exists(new Path(root))) StoreBuckets
       else {
         val b = readMeta(root).getOrElse(throw new IllegalStateException(
@@ -479,152 +469,9 @@ object IncrementalDedup {
       out.close()
     }
 
-    /** Normalize on-disk state so `path` holds the newest COMPLETE
-      * generation, whatever point the last writer died at — including a
-      * writer that died inside [[saveIncremental]]'s partition
-      * overwrite: any partition archived in `path.bakparts` but missing
-      * from the store is restored (old-complete), partitions the
-      * overwrite already committed stay new-complete, and the batch
-      * replay converges the mix. */
-    private[pipeline] def recover(): Unit = {
-      val tmp = new Path(path + ".tmp")
-      val p = new Path(path)
-      val pOld = new Path(path + ".old")
-      if (fs.exists(new Path(tmp, "_SUCCESS")) &&
-          fs.exists(metaPath(path + ".tmp")) && lease.canMaintain) {
-        // interrupted swap with a complete next generation (parquet
-        // commit done AND fan-out metadata recorded): finish it —
-        // but ONLY under the canMaintain discipline (round-13 review):
-        // an unleased reader promoting a complete tmp while a LIVE
-        // leased writer is mid-save() can interleave with the writer's
-        // renames so the reader's trailing pOld cleanup removes the
-        // generation the writer just archived. Gated, readers only
-        // complete swaps left by a DEAD writer (no lock, or stale).
-        // A partition archive from an older interrupted incremental
-        // predates this full rebuild — drop it, never restore it over
-        // the newer generation.
-        // CHECKED renames (round-12 review): two recover() calls can
-        // race here — the loser of either rename must stop (restoring
-        // what it moved), never fall through to a delete that could
-        // drop the only surviving generation. pOld is trashed (not
-        // hard-deleted; TTL-aged sweep below) only by the racer that
-        // COMPLETED the swap.
-        if (fs.exists(bakPath)) fs.delete(bakPath, true)
-        if (fs.exists(pOld)) fs.delete(pOld, true)
-        if (fs.exists(p) && !fs.rename(p, pOld)) return ()
-        if (!fs.rename(tmp, p)) {
-          if (!fs.exists(p) && fs.exists(pOld)) fs.rename(pOld, p)
-          return ()
-        }
-        if (fs.exists(pOld))
-          fs.rename(pOld, new Path(path + ".trash." +
-            System.currentTimeMillis() + "." +
-            java.util.UUID.randomUUID().toString))
-      } else if (fs.exists(tmp) &&
-          !(fs.exists(new Path(tmp, "_SUCCESS")) &&
-            fs.exists(metaPath(path + ".tmp"))) && lease.canMaintain) {
-        // died mid-write: the tmp bytes are garbage. Discarded only
-        // when no LIVE writer could be mid-write to tmp (we hold the
-        // lease, or nobody does) — an unleased reader racing a leased
-        // writer's in-progress tmp write must not delete it
-        // (round-12 review finding).
-        fs.delete(tmp, true)
-      }
-      if (!fs.exists(p) && fs.exists(pOld) && lease.canMaintain) {
-        // died between path→old and tmp→path with tmp already promoted
-        // or lost: the archived generation is the newest complete one.
-        // canMaintain-gated like every other recovery mutation
-        // (round-13 review sweep): p-missing + pOld-present is ALSO a
-        // live writer's save() mid-swap, and an unleased reader
-        // renaming pOld back would make that save fail spuriously —
-        // gated, the reader sees a (transient) absent store instead
-        // and the writer's swap completes.
-        fs.rename(pOld, p)
-      }
-      if (fs.exists(bakPath) && lease.canMaintain) {
-        // interrupted incremental commit: restore every archived
-        // partition the overwrite had removed but not yet rewritten.
-        // canMaintain-gated (round-13 review sweep): a PRESENT bakPath
-        // is also a live writer mid-saveIncremental, and an unleased
-        // reader restoring old partitions into the store the writer is
-        // overwriting — then DELETING the writer's crash-safety
-        // archive — would lose partitions if the writer then crashed.
-        fs.listStatus(bakPath).filter(_.isDirectory).foreach { d0 =>
-          fs.listStatus(d0.getPath).filter(_.isDirectory).foreach { d1 =>
-            val dest = new Path(new Path(p, d0.getPath.getName),
-              d1.getPath.getName)
-            if (!fs.exists(dest)) {
-              fs.mkdirs(dest.getParent)
-              fs.rename(d1.getPath, dest)
-            }
-          }
-        }
-        fs.delete(bakPath, true)
-      }
-      if (fs.exists(p) && lease.canMaintain) {
-        // a crash before the overwrite's commit can leave its staging
-        // dir behind; reads ignore dot-dirs but the garbage accretes.
-        // Swept only when safe (we hold the lease, or no writer holds
-        // one): an unleased read path sweeping under a LIVE writer
-        // would delete its in-flight dynamic-overwrite staging
-        // (round-12 review finding).
-        fs.listStatus(p).filter(s => s.isDirectory &&
-            s.getPath.getName.startsWith(".spark-staging"))
-          .foreach(s => fs.delete(s.getPath, true))
-      }
-      if (lease.canMaintain) {
-        // stray stale-lease tombstones + TTL-aged completed-swap trash
-        // (both shared StoreLease definitions, so the liveness
-        // contract cannot fork between the persisted stores)
-        lease.sweepTombstones()
-        lease.sweepTrash()
-      }
-      ()
-    }
-
-    /** Which generation an UNLEASED read serves while a LIVE writer is
-      * mid-swap (round-13 advice, same pattern as AnnIndexStore): `p`
-      * missing + `pOld` present + canMaintain false is a live save()
-      * between its two renames (or a crashed writer whose lock is not
-      * yet TTL-stale) — recover() correctly refuses to mutate, but the
-      * read path must not report the store ABSENT for up to the lease
-      * TTL. Serve the archived generation READ-ONLY; every mutation
-      * stays lease-gated. */
-    private def serveRoot(): String =
-      if (!fs.exists(new Path(path)) &&
-          fs.exists(new Path(path + ".old")) && !lease.canMaintain)
-        path + ".old"
-      else path
-
-    def load(): Option[DataFrame] = {
-      recover()
-      val root = serveRoot()
-      // memoized-schema read (generation layout is protocol-fixed):
-      // skips the per-call footer-inference job; listing stays per-read
-      if (fs.exists(new Path(root)))
-        try Some(graft.tables.Tables.memoizedParquet(spark, root))
-        catch {
-          // a store EMPTIED by a whole-corpus forget() keeps its root
-          // (metadata, lock) but holds zero data files — schema
-          // inference fails, and the right reading is "no generation"
-          // (callers bootstrap fresh, exactly as before the first
-          // save). Only the genuinely-empty case is translated; any
-          // other inference failure is real corruption and propagates.
-          case e: org.apache.spark.sql.AnalysisException
-              if !hasDataFile(root) => None
-        }
-      else None
-    }
-
-    /** Any leaf parquet file under `root`? (first-hit short-circuit —
-      * only consulted on the load() inference-failure path). */
-    private def hasDataFile(root: String): Boolean = {
-      val it = fs.listFiles(new Path(root), true)
-      var found = false
-      while (!found && it.hasNext)
-        found = it.next().getPath.getName.endsWith(".parquet")
-      found
-    }
+    /** The live generation ([[graft.tables.Generations.read]]): None
+      * before the first save and after a whole-corpus forget. */
+    def load(): Option[DataFrame] = gens.read()
 
     /** Full-generation swap — bootstrap and rebuilds. `storeFrame` may
       * lazily read from `path` (it usually derives from [[load]]): the
@@ -635,7 +482,7 @@ object IncrementalDedup {
       * frame is repartitioned on (pb0, pb1) so each populated partition
       * cell lands as ONE parquet file. */
     def save(storeFrame: DataFrame, fanOut: Int = 0): Unit = {
-      assertLeaseStillHeld()
+      lease.assertStillHeld()
       if (fanOut > 0)
         writeGeneration(storeFrame, fanOut)
       else {
@@ -651,43 +498,24 @@ object IncrementalDedup {
       * from `path`: nothing under `path` moves until the tmp bytes and
       * metadata are durable. */
     private def writeGeneration(frame: DataFrame, bkts: Int): Unit = {
-      val tmp = path + ".tmp"
       val bucketed =
         withStoreBuckets(frame.select((sigCols :+ col("rep")): _*), bkts)
-      // one file per populated cell: cluster rows by cell before the
-      // partitioned write. At fan-out 1 the store IS one cell, so the
-      // degraded layout is literally the flat one — a single file with
-      // pb0/pb1 as data columns, no partition dirs, no dynamic-writer
-      // machinery, no shuffle (narrow coalesce) — readers can't tell
-      // the difference (the pb columns are present either way and
-      // nothing can prune at fan-out 1).
-      if (bkts == 1)
-        bucketed.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-      else
-        bucketed.repartition(col("pb0"), col("pb1"))
-          .write.mode(SaveMode.Overwrite)
-          .partitionBy("pb0", "pb1").parquet(tmp)
-      writeMeta(tmp, bkts)
-      val p = new Path(path)
-      val pOld = new Path(path + ".old")
-      if (fs.exists(bakPath)) fs.delete(bakPath, true)
-      if (fs.exists(pOld)) fs.delete(pOld, true)
-      // every rename checked (round-12 review): an interfering process
-      // (e.g. a racing recover that already promoted this tmp) must
-      // make the swap FAIL LOUDLY with both generations still on disk,
-      // never reach a delete that could drop the only surviving copy
-      if (fs.exists(p) && !fs.rename(p, pOld))
-        throw new IllegalStateException(
-          s"SigStore at $path: could not archive the live generation " +
-            "before the swap (concurrent writer?); store left untouched")
-      if (!fs.rename(new Path(tmp), p)) {
-        if (!fs.exists(p) && fs.exists(pOld)) fs.rename(pOld, p)
-        throw new IllegalStateException(
-          s"SigStore at $path: tmp generation vanished before the " +
-            "swap (a racing recover may have promoted it); re-read " +
-            "the store before retrying")
+      gens.writeGeneration { tmp =>
+        // one file per populated cell: cluster rows by cell before the
+        // partitioned write. At fan-out 1 the store IS one cell, so the
+        // degraded layout is literally the flat one — a single file with
+        // pb0/pb1 as data columns, no partition dirs, no dynamic-writer
+        // machinery, no shuffle (narrow coalesce) — readers can't tell
+        // the difference (the pb columns are present either way and
+        // nothing can prune at fan-out 1).
+        if (bkts == 1)
+          bucketed.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
+        else
+          bucketed.repartition(col("pb0"), col("pb1"))
+            .write.mode(SaveMode.Overwrite)
+            .partitionBy("pb0", "pb1").parquet(tmp)
+        writeMeta(tmp, bkts)
       }
-      fs.delete(pOld, true)
       try {
         val st = fs.getFileStatus(metaPath(path))
         metaCache = Some((bkts, st.getModificationTime, st.getLen))
@@ -711,8 +539,8 @@ object IncrementalDedup {
     def saveIncremental(touched: DataFrame,
         partsHint: Seq[(Int, Int)] = Nil,
         rect: Option[DataFrame] = None): Unit = {
-      recover()
-      assertLeaseStillHeld()
+      gens.recover()
+      lease.assertStillHeld()
       val bkts = buckets
       // `touched` is typically a projection of a frame `ingest` already
       // checkpointed, so keeping it LAZY here is cheap — and when the
@@ -764,39 +592,10 @@ object IncrementalDedup {
       val out = remainder.unionByName(t.select(storeCols: _*))
         .repartition(col("pb0"), col("pb1"))
         .materialized
-      // ARCHIVE the rectangle's current partitions before the dynamic
-      // overwrite: its commit deletes each target partition dir before
-      // renaming staged files in, and a crash in that window would
-      // otherwise LOSE the partition — including untouched co-resident
-      // classes a batch replay cannot reconstruct. Both union legs are
-      // materialized above (executor-resident, lineage severed), so
-      // nothing below re-reads the files being moved.
-      fs.mkdirs(bakPath)
-      for (a <- pbs0; b <- pbs1) {
-        val part = new Path(path, s"pb0=$a/pb1=$b")
-        if (fs.exists(part)) {
-          val dest = new Path(bakPath, s"pb0=$a/pb1=$b")
-          fs.mkdirs(dest.getParent)
-          fs.rename(part, dest)
-        }
-      }
-      // per-WRITER option, not a session-conf toggle (round-14 review:
-      // the toggle leaked dynamic semantics to any concurrent write in
-      // the same session during the window, and the finally-restore
-      // could clobber a value a concurrent thread had just set; the
-      // ANN store's ingest already uses the scoped spelling)
-      out.write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("pb0", "pb1").parquet(path)
-      // the dynamic overwrite rewrote partition files two levels deep
-      // under unchanged direct-child names — the one mutation class
-      // the schema memo's child fingerprint cannot always see; drop
-      // the memo so the next read re-infers (round-14 advice)
-      graft.tables.Tables.invalidateSchemaMemo(path)
-      // commit durable: the archived generation of the rectangle is
-      // obsolete (and must not be restored over the new one)
-      fs.delete(bakPath, true)
-      ()
+      // the rectangle's cells are archived before the overwrite; both
+      // union legs are materialized above, so nothing re-reads them
+      gens.commitCells(out, "pb0", "pb1", for (a <- pbs0; b <- pbs1)
+        yield (a, b))
     }
 
     /** TAKEDOWN/RETENTION propagation (round-15 verdict #1): remove
@@ -831,7 +630,7 @@ object IncrementalDedup {
       *
       * Crash discipline (the saveIncremental archive, with the one
       * forget-specific caveat): a crash before the overwrite commits
-      * restores every archived partition via [[recover]] — the store
+      * restores every archived partition on the next recover — the store
       * reverts to its pre-forget content and the caller's RETRY
       * re-forgets (at-least-once, converging, exactly the ingest
       * replay posture). A crash between the commit and the archive
@@ -840,8 +639,8 @@ object IncrementalDedup {
       * callers treating the takedown as legally binding must re-run
       * on any failure, which the idempotence makes safe. */
     def forget(ids: DataFrame): ForgetReport = {
-      recover()
-      assertLeaseStillHeld()
+      gens.recover()
+      lease.assertStillHeld()
       val bkts = buckets
       val loaded = load().getOrElse(return ForgetReport(0L, 0))
       val idsD = ids.select("doc_id").distinct().materialized
@@ -860,28 +659,11 @@ object IncrementalDedup {
         writeGeneration(forgetFrame(loaded, idsD), bkts)
         return ForgetReport(rows, hit.length)
       }
-      // EXACT touched-cell scope, not the (pb0 × pb1) rectangle: a
-      // takedown's ids scatter independently (unlike a batch's band
-      // keys), so the rectangle of even a few hundred cells approaches
-      // the full grid — exact cells keep the rewrite truly ∝ |ids|.
-      // The disjunction-of-conjunctions is a partition filter (prunes
-      // at the source); past 1024 cells the predicate tree stops being
-      // worth it and the coarser rectangle takes over.
-      val cellPred =
-        if (cells.length <= 1024)
-          cells.map { case (a, b) =>
-            col("pb0") === lit(a) && col("pb1") === lit(b)
-          }.reduce(_ || _)
-        else
-          col("pb0").isInCollection(cells.map(_._1).distinct.toSeq) &&
-            col("pb1").isInCollection(cells.map(_._2).distinct.toSeq)
-      val archiveCells: Seq[(Int, Int)] =
-        if (cells.length <= 1024) cells.toSeq
-        else {
-          val as = cells.map(_._1).distinct.toSeq
-          val bs = cells.map(_._2).distinct.toSeq
-          for (a <- as; b <- bs) yield (a, b)
-        }
+      // EXACT touched-cell scope, not the batch path's rectangle: the
+      // filter is a partition filter (prunes at the source), so the
+      // rewrite stays ∝ |ids|
+      val (cellPred, archiveCells) =
+        gens.cellScope("pb0", "pb1", cells.toSeq)
       // ONE disk read of the touched cells: forgetFrame consumes its
       // store side twice (the anti-join left and the rep-recompute
       // groupBy), so the pruned scan is materialized FIRST — both
@@ -893,36 +675,18 @@ object IncrementalDedup {
       val out = forgetFrame(loaded.filter(cellPred).materialized, idsD)
         .select(storeCols: _*)
         .repartition(col("pb0"), col("pb1"))
-      fs.mkdirs(bakPath)
-      archiveCells.foreach { case (a, b) =>
-        val part = new Path(path, s"pb0=$a/pb1=$b")
-        if (fs.exists(part)) {
-          val dest = new Path(bakPath, s"pb0=$a/pb1=$b")
-          fs.mkdirs(dest.getParent)
-          fs.rename(part, dest)
-        }
-      }
-      out.write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("pb0", "pb1").parquet(path)
-      graft.tables.Tables.invalidateSchemaMemo(path)
-      fs.delete(bakPath, true)
+      gens.commitCells(out, "pb0", "pb1", archiveCells)
       ForgetReport(rows, hit.length)
     }
 
-    /** Writer lease — the proven round-10/11 semantics, extracted to
-      * [[graft.tables.StoreLease]] in round 12 so every persisted
-      * store shares ONE hardened implementation (see its doc for the
+    /** Writer lease — [[graft.tables.StoreLease]], owned by the
+      * store's [[graft.tables.Generations]] (see its doc for the
       * create-verify, stale-break and usurpation-abort story). */
-    private val lease = new graft.tables.StoreLease(spark, path, "SigStore")
-
     def acquireLease(
         ttlMs: Long = graft.tables.StoreLease.DefaultTtlMs): Unit =
       lease.acquire(ttlMs)
 
     def renewLease(): Unit = lease.renew()
-
-    private def assertLeaseStillHeld(): Unit = lease.assertStillHeld()
 
     def releaseLease(): Unit = lease.release()
 

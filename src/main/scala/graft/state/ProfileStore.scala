@@ -1,10 +1,11 @@
 package graft.state
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import graft.tables.Generations
 
 /** Persisted per-table PROFILE history for drift detection
   * (ref IntegrityChecks_VLDB.sql:56-61, 700-722: the reference keeps the
@@ -18,19 +19,20 @@ import org.apache.spark.sql.types._
   *
   * Layout: one parquet dataset of (run_id, table_name, metric, value);
   * `record()` appends the new profile under the next run_id and prunes
-  * generations older than `keep` — atomically, via the same
-  * write-tmp-and-swap [[StateStore.save]] uses (a killed run never
-  * leaves a half-written history; see StateStore for the recovery-order
-  * proof). The PREVIOUS two-generation layout (a `generation` column,
-  * 'current' | 'previous') loads transparently as runs 2 / 1. Profiles
-  * are one row per (table, metric): driver-small at any corpus scale,
-  * so coalesce(1) is correct here; the history is ≤ keep × that. */
+  * generations older than `keep` — atomically, as a whole generation of
+  * [[graft.tables.Generations]] written under its writer lease (a killed
+  * run never leaves a half-written history, and two drift runs cannot
+  * clobber each other's). The PREVIOUS two-generation layout (a
+  * `generation` column, 'current' | 'previous') loads transparently as
+  * runs 2 / 1. Profiles are one row per (table, metric): driver-small
+  * at any corpus scale, so coalesce(1) is correct here; the history is
+  * ≤ keep × that. */
 final class ProfileStore(spark: SparkSession, path: String,
     keep: Int = 8) {
   require(keep >= 2, s"history depth must keep >= 2 generations, got $keep")
 
-  private def fs = new Path(path)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val gens = new Generations(spark, path, "ProfileStore",
+    Seq("_SUCCESS"))
 
   private val histSchema = StructType(Seq(
     StructField("run_id", LongType, nullable = false),
@@ -38,20 +40,11 @@ final class ProfileStore(spark: SparkSession, path: String,
     StructField("metric", StringType, nullable = false),
     StructField("value", DoubleType, nullable = true)))
 
-  private def src: Option[String] = {
-    val p = new Path(path)
-    if (fs.exists(new Path(new Path(path + ".tmp"), "_SUCCESS")))
-      Some(path + ".tmp")
-    else if (fs.exists(p)) Some(path)
-    else if (fs.exists(new Path(path + ".old"))) Some(path + ".old")
-    else None
-  }
-
   /** Full (run_id, table_name, metric, value) history, oldest to newest
     * run ids; empty with the right schema before the first run. */
-  def history(): DataFrame = src match {
+  def history(): DataFrame = gens.newest() match {
     case Some(s) =>
-      val df = spark.read.parquet(s)
+      val df = spark.read.parquet(s.toString)
       if (df.columns.contains("generation"))
         // legacy two-generation layout: current = run 2, previous = run 1
         df.select(
@@ -86,7 +79,7 @@ final class ProfileStore(spark: SparkSession, path: String,
     * end-of-run stat shuffle (ref IC:700-722) with depth. Returns the
     * now-previous generation so callers can run the drift comparison
     * without a re-read. */
-  def record(profile: DataFrame): DataFrame = {
+  def record(profile: DataFrame): DataFrame = gens.lease.withLease {
     // materialize the history BEFORE the swap overwrites its files
     val histRows = history().collect()
     val maxRun = histRows.foldLeft(0L)((m, r) => math.max(m, r.getLong(0)))
@@ -94,19 +87,13 @@ final class ProfileStore(spark: SparkSession, path: String,
     val keptOld = histRows.filter(_.getLong(0) > next - keep)
     val hist = spark.createDataFrame(
       spark.sparkContext.parallelize(keptOld.toSeq, 1), histSchema)
-    val tmp = path + ".tmp"
-    profile.select("table_name", "metric", "value")
-      .withColumn("run_id", lit(next))
-      .select("run_id", "table_name", "metric", "value")
-      .unionByName(hist)
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(tmp)
-    val p = new Path(path)
-    val pOld = new Path(path + ".old")
-    if (fs.exists(pOld)) fs.delete(pOld, true)
-    if (fs.exists(p)) fs.rename(p, pOld)
-    fs.rename(new Path(tmp), p)
-    fs.delete(pOld, true)
+    gens.writeGeneration(tmp =>
+      profile.select("table_name", "metric", "value")
+        .withColumn("run_id", lit(next))
+        .select("run_id", "table_name", "metric", "value")
+        .unionByName(hist)
+        .coalesce(1)
+        .write.mode(SaveMode.Overwrite).parquet(tmp))
     spark.createDataFrame(
       spark.sparkContext.parallelize(
         keptOld.filter(_.getLong(0) == maxRun).toSeq, 1), histSchema)

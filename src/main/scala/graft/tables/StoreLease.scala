@@ -6,7 +6,8 @@ import org.apache.spark.sql.SparkSession
 /** Best-effort single-writer lease over a persisted store directory —
   * the reference's queue-claim semantics (ola/DatabaseIntegrityCheck
   * .sql:1111 UPDLOCK row claim) in lake form, shared by every
-  * persisted-state tier (SigStore, AnnIndexStore).
+  * persisted-state tier (SigStore, AnnIndexStore, StateStore,
+  * ProfileStore), each through its [[Generations]].
   *
   * Mechanics (hardened across rounds 10-11 on the SigStore, extracted
   * verbatim in round 12 so new stores inherit the proven semantics
@@ -115,9 +116,10 @@ final class StoreLease(spark: SparkSession, path: String, what: String) {
         val age = System.currentTimeMillis() - hb
         if (age < patience) throw new IllegalStateException(
           s"$what at $path is leased to writer $holder " +
-            s"(heartbeat age ${age} ms < ttl ${patience} ms). Concurrent " +
-            "ingest would interleave the swap chain; if the holder " +
-            s"is dead, wait for lease expiry or remove $path.lock")
+            s"(heartbeat age ${age} ms < ttl ${patience} ms): the store " +
+            "is leased by another live run, and a second writer would " +
+            "interleave its swap chain. If the holder is dead, the " +
+            s"lease self-heals after the ttl (or remove $path.lock)")
         // stale: break it by renaming aside — one breaker wins
         val tomb = new Path(path + s".lock.broken.$writerId")
         if (!fs.rename(lockPath, tomb)) throw new IllegalStateException(
@@ -235,8 +237,8 @@ final class StoreLease(spark: SparkSession, path: String, what: String) {
 
   /** Reap stray stale-lease tombstones (`<path>.lock.broken.*` — a
     * breaker whose delete failed leaves one; round-12 review). Safe
-    * only under the [[canMaintain]] discipline; callers (the stores'
-    * recover() maintenance sections) gate it there. */
+    * only under the [[canMaintain]] discipline; the caller
+    * ([[Generations.recover]]'s maintenance section) gates it there. */
   def sweepTombstones(): Unit = {
     val dir = new Path(path).getParent
     val prefix = new Path(path).getName + ".lock.broken."
@@ -244,35 +246,6 @@ final class StoreLease(spark: SparkSession, path: String, what: String) {
       if (dir != null && fs.exists(dir))
         fs.listStatus(dir).filter(_.getPath.getName.startsWith(prefix))
           .foreach(s => fs.delete(s.getPath, false))
-    } catch { case _: java.io.IOException => () }
-    ()
-  }
-
-  /** Reap TTL-aged completed-swap trash dirs (`<path>.trash.<millis>.
-    * <uuid>` — recover()'s swap completion renames the superseded
-    * generation there instead of hard-deleting it). Names carry their
-    * creation millis; only trash older than [[StoreLease.DefaultTtlMs]]
-    * is reaped, so a generation trashed moments ago (the
-    * undisciplined-racer window the trash exists FOR) survives long
-    * enough to be rescued manually. ONE definition for every persisted
-    * store — the liveness contract must not fork between them
-    * (round-13 review). canMaintain-gated by callers, like
-    * [[sweepTombstones]]. */
-  def sweepTrash(): Unit = {
-    val dir = new Path(path).getParent
-    val prefix = new Path(path).getName + ".trash."
-    val now = System.currentTimeMillis()
-    try {
-      if (dir != null && fs.exists(dir))
-        fs.listStatus(dir)
-          .filter { s =>
-            val n = s.getPath.getName
-            n.startsWith(prefix) &&
-              n.stripPrefix(prefix).takeWhile(_.isDigit)
-                .toLongOption.exists(t =>
-                  now - t >= StoreLease.DefaultTtlMs)
-          }
-          .foreach(s => fs.delete(s.getPath, true))
     } catch { case _: java.io.IOException => () }
     ()
   }

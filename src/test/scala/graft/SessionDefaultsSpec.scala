@@ -91,6 +91,21 @@ class SessionDefaultsSpec extends AnyFunSuite {
     assert(!src.contains("ParquetReadOptions.builder"))
   }
 
+  test("src/main has one generation protocol: the generation path " +
+      "suffixes are spelled only in tables/Generations, the lock suffix " +
+      "only in tables/StoreLease") {
+    // a second copy of the swap or the recovery would drift from the
+    // first (two recover bodies once differed only in their comments)
+    def filesWith(literals: Seq[String]): Seq[String] = mainSources.collect {
+      case (p, src) if literals.exists(l => src.contains("\"" + l)) =>
+        p.toString
+    }.sorted
+    assert(filesWith(Seq(".tmp\"", ".old\"", ".bakparts\"", ".trash.")) ===
+      Seq("src/main/scala/graft/tables/Generations.scala"))
+    assert(filesWith(Seq(".lock\"")) ===
+      Seq("src/main/scala/graft/tables/StoreLease.scala"))
+  }
+
   test("the only mains under src/main are Main, Bench, Verify, Dev and " +
       "pipeline.ScaleVerify") {
     // a new tool is a Dev subcommand on Dev's one session, not a main

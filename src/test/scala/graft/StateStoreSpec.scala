@@ -152,13 +152,54 @@ class StateStoreSpec extends AnyFunSuite {
   test("a dead driver's lease self-heals after the ttl") {
     val spark = SparkTestSession.spark
     val dir = java.nio.file.Files.createTempDirectory("graft-state").toString
-    val crashed = new graft.state.StateStore(spark, s"$dir/state")
+    val crashed = new graft.state.StateStore(spark, s"$dir/state",
+      leaseTtlMs = 1L)
     crashed.acquireLease() // driver dies here, lease left behind
     Thread.sleep(10)
     val healer = new graft.state.StateStore(spark, s"$dir/state",
       leaseTtlMs = 1L)
     healer.save(Seq(obj(1, "a"))) // breaks the stale lease, then proceeds
     assert(healer.load().size === 1)
+  }
+
+  test("a saver declaring a 1 ms ttl cannot break a live lease: the " +
+      "holder's declared ttl governs") {
+    val spark = SparkTestSession.spark
+    val dir = java.nio.file.Files.createTempDirectory("graft-state").toString
+    val holder = new graft.state.StateStore(spark, s"$dir/state")
+    holder.acquireLease()
+    try {
+      Thread.sleep(10)
+      val impatient = new graft.state.StateStore(spark, s"$dir/state",
+        leaseTtlMs = 1L)
+      val e = intercept[IllegalStateException] {
+        impatient.save(Seq(obj(1, "a")))
+      }
+      assert(e.getMessage.contains("leased by another live run"))
+      assert(holder.load().isEmpty)
+    } finally holder.releaseLease()
+  }
+
+  test("a lock left in the earlier JSON format blocks save while fresh " +
+      "and is broken once its mtime is older than the ttl") {
+    val spark = SparkTestSession.spark
+    val dir = java.nio.file.Files.createTempDirectory("graft-state").toString
+    val lock = new org.apache.hadoop.fs.Path(s"$dir/state.lock")
+    val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(lock, false)
+    out.writeBytes(s"""{"owner": "dead-driver", "acquired_ms": """ +
+      s"""${System.currentTimeMillis()}}""")
+    out.close()
+    val store = new graft.state.StateStore(spark, s"$dir/state")
+    val e = intercept[IllegalStateException](store.save(Seq(obj(1, "a"))))
+    assert(e.getMessage.contains("leased by another live run"))
+    assert(store.load().isEmpty)
+    val stale = System.currentTimeMillis() -
+      graft.tables.StoreLease.DefaultTtlMs - 60 * 1000L
+    fs.setTimes(lock, stale, stale)
+    store.save(Seq(obj(1, "a")))
+    assert(store.load().map(_.object_name) === Seq("a"))
+    assert(!fs.exists(lock), "the broken lease is gone after the save")
   }
 
   test("IncrementalMean Aggregator replays the IC:706 recurrence exactly") {
