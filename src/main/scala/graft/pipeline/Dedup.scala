@@ -216,10 +216,10 @@ object Dedup {
     jaccardVerifyFrom(shingleSets(docsDf), pairs, threshold)
 
   /** Per-doc distinct word-bigram shingle sets (doc_id, sh) — the one
-    * derivation of a document's set representation, shared (and
-    * checkpoint-shareable) by the exact verifier and the minhash
-    * signature: min over the DISTINCT shingles equals min over all
-    * shingles, so a single materialized sets frame can feed candidate
+    * derivation of a document's set representation (a <2-token doc has
+    * none, so no row and no signature), shared by the exact verifier and
+    * both minhash signatures: min over the DISTINCT shingles equals min
+    * over all, so one materialized sets frame can feed candidate
     * generation AND verification without re-splitting the corpus text. */
   private[pipeline] def shingleSets(docsDf: DataFrame): DataFrame =
     docsDf
@@ -228,9 +228,9 @@ object Dedup {
       .filter(size(col("sh")) > 0)
 
   /** Minhash signature derived from an (optionally checkpointed)
-    * [[shingleSets]] frame — identical m0..m7 to [[minhashSig]] (md5 mins
-    * are duplicate-insensitive), without re-deriving shingles from raw
-    * text. */
+    * [[shingleSets]] frame, without re-deriving shingles from raw text:
+    * explode, 8 seeded md5s per shingle, ONE map-side-combining
+    * groupBy(doc_id) with 8 min() aggregates. */
   private[pipeline] def minhashSigFromSets(sets: DataFrame): DataFrame = {
     val sh = sets.select(col("doc_id"), explode(col("sh")).as("tok"))
     val mhCols = (0 until 8).map(k =>
@@ -265,43 +265,24 @@ object Dedup {
   // from the oracle comparison).
 
   /** k=8 seeded-md5 minhash signature per doc over word-bigram shingles:
-    * inline hash per corpus row, ONE map-side-combining groupBy(doc_id)
-    * with 8 min() aggregates. Shared by the batch LSH (dd03) and the
-    * streaming near-dup detector ([[graft.streaming.Streams]]). Input
-    * needs (doc_id, text). */
-  def minhashSig(docsDf: DataFrame): DataFrame = {
-    // DISTINCT in-row shingles (codegen'd kernel): min over the distinct
-    // shingles equals min over all, and the explode + 8 md5s then run on
-    // the smaller stream
-    val sh = docsDf
-      .select(col("doc_id"),
-        explode(graft.functions.Shingles.distinctBigramsCol(col("text")))
-          .as("tok"))
-    val mhCols = (0 until 8).map(k =>
-      md5(concat(lit(k.toString), lit("|"), col("tok"))).as(s"h$k"))
-    sh.select(col("doc_id") +: mhCols: _*)
-      .groupBy("doc_id")
-      .agg(min("h0").as("m0"), min("h1").as("m1"), min("h2").as("m2"),
-        min("h3").as("m3"), min("h4").as("m4"), min("h5").as("m5"),
-        min("h6").as("m6"), min("h7").as("m7"))
-  }
+    * [[minhashSigFromSets]] over the documents' [[shingleSets]]. Shared
+    * by the batch LSH (dd03) and the streaming near-dup detector
+    * ([[graft.streaming.Streams]]). Input needs (doc_id, text). */
+  def minhashSig(docsDf: DataFrame): DataFrame =
+    minhashSigFromSets(shingleSets(docsDf))
 
   /** Per-ROW signature: identical m0..m7, folded in one pass over the
     * in-row shingle list by the [[graft.functions.MinhashSig]] kernel —
-    * no explode, no aggregation. This is the STREAMING form (a streaming
-    * groupBy would be a watermark-requiring aggregation; per-row
-    * projection is mode-agnostic) and the right shape whenever one row
-    * carries the whole document; MinhashSigSpec pins bit-equality with
-    * the batch explode+groupBy form. */
+    * over the same [[shingleSets]], no explode, no aggregation. This is
+    * the STREAMING form (a streaming groupBy would be a
+    * watermark-requiring aggregation; per-row projection is
+    * mode-agnostic) and the right shape whenever one row carries the
+    * whole document; MinhashSigSpec pins bit-equality with the batch
+    * explode+groupBy form. */
   def minhashSigPerRow(docsDf: DataFrame): DataFrame = {
     val mh = (0 until 8).map(k =>
       element_at(col("ms"), k + 1).as(s"m$k"))
-    docsDf
-      .select(col("doc_id"),
-        graft.functions.Shingles.distinctBigramsCol(col("text")).as("sh"))
-      // <2-token docs have no shingles and thus no signature — same as
-      // the batch groupBy form, where they simply contribute no group
-      .filter(size(col("sh")) > 0)
+    shingleSets(docsDf)
       // one codegen'd pass folds all 8 seeded-md5 minima (the HOF
       // spelling walked an interpreted tree 8× per shingle)
       .select(col("doc_id"),

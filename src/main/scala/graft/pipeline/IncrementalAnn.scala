@@ -260,9 +260,9 @@ object IncrementalAnn {
       * committed forget re-arms the maintain() watermark exactly like
       * ingest — the occupancy the last decision measured is gone. */
     def forget(ids: DataFrame): IncrementalDedup.ForgetReport = {
-      gens.recover()
+      val stored = load() // recovers first, like every read
       lease.assertStillHeld()
-      val loaded = load().getOrElse(
+      val loaded = stored.getOrElse(
         return IncrementalDedup.ForgetReport(0L, 0))
       val idsD = ids.select("vec_id").distinct().materialized
       val hit = loaded.join(broadcast(idsD), Seq("vec_id"), "left_semi")

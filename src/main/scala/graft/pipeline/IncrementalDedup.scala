@@ -639,10 +639,10 @@ object IncrementalDedup {
       * callers treating the takedown as legally binding must re-run
       * on any failure, which the idempotence makes safe. */
     def forget(ids: DataFrame): ForgetReport = {
-      gens.recover()
+      val stored = load() // recovers first, like every read
       lease.assertStillHeld()
       val bkts = buckets
-      val loaded = load().getOrElse(return ForgetReport(0L, 0))
+      val loaded = stored.getOrElse(return ForgetReport(0L, 0))
       val idsD = ids.select("doc_id").distinct().materialized
       // LOCATE: one narrow scan → the touched cells and the match
       // count, in the same bounded aggregate (≤ |ids| cells)

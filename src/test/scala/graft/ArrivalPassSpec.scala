@@ -688,6 +688,57 @@ class ArrivalPassSpec extends AnyFunSuite {
       "table_compact" -> "skipped_empty"), report.stages.mkString("\n"))
   }
 
+  test("ingest source probe: empty documents/ and embeddings/ dirs " +
+      "skip both ingest stages with nothing written; a PARTITIONED " +
+      "landing (date=.../x.parquet) reaches both streams") {
+    import java.nio.file.{Files, Paths}
+    val base = Files.createTempDirectory("graft-arrival-probe").toString
+    val landing = s"$base/landing"
+    Files.createDirectories(Paths.get(s"$landing/documents"))
+    Files.createDirectories(Paths.get(s"$landing/embeddings"))
+    val cfg = ArrivalConfig(landing = landing, dbs = Map.empty,
+      checkpointRoot = s"$base/ckpt", sigStorePath = s"$base/sigs",
+      dedupOut = s"$base/pairs", annStorePath = s"$base/ann")
+    def statuses(r: graft.scheduler.ArrivalReport) =
+      r.stages.map(st => st.stage -> st.status).toMap
+    // 1. landing dirs exist but are empty: no schema-inference crash,
+    // no batch processed, no store bootstrapped
+    val quiet = ArrivalPass.run(spark, cfg, new CommandLog(spark, None),
+      SystemClock)
+    assert(statuses(quiet)("dedup_ingest") === "skipped_empty")
+    assert(statuses(quiet)("ann_ingest") === "skipped_empty")
+    for (p <- Seq("pairs", "sigs", "ann"))
+      assert(!Files.exists(Paths.get(s"$base/$p")), s"$p written")
+    // 2. arrivals land under a partition subdir: the recursive probe
+    // finds them and both streams ingest them
+    def landUnder(dir: String, df: org.apache.spark.sql.DataFrame): Unit = {
+      val stage = s"$base/stage-$dir"
+      df.coalesce(1).write.parquet(stage)
+      val part = Files.list(Paths.get(stage)).toArray.map(_.toString)
+        .find(_.endsWith(".parquet")).get
+      Files.createDirectories(Paths.get(s"$landing/$dir/date=2026-01-01"))
+      Files.copy(Paths.get(part),
+        Paths.get(s"$landing/$dir/date=2026-01-01/arrival-1.parquet"))
+    }
+    landUnder("documents", Seq((1L, "alpha beta alpha beta"),
+      (2L, "alpha beta alpha beta"), (3L, "gamma delta gamma"))
+      .toDF("doc_id", "text"))
+    landUnder("embeddings", (1L to 40L).map(i => (i, (0 until 8).map(d =>
+        ((i * 31 + d * 17) % 13).toFloat / 64f)))
+      .toDF("vec_id", "embedding"))
+    val ran = ArrivalPass.run(spark, cfg, new CommandLog(spark, None),
+      SystemClock)
+    assert(statuses(ran)("dedup_ingest") === "ran", ran.stages.mkString("\n"))
+    assert(statuses(ran)("ann_ingest") === "ran", ran.stages.mkString("\n"))
+    assert(spark.read.parquet(s"$base/pairs").select("doc_a", "doc_b")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet ===
+      Set((1L, 2L)))
+    val store = new graft.pipeline.IncrementalAnn.AnnIndexStore(
+      spark, s"$base/ann")
+    assert(store.load().get.count() === 40L)
+    assert(store.centroids.nonEmpty)
+  }
+
   test("stage isolation: a FAILED stage (corrupt vector feed) is " +
       "captured with an error audit row and the pass CONTINUES — a " +
       "broken feed must not block document QC (CE:204-222 contract)") {

@@ -197,38 +197,6 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1))).toSet === Set((10L, 11L)))
   }
 
-  test("Main --dedup-ingest source probe: an empty landing dir skips " +
-      "gracefully; a PARTITIONED landing layout (date=.../part.parquet) " +
-      "is detected by the recursive probe and reaches the stream") {
-    import java.nio.file.{Files, Paths}
-    import spark.implicits._
-    val base = Files.createTempDirectory("graft-mainprobe").toString
-    val src = s"$base/src"; Files.createDirectories(Paths.get(src))
-    val cp = s"$base/cp"; val out = s"$base/out"
-    val storePath = s"$base/sigs"
-    // 1. landing dir exists but is empty: the probe must skip the
-    // stream instead of dying in schema inference, and report 0 pairs
-    graft.Main.dedupIngestRun(spark, src, storePath, cp, out)
-    assert(!Files.exists(Paths.get(out)),
-      "no arrivals -> no batch may have been processed")
-    // 2. arrivals land under a partition subdir — the round-10 probe
-    // only looked at top-level entries and silently skipped this layout
-    val docs = Seq((1L, "alpha beta alpha beta"),
-      (2L, "alpha beta alpha beta"), (3L, "gamma delta gamma"))
-    val stage = s"$base/stage"
-    docs.toDF("doc_id", "text").coalesce(1).write.parquet(stage)
-    val part = Files.list(Paths.get(stage)).toArray.map(_.toString)
-      .find(_.endsWith(".parquet")).get
-    Files.createDirectories(Paths.get(s"$src/date=2026-01-01"))
-    Files.copy(Paths.get(part),
-      Paths.get(s"$src/date=2026-01-01/arrival-1.parquet"))
-    graft.Main.dedupIngestRun(spark, src, storePath, cp, out)
-    val pairs = spark.read.parquet(s"$out/batch_id=0")
-      .select("doc_a", "doc_b").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs === Set((1L, 2L)))
-  }
-
   test("incrementalDedupStream: a crash BETWEEN the pair write and the " +
       "store update replays to byte-identical pairs and a converged " +
       "store") {
@@ -739,36 +707,6 @@ class StreamingSpec extends AnyFunSuite {
         s(2).asInstanceOf[Long]))
     assert(streamedKeys.size === batch.size)
     assert(streamedKeys === batch)
-  }
-
-  test("Main --ann-ingest source probe: an empty landing dir skips " +
-      "gracefully; a partitioned landing layout reaches the stream " +
-      "and bootstraps the index") {
-    import java.nio.file.{Files, Paths}
-    import spark.implicits._
-    val base = Files.createTempDirectory("graft-annprobe").toString
-    val src = s"$base/src"; Files.createDirectories(Paths.get(src))
-    val cp = s"$base/cp"; val storePath = s"$base/ann"
-    // 1. empty landing dir: skip, no store created
-    graft.Main.annIngestRun(spark, src, storePath, cp)
-    assert(!Files.exists(Paths.get(storePath)),
-      "no arrivals -> no store may have been bootstrapped")
-    // 2. arrivals under a partition subdir reach the stream
-    val stage = s"$base/stage"
-    (1L to 40L).map(i => (i, (0 until 8).map(d =>
-        ((i * 31 + d * 17) % 13).toFloat / 64f)))
-      .toDF("vec_id", "embedding")
-      .coalesce(1).write.parquet(stage)
-    val part = Files.list(Paths.get(stage)).toArray.map(_.toString)
-      .find(_.endsWith(".parquet")).get
-    Files.createDirectories(Paths.get(s"$src/date=2026-01-01"))
-    Files.copy(Paths.get(part),
-      Paths.get(s"$src/date=2026-01-01/arrival-1.parquet"))
-    graft.Main.annIngestRun(spark, src, storePath, cp)
-    val store = new graft.pipeline.IncrementalAnn.AnnIndexStore(
-      spark, storePath)
-    assert(store.load().get.count() === 40L)
-    assert(store.centroids.nonEmpty)
   }
 
   test("incrementalAnnStream: epoch 0 bootstraps the index, later " +
