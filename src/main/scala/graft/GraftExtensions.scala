@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{GraftSqlBridge, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
-import graft.functions.{FloatDot, NGramShingles, WinnowFingerprint}
+import graft.functions.{FloatDot, Kernel, Shingles, Winnow}
 
 /** SparkSessionExtensions entry point: registers graft's custom Catalyst
   * expressions as SQL functions so `spark.sql("... float_dot(a, b) ...")`
@@ -18,85 +18,70 @@ import graft.functions.{FloatDot, NGramShingles, WinnowFingerprint}
   * }}}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("float_dot"),
-      new ExpressionInfo(classOf[FloatDot].getName, "float_dot"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        GraftExtensions.buildFloatDot(children)))
-    ext.injectFunction((
-      new FunctionIdentifier("winnow_fingerprint"),
-      new ExpressionInfo(classOf[WinnowFingerprint].getName,
-        "winnow_fingerprint"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        GraftExtensions.buildWinnow(children)))
-    ext.injectFunction((
-      new FunctionIdentifier("shingle_ngrams"),
-      new ExpressionInfo(classOf[NGramShingles].getName, "shingle_ngrams"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        GraftExtensions.buildShingles(children)))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach { f =>
+      ext.injectFunction((new FunctionIdentifier(f.name),
+        new ExpressionInfo(f.cls.getName, f.name), f.build))
+    }
 }
 
 object GraftExtensions {
-  private[graft] def buildFloatDot(
-      children: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : FloatDot = {
-    require(children.length == 2,
-      s"float_dot requires exactly 2 arguments, got ${children.length}")
-    FloatDot(children(0), children(1))
+
+  /** One SQL function: `signature` is its usage, `exprs` leading
+    * arguments are expressions and the rest are literals that may be left
+    * off, taking `defaults` (whose types they must have). `make` gets the
+    * expressions followed by the literal values. */
+  private final case class SqlFunction(signature: String, cls: Class[_],
+      exprs: Int, defaults: Seq[Any])(make: PartialFunction[Seq[Any], Expression]) {
+    val name: String = signature.takeWhile(_ != '(')
+
+    def build(children: Seq[Expression]): Expression = {
+      val n = children.length
+      if (defaults.isEmpty) require(n == exprs,
+        s"$name requires exactly $exprs arguments, got $n")
+      else require(n >= exprs && n <= exprs + defaults.length,
+        s"$signature takes $exprs-${exprs + defaults.length} arguments, got $n")
+      val literals = defaults.zipWithIndex.map { case (d, j) =>
+        children.lift(exprs + j) match {
+          case None => d
+          case Some(Literal(v, _)) if v != null && v.getClass == d.getClass => v
+          case Some(other) =>
+            val kind = d match { case _: Boolean => "a boolean"; case _ => "an int" }
+            throw new IllegalArgumentException(
+              s"$name argument ${exprs + j + 1} must be $kind literal, got $other")
+        }
+      }
+      make(children.take(exprs) ++ literals)
+    }
   }
 
-  private[graft] def buildWinnow(
-      children: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : WinnowFingerprint = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    def intArg(i: Int, default: Int): Int = children.lift(i) match {
-      case None => default
-      case Some(Literal(v: Int, _)) => v
-      case Some(other) => throw new IllegalArgumentException(
-        s"winnow_fingerprint argument ${i + 1} must be an int literal, got $other")
-    }
-    require(children.nonEmpty && children.length <= 4,
-      s"winnow_fingerprint(text[, k, w, maxPieces]) takes 1-4 arguments, " +
-        s"got ${children.length}")
-    WinnowFingerprint(children.head, intArg(1, 8), intArg(2, 16),
-      intArg(3, 8))
-  }
+  private def col(e: Any) = GraftSqlBridge.column(e.asInstanceOf[Expression])
 
-  /** `shingle_ngrams(text[, n, skipEmpty, distinct])` — defaults to the
-    * word-bigram keep-empty non-distinct form. */
-  private[graft] def buildShingles(
-      children: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : NGramShingles = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    def intArg(i: Int, default: Int): Int = children.lift(i) match {
-      case None => default
-      case Some(Literal(v: Int, _)) => v
-      case Some(other) => throw new IllegalArgumentException(
-        s"shingle_ngrams argument ${i + 1} must be an int literal, got $other")
-    }
-    def boolArg(i: Int, default: Boolean): Boolean = children.lift(i) match {
-      case None => default
-      case Some(Literal(v: Boolean, _)) => v
-      case Some(other) => throw new IllegalArgumentException(
-        s"shingle_ngrams argument ${i + 1} must be a boolean literal, got $other")
-    }
-    require(children.nonEmpty && children.length <= 4,
-      s"shingle_ngrams(text[, n, skipEmpty, distinct]) takes 1-4 " +
-        s"arguments, got ${children.length}")
-    NGramShingles(children.head, intArg(1, 2), boolArg(2, default = false),
-      boolArg(3, default = false))
-  }
+  /** Every SQL function graft registers, by either route. */
+  private val functions = Seq(
+    SqlFunction("float_dot(a, b)", classOf[FloatDot], 2, Nil) {
+      case Seq(a: Expression, b: Expression) => FloatDot(a, b)
+    },
+    SqlFunction("winnow_fingerprint(text[, k, w, maxPieces])",
+        classOf[Kernel], 1, Seq(8, 16, 8)) {
+      case Seq(t, k: Int, w: Int, m: Int) =>
+        GraftSqlBridge.expression(Winnow.fingerprintCol(col(t), k, w, m))
+    },
+    // defaults: the word-bigram keep-empty non-distinct form
+    SqlFunction("shingle_ngrams(text[, n, skipEmpty, distinct])",
+        classOf[Kernel], 1, Seq(2, false, false)) {
+      case Seq(t, n: Int, skip: Boolean, distinct: Boolean) =>
+        GraftSqlBridge.expression(Shingles.ngramsCol(col(t), n, skip, distinct))
+    })
 
   /** Same registration for a session that already exists (builder
-    * extensions are ignored by getOrCreate when a session is live). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    org.apache.spark.sql.GraftSqlBridge.registerTempFunction(spark,
-      "float_dot", buildFloatDot)
-    org.apache.spark.sql.GraftSqlBridge.registerTempFunction(spark,
-      "winnow_fingerprint", buildWinnow)
-    org.apache.spark.sql.GraftSqlBridge.registerTempFunction(spark,
-      "shingle_ngrams", buildShingles)
+    * extensions are ignored by getOrCreate when a session is live). Also
+    * sets the session's nanosecond-timestamp mapping, as
+    * [[SessionDefaults]] does at build, so a session graft is installed on
+    * later reads TIMESTAMP(NANOS) lake tables too. */
+  def register(spark: SparkSession): Unit = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    functions.foreach(f =>
+      GraftSqlBridge.registerTempFunction(spark, f.name, f.build))
   }
 }

@@ -9,7 +9,8 @@ import org.apache.spark.sql.SparkSession
   * parameterizes the scale-dependent settings from the session's core
   * count — never a local-mode constant (on a cluster, pass the intended
   * post-shuffle partition count). The test session routes through
-  * [[apply]] too. */
+  * [[apply]] too. `GraftExtensions.register` repeats the nanos-as-long
+  * mapping for a session built elsewhere. */
 object SessionDefaults {
   /** The session's core count: `SPARK_GRAFT_CPUS` if set, else the
     * processors this JVM sees. A pure function of `env` so it can be

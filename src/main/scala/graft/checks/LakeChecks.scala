@@ -110,7 +110,7 @@ object LakeChecks {
       // phase 1 allocated, even if a writer appended files in between
       val df = manifest match {
         case Some(m) => readPinned(spark, m)
-        case None => readTable(spark, t.path)
+        case None => spark.read.parquet(t.path) // as it is now
       }
       if (physicalOnly) { df.count(); 0L } // footer-driven count, no decode
       else violationCount(df, dataPurity)
@@ -168,7 +168,6 @@ object LakeChecks {
         val zero = fs.listStatus(p).filter(_.isFile)
           .filterNot(f => Seq("_", ".").exists(f.getPath.getName.startsWith))
           .count(_.getLen == 0L).toLong
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         val df = spark.read.option("basePath", t.path).parquet(p.toString)
         zero + violationCount(df, dataPurity)
       }
@@ -203,14 +202,14 @@ object LakeChecks {
   /** The schema `spark.read.parquet(m.paths: _*)` would infer, read on
     * the driver with no Spark job: like Spark's non-merging inference, it
     * decodes the first pinned file's footer. Lake tables may carry
-    * TIMESTAMP(NANOS), which Spark refuses without the legacy mapping — a
+    * TIMESTAMP(NANOS), which Spark refuses without the legacy mapping
+    * every graft session carries (`SessionDefaults`, `GraftExtensions`) — a
     * legal table must not surface as a violation. An empty manifest
     * throws; callers guard on `m.files.isEmpty` first where that is a
     * violation. */
   private[graft] def pinnedSchema(spark: SparkSession, m: TableManifest)
       : StructType = {
     require(m.files.nonEmpty, "empty manifest: no schema to read")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     GraftSqlBridge.parquetFooterSchema(spark, new Path(m.paths.head))
   }
 
@@ -228,13 +227,6 @@ object LakeChecks {
       p.getFileSystem(conf).getFileStatus(p)
     }
     schema
-  }
-
-  /** The unpinned read: the table directory as it is now, partitions
-    * included. Nanosecond timestamps as in [[pinnedSchema]]. */
-  private def readTable(spark: SparkSession, path: String) = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(path)
   }
 
   /** Read EXACTLY a pinned manifest's files (explicit file list — Spark

@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Bottom-k distinct md5 sketch of an in-row shingle array, joined with
@@ -61,37 +59,9 @@ object BottomHashes {
   }
 
   /** Column form over an ARRAY<STRING> shingle column. */
-  def bottomKCol(c: Column, k: Int): Column =
-    GraftSqlBridge.column(
-      BottomHashesExpr(GraftSqlBridge.expression(c), k))
-}
-
-/** Catalyst wrapper for [[BottomHashes.bottomK]]. */
-case class BottomHashesExpr(child: Expression, k: Int)
-    extends UnaryExpression {
-  require(k >= 1, s"bottom_hashes needs k >= 1, got $k")
-
-  override def dataType: DataType = StringType
-
-  override def prettyName: String = "bottom_hashes"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires ARRAY<STRING>, got ${t.simpleString}")
-    }
+  def bottomKCol(c: Column, k: Int): Column = {
+    require(k >= 1, s"bottom_hashes needs k >= 1, got $k")
+    Kernel.col(this, "bottomK", "bottom_hashes",
+      Seq(c -> ArrayType(StringType)), StringType, k)
   }
-
-  override def nullSafeEval(v: Any): Any =
-    BottomHashes.bottomK(v.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.BottomHashes.bottomK($c, $k);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

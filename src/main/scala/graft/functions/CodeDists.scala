@@ -1,10 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -27,7 +24,8 @@ import org.apache.spark.sql.types._
   * expression-eval overhead the Shingles kernel removed from the dedup
   * chains, here sitting inside every sim07/sim08/sim09/dd09 assignment.
   * The kernel is a tight long-arithmetic loop inside whole-stage codegen
-  * (centroids ride along as a plan reference object, k·dims longs).
+  * (centroids ride along as a plan reference object, k·dims longs; held
+  * as Seq constants of the [[Kernel]] so plan equality stays structural).
   */
 object CodeDists {
 
@@ -35,8 +33,8 @@ object CodeDists {
     StructField("dist2", LongType, nullable = false),
     StructField("cluster", IntegerType, nullable = false)))
 
-  private[functions] val arrayType =
-    ArrayType(elemType, containsNull = false)
+  private val arrayType = ArrayType(elemType, containsNull = false)
+  private val codes = ArrayType(LongType)
 
   /** Static kernel: distances of `qv` against every centroid, in order. */
   def l2(qv: ArrayData, clusters: Array[Int],
@@ -63,18 +61,18 @@ object CodeDists {
   /** Column form: distance structs of an ARRAY<BIGINT> code column
     * against one literal codebook (cluster id, centroid) list. */
   def l2Col(qv: Column, centroids: Seq[(Int, Array[Long])]): Column =
-    GraftSqlBridge.column(L2CodeDists(GraftSqlBridge.expression(qv),
+    Kernel.col(this, "l2", "l2_code_dists", Seq(qv -> codes), arrayType,
       centroids.map(_._1).toIndexedSeq,
-      centroids.map(_._2.toIndexedSeq).toIndexedSeq))
+      centroids.map(_._2.toIndexedSeq).toIndexedSeq)
 
   /** Column form: per-subspace codebooks, selected by the `sub` column
     * (0-based) — the PQ trainer's shape. */
   def l2SubCol(qv: Column, sub: Column,
       codebooks: Seq[Seq[(Int, Array[Long])]]): Column =
-    GraftSqlBridge.column(PqCodeDists(GraftSqlBridge.expression(qv),
-      GraftSqlBridge.expression(sub),
+    Kernel.col(this, "l2Sub", "pq_code_dists",
+      Seq(qv -> codes, sub -> IntegerType), arrayType,
       codebooks.map(_.map(_._1).toIndexedSeq).toIndexedSeq,
-      codebooks.map(_.map(_._2.toIndexedSeq).toIndexedSeq).toIndexedSeq))
+      codebooks.map(_.map(_._2.toIndexedSeq).toIndexedSeq).toIndexedSeq)
 
   /** Static kernel: squared-L2 between two code vectors — the pairwise
     * form (both sides are columns, e.g. a probe row against a cell
@@ -92,119 +90,6 @@ object CodeDists {
     * IVF search (exact integer arithmetic: engines and runs can never
     * disagree on an ordering). */
   def l2PairCol(a: Column, b: Column): Column =
-    GraftSqlBridge.column(L2CodePair(GraftSqlBridge.expression(a),
-      GraftSqlBridge.expression(b)))
-}
-
-/** Catalyst wrapper for [[CodeDists.l2]]. Centroids are Seq-typed fields
-  * so plan equality stays structural. */
-case class L2CodeDists(child: Expression, clusters: IndexedSeq[Int],
-    cents: IndexedSeq[IndexedSeq[Long]]) extends UnaryExpression {
-  require(clusters.length == cents.length,
-    "one cluster id per centroid row")
-
-  @transient private lazy val clArr = clusters.toArray
-  @transient private lazy val ctArr = cents.map(_.toArray).toArray
-
-  override def dataType: DataType = CodeDists.arrayType
-  override def prettyName: String = "l2_code_dists"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    child.dataType match {
-      case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires ARRAY<BIGINT>, got ${t.simpleString}")
-    }
-  }
-
-  override def nullSafeEval(qv: Any): Any =
-    CodeDists.l2(qv.asInstanceOf[ArrayData], clArr, ctArr)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cl = ctx.addReferenceObj("clusters", clArr, "int[]")
-    val ct = ctx.addReferenceObj("cents", ctArr, "long[][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.CodeDists.l2($c, $cl, $ct);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Catalyst wrapper for [[CodeDists.l2Pair]]: exact integer squared-L2
-  * between two ARRAY<BIGINT> code columns. */
-case class L2CodePair(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "l2_code_pair"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires two ARRAY<BIGINT> arguments, got " +
-          s"(${l.simpleString}, ${r.simpleString})")
-    }
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    CodeDists.l2Pair(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.CodeDists.l2Pair($a, $b);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Catalyst wrapper for [[CodeDists.l2Sub]]: left = the code slice,
-  * right = the 0-based subspace id picking the codebook. */
-case class PqCodeDists(left: Expression, right: Expression,
-    clusters: IndexedSeq[IndexedSeq[Int]],
-    cents: IndexedSeq[IndexedSeq[IndexedSeq[Long]]])
-    extends BinaryExpression {
-  require(clusters.length == cents.length,
-    "one cluster-id list per subspace codebook")
-
-  @transient private lazy val clArr = clusters.map(_.toArray).toArray
-  @transient private lazy val ctArr =
-    cents.map(_.map(_.toArray).toArray).toArray
-
-  override def dataType: DataType = CodeDists.arrayType
-  override def prettyName: String = "pq_code_dists"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), IntegerType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (ARRAY<BIGINT>, INT), got " +
-          s"(${l.simpleString}, ${r.simpleString})")
-    }
-  }
-
-  override def nullSafeEval(qv: Any, sub: Any): Any =
-    CodeDists.l2Sub(qv.asInstanceOf[ArrayData], sub.asInstanceOf[Int],
-      clArr, ctArr)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cl = ctx.addReferenceObj("clusters", clArr, "int[][]")
-    val ct = ctx.addReferenceObj("cents", ctArr, "long[][][]")
-    nullSafeCodeGen(ctx, ev, (c, s) =>
-      s"${ev.value} = graft.functions.CodeDists.l2Sub($c, $s, $cl, $ct);")
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
+    Kernel.col(this, "l2Pair", "l2_code_pair", Seq(a -> codes, b -> codes),
+      LongType)
 }

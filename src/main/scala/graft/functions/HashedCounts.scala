@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 
 /** Hashed-feature token counts in one pass — the kernel form of tx20's
   * training fold
@@ -57,38 +55,10 @@ object HashedCounts {
   }
 
   /** Column form over an ARRAY<STRING> token column. */
-  def countsCol(c: Column, slots: Int): Column =
-    GraftSqlBridge.column(
-      HashedCountsExpr(GraftSqlBridge.expression(c), slots))
-}
-
-/** Catalyst wrapper for [[HashedCounts.counts]]. */
-case class HashedCountsExpr(child: Expression, slots: Int)
-    extends UnaryExpression {
-  require(slots >= 1, s"hashed_counts needs slots >= 1, got $slots")
-
-  override def dataType: DataType =
-    ArrayType(LongType, containsNull = false)
-
-  override def prettyName: String = "hashed_counts"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires ARRAY<STRING>, got ${t.simpleString}")
-    }
+  def countsCol(c: Column, slots: Int): Column = {
+    require(slots >= 1, s"hashed_counts needs slots >= 1, got $slots")
+    Kernel.col(this, "counts", "hashed_counts",
+      Seq(c -> ArrayType(StringType)),
+      ArrayType(LongType, containsNull = false), slots)
   }
-
-  override def nullSafeEval(v: Any): Any =
-    HashedCounts.counts(v.asInstanceOf[ArrayData], slots)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.HashedCounts.counts($c, $slots);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-row k=8 seeded-md5 minhash signature over an in-row shingle
@@ -74,34 +72,6 @@ object MinhashSig {
 
   /** Column form over an ARRAY<STRING> shingle column. */
   def sigCol(c: Column): Column =
-    GraftSqlBridge.column(MinhashSigExpr(GraftSqlBridge.expression(c)))
-}
-
-/** Catalyst wrapper for [[MinhashSig.sig]]. */
-case class MinhashSigExpr(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType =
-    ArrayType(StringType, containsNull = false)
-
-  override def prettyName: String = "minhash_sig"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires ARRAY<STRING>, got ${t.simpleString}")
-    }
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    MinhashSig.sig(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.MinhashSig.sig($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+    Kernel.col(this, "sig", "minhash_sig", Seq(c -> ArrayType(StringType)),
+      ArrayType(StringType, containsNull = false))
 }

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -116,75 +114,27 @@ object PairExpand {
     new GenericArrayData(out)
   }
 
+  private def pairsOf(a: String, b: String, t: DataType) = ArrayType(
+    StructType(Seq(StructField(a, t, nullable = false),
+      StructField(b, t, nullable = false))), containsNull = false)
+
+  private def expand(method: String, c: Column, in: DataType,
+      out: DataType): Column =
+    Kernel.col(this, method, "pair_expand", Seq(c -> in), out)
+
   /** Column form: ARRAY<BIGINT> ids → ARRAY<STRUCT<doc_a, doc_b>>. */
-  def pairsCol(c: Column): Column =
-    GraftSqlBridge.column(
-      PairExpandExpr(GraftSqlBridge.expression(c), "long"))
+  def pairsCol(c: Column): Column = expand("pairsLong", c,
+    ArrayType(LongType), pairsOf("doc_a", "doc_b", LongType))
 
   /** Column form: ARRAY<STRUCT<doc_id, prev_key>> →
     * ARRAY<STRUCT<doc_a, doc_b>> with same-prev_key pairs suppressed. */
-  def pairsUnseenCol(c: Column): Column =
-    GraftSqlBridge.column(
-      PairExpandExpr(GraftSqlBridge.expression(c), "unseen"))
+  def pairsUnseenCol(c: Column): Column = expand("pairsUnseen", c,
+    ArrayType(StructType(Seq(StructField("doc_id", LongType),
+      StructField("prev_key", StringType)))),
+    pairsOf("doc_a", "doc_b", LongType))
 
   /** Column form: ARRAY<STRING> srcs →
     * ARRAY<STRUCT<src_a, src_b>> pairs + (x, '') total markers. */
-  def pairsStrTaggedCol(c: Column): Column =
-    GraftSqlBridge.column(
-      PairExpandExpr(GraftSqlBridge.expression(c), "strTagged"))
-}
-
-/** Catalyst wrapper for [[PairExpand]]; mode ∈ long|unseen|strTagged. */
-case class PairExpandExpr(child: Expression, mode: String)
-    extends UnaryExpression {
-  require(Set("long", "unseen", "strTagged")(mode),
-    s"pair_expand mode must be long|unseen|strTagged, got $mode")
-
-  override def dataType: DataType =
-    if (mode == "strTagged") ArrayType(
-      StructType(Seq(StructField("src_a", StringType, nullable = false),
-        StructField("src_b", StringType, nullable = false))),
-      containsNull = false)
-    else ArrayType(
-      StructType(Seq(StructField("doc_a", LongType, nullable = false),
-        StructField("doc_b", LongType, nullable = false))),
-      containsNull = false)
-
-  override def prettyName: String = "pair_expand"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    (mode, child.dataType) match {
-      case ("long", ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case ("strTagged", ArrayType(StringType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case ("unseen", ArrayType(s: StructType, _))
-          if s.length == 2 && s(0).dataType == LongType &&
-            s(1).dataType == StringType =>
-        TypeCheckResult.TypeCheckSuccess
-      case (m, t) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName(mode=$m) got ${t.simpleString}")
-    }
-  }
-
-  private val kernel = mode match {
-    case "long" => "pairsLong"
-    case "unseen" => "pairsUnseen"
-    case "strTagged" => "pairsStrTagged"
-  }
-
-  override def nullSafeEval(v: Any): Any = mode match {
-    case "long" => PairExpand.pairsLong(v.asInstanceOf[ArrayData])
-    case "unseen" => PairExpand.pairsUnseen(v.asInstanceOf[ArrayData])
-    case "strTagged" => PairExpand.pairsStrTagged(v.asInstanceOf[ArrayData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.PairExpand.$kernel($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  def pairsStrTaggedCol(c: Column): Column = expand("pairsStrTagged", c,
+    ArrayType(StringType), pairsOf("src_a", "src_b", StringType))
 }

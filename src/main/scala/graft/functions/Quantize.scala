@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
 
 /** Fixed-scale int8 scalar quantization of a float vector — the codegen'd
   * kernel form of
@@ -51,44 +49,11 @@ object Quantize {
     new GenericArrayData(out)
   }
 
-  def toLongsCol(c: Column): Column =
-    GraftSqlBridge.column(
-      QuantizeI8(GraftSqlBridge.expression(c), asFloat = false))
+  private def quantize(method: String, c: Column, code: DataType): Column =
+    Kernel.col(this, method, "quantize_i8", Seq(c -> ArrayType(FloatType)),
+      ArrayType(code, containsNull = false))
 
-  def toFloatsCol(c: Column): Column =
-    GraftSqlBridge.column(
-      QuantizeI8(GraftSqlBridge.expression(c), asFloat = true))
-}
+  def toLongsCol(c: Column): Column = quantize("toLongs", c, LongType)
 
-/** Catalyst wrapper for the [[Quantize]] kernels. */
-case class QuantizeI8(child: Expression, asFloat: Boolean)
-    extends UnaryExpression {
-
-  override def dataType: DataType =
-    ArrayType(if (asFloat) FloatType else LongType, containsNull = false)
-
-  override def prettyName: String = "quantize_i8"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    child.dataType match {
-      case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires ARRAY<FLOAT>, got ${t.simpleString}")
-    }
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    if (asFloat) Quantize.toFloats(v.asInstanceOf[ArrayData])
-    else Quantize.toLongs(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val m = if (asFloat) "toFloats" else "toLongs"
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.Quantize.$m($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  def toFloatsCol(c: Column): Column = quantize("toFloats", c, FloatType)
 }

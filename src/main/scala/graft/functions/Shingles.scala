@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Word n-gram shingles of a document in ONE byte-level pass — the
@@ -106,7 +104,7 @@ object Shingles {
     }
   }
 
-  /** Back-compat entry used by generated code and the bigram wrappers. */
+  /** Word bigrams, keep-empty tokenization: [[ngrams]] with n = 2. */
   def bigrams(s: UTF8String, distinct: Boolean): ArrayData =
     ngrams(s, 2, skipEmpty = false, distinct = distinct)
 
@@ -170,74 +168,19 @@ object Shingles {
 
   /** Column form: word n-gram shingles with explicit tokenization. */
   def ngramsCol(c: Column, n: Int, skipEmpty: Boolean,
-      distinct: Boolean): Column =
-    GraftSqlBridge.column(
-      NGramShingles(GraftSqlBridge.expression(c), n, skipEmpty, distinct))
+      distinct: Boolean): Column = {
+    require(n >= 1, s"shingle_ngrams needs n >= 1, got $n")
+    grams("ngrams", "shingle_ngrams", c, n, skipEmpty, distinct)
+  }
 
   /** Column form: character (codepoint) n-grams. */
-  def charNgramsCol(c: Column, n: Int, distinct: Boolean): Column =
-    GraftSqlBridge.column(
-      CharNGrams(GraftSqlBridge.expression(c), n, distinct))
-}
-
-/** Catalyst expression wrapper: stays inside whole-stage codegen by
-  * emitting a direct static call to the compiled kernel (the standard
-  * pattern for kernels too large to inline as generated Java). */
-case class NGramShingles(child: Expression, n: Int, skipEmpty: Boolean,
-    distinct: Boolean) extends UnaryExpression {
-  require(n >= 1, s"shingle_ngrams needs n >= 1, got $n")
-
-  override def dataType: DataType =
-    ArrayType(StringType, containsNull = false)
-
-  override def prettyName: String = "shingle_ngrams"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got " +
-        child.dataType.simpleString)
+  def charNgramsCol(c: Column, n: Int, distinct: Boolean): Column = {
+    require(n >= 1, s"char_ngrams needs n >= 1, got $n")
+    grams("charNgrams", "char_ngrams", c, n, distinct)
   }
 
-  override def nullSafeEval(s: Any): Any =
-    Shingles.ngrams(s.asInstanceOf[UTF8String], n, skipEmpty, distinct)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.Shingles.ngrams($c, $n, $skipEmpty, $distinct);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Catalyst wrapper for [[Shingles.charNgrams]]. */
-case class CharNGrams(child: Expression, n: Int, distinct: Boolean)
-    extends UnaryExpression {
-  require(n >= 1, s"char_ngrams needs n >= 1, got $n")
-
-  override def dataType: DataType =
-    ArrayType(StringType, containsNull = false)
-
-  override def prettyName: String = "char_ngrams"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got " +
-        child.dataType.simpleString)
-  }
-
-  override def nullSafeEval(s: Any): Any =
-    Shingles.charNgrams(s.asInstanceOf[UTF8String], n, distinct)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.Shingles.charNgrams($c, $n, $distinct);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  private def grams(method: String, name: String, c: Column,
+      consts: Any*): Column =
+    Kernel.col(this, method, name, Seq(c -> StringType),
+      ArrayType(StringType, containsNull = false), consts: _*)
 }

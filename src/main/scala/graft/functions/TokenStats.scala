@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-row type statistics of a token array in ONE hash pass —
@@ -39,8 +37,11 @@ object TokenStats {
   }
 
   /** Column form over an ARRAY<STRING> token column. */
-  def typeStatsCol(c: Column): Column =
-    GraftSqlBridge.column(TokenTypeStats(GraftSqlBridge.expression(c)))
+  def typeStatsCol(c: Column): Column = stats("typeStats", "token_type_stats", c)
+
+  private def stats(method: String, name: String, c: Column): Column =
+    Kernel.col(this, method, name, Seq(c -> ArrayType(StringType)),
+      ArrayType(LongType, containsNull = false))
 
   /** Static kernel: `[Σ char-length, #tokens containing an ASCII
     * letter]` — the Gopher mean-word-length and alpha-word inputs in one
@@ -71,64 +72,5 @@ object TokenStats {
   }
 
   /** Column form over an ARRAY<STRING> token column. */
-  def wordStatsCol(c: Column): Column =
-    GraftSqlBridge.column(TokenWordStats(GraftSqlBridge.expression(c)))
-}
-
-/** Catalyst wrapper for [[TokenStats.typeStats]]. */
-case class TokenTypeStats(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType =
-    ArrayType(LongType, containsNull = false)
-
-  override def prettyName: String = "token_type_stats"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires ARRAY<STRING>, got ${t.simpleString}")
-    }
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    TokenStats.typeStats(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TokenStats.typeStats($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Catalyst wrapper for [[TokenStats.wordStats]]. */
-case class TokenWordStats(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType =
-    ArrayType(LongType, containsNull = false)
-
-  override def prettyName: String = "token_word_stats"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires ARRAY<STRING>, got ${t.simpleString}")
-    }
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    TokenStats.wordStats(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TokenStats.wordStats($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  def wordStatsCol(c: Column): Column = stats("wordStats", "token_word_stats", c)
 }

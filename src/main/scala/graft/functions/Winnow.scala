@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Rolling-hash winnowing fingerprint (the MOSS/winnowing scheme): Rabin-
@@ -136,39 +134,10 @@ object Winnow {
 
   /** Column form: winnowing fingerprint of a string column. */
   def fingerprintCol(c: Column, k: Int = 8, w: Int = 16,
-      maxPieces: Int = 8): Column =
-    GraftSqlBridge.column(
-      WinnowFingerprint(GraftSqlBridge.expression(c), k, w, maxPieces))
-}
-
-/** Catalyst expression wrapper: stays inside whole-stage codegen by
-  * emitting a direct static call to the compiled kernel (the standard
-  * pattern for kernels too large to inline as generated Java). */
-case class WinnowFingerprint(child: Expression, k: Int, w: Int,
-    maxPieces: Int) extends UnaryExpression {
-  require(k >= 1 && w >= 1 && maxPieces >= 1,
-    s"winnow_fingerprint needs positive k/w/maxPieces, got $k/$w/$maxPieces")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def prettyName: String = "winnow_fingerprint"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got " +
-        child.dataType.simpleString)
+      maxPieces: Int = 8): Column = {
+    require(k >= 1 && w >= 1 && maxPieces >= 1,
+      s"winnow_fingerprint needs positive k/w/maxPieces, got $k/$w/$maxPieces")
+    Kernel.col(this, "fingerprint", "winnow_fingerprint", Seq(c -> StringType),
+      ArrayType(LongType, containsNull = false), k, w, maxPieces)
   }
-
-  override def nullSafeEval(s: Any): Any =
-    Winnow.fingerprint(s.asInstanceOf[UTF8String], k, w, maxPieces)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.Winnow.fingerprint($c, $k, $w, $maxPieces);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

@@ -84,9 +84,6 @@ object IncrementalScheduler {
     var skippedCost = 0L
     var violations = 0L
     var errors = 0L
-    // events.parquet-style TIMESTAMP(NANOS) columns stream as longs, the
-    // same legacy switch Tables.events uses for the batch tier
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val quiet = ArrayBuffer.empty[String]
     // per-TABLE duration history for IC:677 predicted-cost admission —
     // the same incremental-mean file the arrival pass keeps per stage

@@ -52,10 +52,6 @@ final class Scheduler(
 
   def run(): SchedulerReport = {
     config.validate().left.foreach(e => throw new IllegalArgumentException(e))
-    // Lake tables may carry TIMESTAMP(NANOS) (e.g. the events fixture) —
-    // without this, Spark refuses the footer and a legal table would be
-    // reported as a violation. Same mapping Tables.events uses.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val jobStart = clock.now() // captured ONCE (ref IC:71)
     val deadline = config.timeLimitSeconds.map(s => jobStart.plusSeconds(s))
     val halfway = config.timeLimitSeconds

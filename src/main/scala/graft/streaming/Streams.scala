@@ -29,7 +29,6 @@ object Streams {
     * ns-as-long shim as graft.tables.Tables.events (fixture generations
     * have shipped `ts` both as TIMESTAMP(NANOS) and as timestamp[us]). */
   def eventsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
     // the file source wants a directory: glob-filter the sf dir down to
     // the events table

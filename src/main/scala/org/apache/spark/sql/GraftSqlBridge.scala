@@ -20,7 +20,7 @@ import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetToSparkSchemaConverter}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Bridge into Spark's `private[sql]` Column ⇄ Expression converters so
   * graft can attach custom Catalyst expressions (e.g.
@@ -35,6 +35,11 @@ import org.apache.spark.sql.types.StructType
 object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** Spark's own shape compare (private[sql]): the same types, ignoring
+    * nullability and struct field names. */
+  def sameShape(a: DataType, b: DataType): Boolean =
+    DataType.equalsStructurally(a, b, ignoreNullability = true)
 
   /** Register a function on an ALREADY-RUNNING session (extensions only
     * apply when the session is first built). */

@@ -106,6 +106,18 @@ class SessionDefaultsSpec extends AnyFunSuite {
       Seq("src/main/scala/graft/tables/StoreLease.scala"))
   }
 
+  test("the nanosecond-timestamp mapping is set only where a session " +
+      "gets graft: SessionDefaults and GraftExtensions") {
+    // set mid-run, it wrote shared session conf, from pool threads in
+    // concurrent mode
+    val setter = """"spark\.sql\.legacy\.parquet\.nanosAsLong"\s*,""".r
+    val hits = mainSources.collect {
+      case (p, src) if setter.findFirstIn(src).isDefined => p.toString
+    }.sorted
+    assert(hits === Seq("src/main/scala/graft/GraftExtensions.scala",
+      "src/main/scala/graft/SessionDefaults.scala"))
+  }
+
   test("the only mains under src/main are Main, Bench, Verify, Dev and " +
       "pipeline.ScaleVerify") {
     // a new tool is a Dev subcommand on Dev's one session, not a main

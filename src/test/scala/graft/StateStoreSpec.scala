@@ -201,23 +201,4 @@ class StateStoreSpec extends AnyFunSuite {
     assert(store.load().map(_.object_name) === Seq("a"))
     assert(!fs.exists(lock), "the broken lease is gone after the save")
   }
-
-  test("IncrementalMean Aggregator replays the IC:706 recurrence exactly") {
-    import SparkTestSession.spark
-    import graft.functions.IncrementalMean
-    val s2 = spark
-    import s2.implicits._
-    val durations = Seq(100L, 350L, 20L, 999L, 1L, 470L)
-    // driver-side reference recurrence (integer division each step)
-    val expected = durations.zipWithIndex.foldLeft(0L) {
-      case (avg, (d, i)) => avg + (d - avg) / (i + 1)
-    }
-    val got = durations.zipWithIndex
-      .map { case (d, i) => (i.toLong, d) }
-      .toDS()
-      .repartition(4) // prove order-independence of the shuffle
-      .select(IncrementalMean.toColumn)
-      .head()
-    assert(got === expected)
-  }
 }
