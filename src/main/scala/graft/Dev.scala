@@ -22,7 +22,8 @@ object Dev {
     "usage: graft.Dev genscale <srcDir> <dstDir> [factor] | " +
       "genskew <srcDir> <dstDir> | " +
       "plans <name,...> <sfDir> [<outDir>[:<suffix>]] | " +
-      "jobs <name,...> <sfDir> | stress <skewDir> [<mode>,...]"
+      "jobs <name,...> <sfDir> | stress <skewDir> [<mode>,...] | " +
+      "routes <table.parquet> <rows,...>"
 
   def main(args: Array[String]): Unit = {
     // parse before the session starts: a bad command line fails fast
@@ -42,6 +43,8 @@ object Dev {
       case List("jobs", names, sf) => jobs(_, list(names), sf)
       case List("stress", dir) => stress(_, dir, Seq("throw", "truncate"))
       case List("stress", dir, modes) => stress(_, dir, list(modes))
+      case List("routes", table, rows) =>
+        routes(_, table, list(rows).map(_.toLong))
       case _ => throw new IllegalArgumentException(Usage)
     }
 
@@ -151,6 +154,50 @@ object Dev {
         f"stages=${gauge.stages.get()} warm_sec=$sec%.2f")
     }
     gauge.close()
+  }
+
+  /** The CHECKTABLE route crossover behind `LakeChecks.LocalMaxBytes`
+    * and `LocalMaxRows`: for each row count, the first rows of `table`
+    * written as one file, checked at the scheduler's default tier
+    * (DATA_PURITY) through the Spark route and through the driver-local
+    * route past its row bound. Each route runs twice untimed, then five
+    * times; prints one `ROUTE` line per size with the file's bytes, each
+    * route's median ms and the jobs of its last run. */
+  private def routes(spark: SparkSession, table: String,
+      sizes: Seq[Long]): Unit = {
+    import graft.catalog.{InventoryRow, TableManifest}
+    import graft.checks.LakeChecks
+    val gauge = new Gauge(spark.sparkContext)
+    val root = java.nio.file.Files.createTempDirectory("graft-routes")
+    try sizes.foreach { n =>
+      val dir = s"$root/t$n.parquet"
+      spark.read.parquet(table).limit(n.toInt).coalesce(1)
+        .write.mode("overwrite").parquet(dir)
+      val m = TableManifest.capture(spark,
+        InventoryRow("db", "main", s"t$n", "U", 0L, dir))
+      def time(route: () => Long): (Double, Long, Long) = {
+        Seq.fill(2)(route())
+        val ms = Seq.fill(5) {
+          val t0 = System.nanoTime()
+          gauge.measure(s"route $n")(route())
+          (System.nanoTime() - t0) / 1e6
+        }.sorted
+        (ms(2), gauge.jobs.get(), route())
+      }
+      val (sparkMs, sparkJobs, v1) = time(() => LakeChecks.sparkRoute(
+        spark, m, physicalOnly = false, dataPurity = true))
+      val (localMs, localJobs, v2) = time(() => LakeChecks.localRoute(
+        spark, m, physicalOnly = false, dataPurity = true, Long.MaxValue).get)
+      require(v1 == v2, s"routes disagree at $n rows: $v1 vs $v2")
+      println(f"ROUTE rows=$n bytes=${m.files.map(_.length).sum} " +
+        f"spark_ms=$sparkMs%.1f spark_jobs=$sparkJobs " +
+        f"local_ms=$localMs%.1f local_jobs=$localJobs violations=$v1")
+    } finally {
+      gauge.close()
+      val tmp = new org.apache.hadoop.fs.Path(root.toUri)
+      tmp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(tmp, true)
+    }
   }
 
   private val StressTier = Seq(

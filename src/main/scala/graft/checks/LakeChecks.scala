@@ -1,5 +1,7 @@
 package graft.checks
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge,
   SparkSession}
@@ -14,19 +16,24 @@ import graft.functions.Strings.quoteName
   * reproduces the reference's command-text format so dry-run goldens are
   * meaningful (ref IntegrityChecks_VLDB.sql:547-555, 683-687), and the
   * action returns a violation count. The coarse checks (CHECKALLOC,
-  * CHECKCATALOG) run no Spark job, and a pinned CHECKTABLE runs one Spark
-  * action, its scan's aggregate. (Adaptive execution submits that
+  * CHECKCATALOG) run no Spark job. A pinned CHECKTABLE of at most
+  * [[LakeChecks.LocalMaxBytes]] and [[LakeChecks.LocalMaxRows]] runs no
+  * Spark job either: its files are decoded on the driver and the
+  * violation conditions folded over a `LocalRelation`, which costs about
+  * 50 ms plus a few microseconds per row, against about 200 ms for a
+  * Spark action of any size. A larger (or unpinned) CHECKTABLE runs one
+  * Spark action, its scan's aggregate. (Adaptive execution submits that
   * aggregate's shuffle map stage as a job of its own, and Spark lists more
   * files than `spark.sql.sources.parallelPartitionDiscovery.threshold` in
   * a job too.)
   *
   * Scale notes: CHECKALLOC/CHECKCATALOG touch only filesystem metadata and
-  * parquet footers, read on the driver (no data scan). CHECKTABLE is
-  * exactly one full scan with map-side partial aggregation — the minimal
-  * plan for content validation — and its PHYSICAL_ONLY tier reads footers
-  * only. Every pinned schema comes from [[pinnedSchema]], never from
-  * Spark's inference, which would start a job of its own to read one
-  * footer.
+  * parquet footers, read on the driver (no data scan). A CHECKTABLE over
+  * the local ceilings is exactly one full scan with map-side partial
+  * aggregation — the minimal plan for content validation — and its
+  * PHYSICAL_ONLY tier reads footers only. Every pinned schema comes from
+  * the first pinned footer ([[pinnedSchema]]), never from Spark's
+  * inference, which would start a job of its own to read one footer.
   */
 object LakeChecks {
 
@@ -88,10 +95,16 @@ object LakeChecks {
 
   /** CHECKTABLE: full-scan content validation. Tiers (ref IC:684-687):
     *  - PHYSICAL_ONLY → footer/row-count pass only (no column profiling)
-    *  - default       → one-pass per-column profile (nulls, NaN/Inf,
-    *                    min<=max sanity) — all in a single aggregate
+    *  - default       → one-pass per-column profile (NaN/±Inf in float
+    *                    and double columns)
     *  - DATA_PURITY   → adds domain checks: string columns valid UTF-8
     *                    lengths, timestamps in sane range (ref IC:685-686)
+    *
+    * Two routes count the same [[violationConditions]]. A pinned table
+    * within [[LocalMaxBytes]] (the manifest's lengths) and
+    * [[LocalMaxRows]] (its footers) takes [[localRoute]]: no Spark job.
+    * Any other table takes the Spark route, one aggregate over the scan
+    * (two jobs under adaptive execution).
     */
   def checkTable(spark: SparkSession, t: InventoryRow, physicalOnly: Boolean,
       dataPurity: Boolean, maxDop: Int,
@@ -104,17 +117,101 @@ object LakeChecks {
       s" WITH NO_INFOMSGS, ALL_ERRORMSGS" +
       (if (opts.nonEmpty) opts.mkString(", ", ", ", "") else "") +
       maxDopSuffix(maxDop)
-    (cmd, () => {
-      // pinned manifest (ref IC:519-571): the scan covers exactly the
+    (cmd, () => manifest match {
+      // pinned manifest (ref IC:519-571): the check covers exactly the
       // run's snapshot of the table — phase 2 profiles the same rows
       // phase 1 allocated, even if a writer appended files in between
-      val df = manifest match {
-        case Some(m) => readPinned(spark, m)
-        case None => spark.read.parquet(t.path) // as it is now
-      }
-      if (physicalOnly) { df.count(); 0L } // footer-driven count, no decode
-      else violationCount(df, dataPurity)
+      case Some(m) if m.files.map(_.length).sum <= LocalMaxBytes =>
+        localRoute(spark, m, physicalOnly, dataPurity, LocalMaxRows)
+          .getOrElse(sparkRoute(spark, m, physicalOnly, dataPurity))
+      case Some(m) => sparkRoute(spark, m, physicalOnly, dataPurity)
+      case None => // as it is now
+        sparkCount(spark.read.parquet(t.path), physicalOnly, dataPurity)
     })
+  }
+
+  /* The driver-local route's ceilings, from the crossover against the
+   * Spark route's two-job floor (`Dev routes`, 4-core host, local[4],
+   * DATA_PURITY, one file of the first N rows of an sf0.1 table, median
+   * of five warm runs per route):
+   *
+   *   table     rows     bytes   spark ms  local ms
+   *   lineitem     25     4407      317        71
+   *   lineitem   1000    32.0K      213        54
+   *   lineitem   6000     142K      201        59
+   *   lineitem  20000     426K      202       129
+   *   lineitem  30000     613K      230       173
+   *   lineitem  50000     978K      195       280
+   *   lineitem 100000    1.86M      170       503
+   *   events    20000     359K      221       106
+   *   events    40000     678K      174       187
+   *   events    80000    1.30M      213       358
+   *   documents  5000     578K      233        82
+   *
+   * The Spark route costs about 200 ms whatever the size; the local
+   * route costs about 50 ms plus 4-5 us per row of these shapes, so the
+   * two cross between 30,000 and 40,000 rows. The ceilings sit below
+   * that with room to spare: 20,000 rows, and 1 MiB, which text-heavy
+   * rows (documents: 578K in 82 ms) reach well before the row bound. */
+
+  /** CHECKTABLE's driver-local route covers a pinned table of at most
+    * this many bytes on storage (the manifest's own lengths)... */
+  private[graft] val LocalMaxBytes: Long = 1L << 20
+
+  /** ... and, by its footers, at most this many rows: compressed bytes
+    * alone do not bound the driver heap (a small file of a constant
+    * column holds millions of rows), and the scheduler runs
+    * `concurrency` checks at once. */
+  private[graft] val LocalMaxRows: Long = 20000L
+
+  /** CHECKTABLE through Spark: one action over the pinned files. */
+  private[graft] def sparkRoute(spark: SparkSession, m: TableManifest,
+      physicalOnly: Boolean, dataPurity: Boolean): Long =
+    sparkCount(readPinned(spark, m), physicalOnly, dataPurity)
+
+  private def sparkCount(df: DataFrame, physicalOnly: Boolean,
+      dataPurity: Boolean): Long =
+    if (physicalOnly) { df.count(); 0L } // footer-driven count, no decode
+    else violationCount(df, dataPurity)
+
+  /** CHECKTABLE on the driver, with no Spark job: every pinned footer is
+    * opened (a missing or unreadable file throws, as the scan would; an
+    * empty file after the first is skipped, as the scan skips it);
+    * PHYSICAL_ONLY, or a schema with no checked column, stops there and
+    * decodes no page, which is all Spark's `count()` reads. Otherwise,
+    * unless the footers hold more than `maxRows` rows (None: take the
+    * Spark route), each file is decoded by Spark's parquet row reader
+    * under the first file's schema, as the scan reads it, and the
+    * violation conditions are summed per row over a `LocalRelation` and
+    * kept where positive: a filter Spark's optimizer folds on the
+    * driver, where an aggregate would still run a job. One file's rows
+    * are held at a time. */
+  private[graft] def localRoute(spark: SparkSession, m: TableManifest,
+      physicalOnly: Boolean, dataPurity: Boolean, maxRows: Long)
+      : Option[Long] = {
+    require(m.files.nonEmpty, "empty manifest: no schema to read")
+    val conf = spark.sessionState.newHadoopConf()
+    // the schema is the first file's, as in pinnedSchema; the scan reads
+    // no split of a later empty file
+    val files = (m.files.head +: m.files.tail.filter(_.length > 0))
+      .map(f => new Path(f.path))
+    val footers = files.map(GraftSqlBridge.parquetFooter(conf, _))
+    val schema = GraftSqlBridge.footerSchema(spark, files.head, footers.head)
+    val conds = if (physicalOnly) Seq.empty
+      else violationConditions(schema, dataPurity)
+    if (conds.isEmpty) Some(0L)
+    else if (footers.map(_.getBlocks.asScala.map(_.getRowCount).sum).sum >
+        maxRows) None
+    else {
+      val parquet = new GraftSqlBridge.ParquetRows(spark, schema)
+      val perRow = conds.map(when(_, 1).otherwise(0)).reduce(_ + _)
+      Some(files.zip(footers).map { case (file, footer) =>
+        val rows = parquet.read(file, footer)(_.map(_.copy()).toVector)
+        if (rows.isEmpty) 0L
+        else GraftSqlBridge.collectLocal(spark, schema, rows,
+          perRow.as("v"), col("v") > 0).map(_.getInt(0).toLong).sum
+      }.sum)
+    }
   }
 
   /** CHECKDB: the composition the vendored proc defines (ref
@@ -174,28 +271,35 @@ object LakeChecks {
     })
   }
 
-  /** One-pass violation aggregate over a DataFrame of any schema. */
+  /** One-pass violation aggregate over a DataFrame of any schema:
+    * `count(when(c, 1))` per [[violationConditions]] condition. */
   private[checks] def violationCount(df: DataFrame, dataPurity: Boolean): Long = {
-    val checks: Seq[Column] = df.schema.fields.toSeq.flatMap { f =>
-      val c = col(quoted(f.name))
-      f.dataType match {
-        case DoubleType | FloatType =>
-          Seq(count(when(isnan(c) || c === Double.PositiveInfinity ||
-            c === Double.NegativeInfinity, 1)))
-        case TimestampType if dataPurity =>
-          Seq(count(when(
-            c < lit("1900-01-01 00:00:00").cast("timestamp") ||
-              c > lit("2100-01-01 00:00:00").cast("timestamp"), 1)))
-        case StringType if dataPurity =>
-          // impossible lengths flag decode corruption
-          Seq(count(when(length(c) < 0, 1)))
-        case _ => Seq.empty
-      }
-    }
-    if (checks.isEmpty) { df.count(); 0L }
+    val conds = violationConditions(df.schema, dataPurity)
+    if (conds.isEmpty) { df.count(); 0L }
     else {
+      val checks = conds.map(c => count(when(c, 1)))
       val row = df.agg(checks.head, checks.tail: _*).head()
       (0 until row.length).map(i => row.getLong(i)).sum
+    }
+  }
+
+  /** The per-column violation conditions of a CHECKTABLE tier, the one
+    * spelling both routes count: a row violates a condition where it is
+    * true (null is no violation). */
+  private def violationConditions(schema: StructType, dataPurity: Boolean)
+      : Seq[Column] = schema.fields.toSeq.flatMap { f =>
+    val c = col(quoted(f.name))
+    f.dataType match {
+      case DoubleType | FloatType =>
+        Seq(isnan(c) || c === Double.PositiveInfinity ||
+          c === Double.NegativeInfinity)
+      case TimestampType if dataPurity =>
+        Seq(c < lit("1900-01-01 00:00:00").cast("timestamp") ||
+          c > lit("2100-01-01 00:00:00").cast("timestamp"))
+      case StringType if dataPurity =>
+        // impossible lengths flag decode corruption
+        Seq(length(c) < 0)
+      case _ => Seq.empty
     }
   }
 

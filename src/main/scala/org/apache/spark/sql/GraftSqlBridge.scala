@@ -7,19 +7,27 @@ import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapred.FileSplit
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.HadoopReadOptions
-import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader,
+  ParquetRecordReader}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.encoderFor
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression,
+  UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation,
+  Project}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.execution.datasources.{DataSourceUtils,
+  RecordReaderIterator}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
-  ParquetToSparkSchemaConverter}
+  ParquetOptions, ParquetReadSupport, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Bridge into Spark's `private[sql]` Column ⇄ Expression converters so
@@ -71,6 +79,14 @@ object GraftSqlBridge {
     ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
       HadoopReadOptions.builder(conf, file).build())
 
+  /** A parquet file's footer, read on the driver ([[openParquet]]).
+    * Throws if the file is gone, cannot be opened or its footer does not
+    * parse. */
+  def parquetFooter(conf: Configuration, file: Path): ParquetMetadata = {
+    val reader = openParquet(conf, file)
+    try reader.getFooter finally reader.close()
+  }
+
   /** The schema `spark.read.parquet` infers from one parquet file, read
     * on the driver from its footer, with no Spark job. Spark's own
     * (non-merging) inference reads the footer of one file and converts
@@ -81,45 +97,128 @@ object GraftSqlBridge {
     * so its filesystem settings apply and no default conf is re-parsed.
     * Throws if the file is gone, cannot be opened or its footer does not
     * parse. */
-  def parquetFooterSchema(spark: SparkSession, file: Path): StructType = {
-    val reader = openParquet(spark.sessionState.newHadoopConf(), file)
-    val footer = try new Footer(file, reader.getFooter) finally reader.close()
-    ParquetFileFormat.readSchemaFromFooter(footer,
+  def parquetFooterSchema(spark: SparkSession, file: Path): StructType =
+    footerSchema(spark, file,
+      parquetFooter(spark.sessionState.newHadoopConf(), file))
+
+  /** [[parquetFooterSchema]] of a footer already read. */
+  def footerSchema(spark: SparkSession, file: Path, footer: ParquetMetadata)
+      : StructType =
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
       new ParquetToSparkSchemaConverter(spark.sessionState.conf)).asNullable
-  }
 
   /** Names Spark never reads as data files (`PartitioningAwareFileIndex`):
     * markers, checksums and in-flight files. */
   private def hidden(name: String): Boolean =
     name.startsWith("_") || name.startsWith(".") || name.endsWith("._COPYING_")
 
+  /** Spark's parquet row reader, driven on the driver: no Spark job, and
+    * no broadcast of the Hadoop conf, which
+    * `ParquetFileFormat.buildReaderWithPartitionValues` makes on every
+    * call (the block stays until the ContextCleaner drops it). A file is
+    * decoded by `ParquetReadSupport`, Spark's row-based parquet read
+    * path, under the conf keys a Spark scan sets from the session (time
+    * zone, `nanosAsLong`, binary/INT96/NTZ mappings, case sensitivity),
+    * with the file's own datetime and INT96 rebase rules taken from its
+    * footer, and `schema` as the requested schema: a column the file
+    * lacks reads as null, as in a scan. The rows come out as Spark's
+    * scan emits them, one reused `UnsafeRow`; copy a row to keep it. */
+  final class ParquetRows(spark: SparkSession, val schema: StructType) {
+    private val sqlConf = spark.sessionState.conf
+    private val options =
+      new ParquetOptions(Map.empty[String, String], sqlConf)
+    private val toUnsafe = UnsafeProjection.create(schema)
+    val conf: Configuration = {
+      val c = spark.sessionState.newHadoopConf()
+      c.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, schema.json)
+      c.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, sqlConf.sessionLocalTimeZone)
+      Seq(
+        SQLConf.NESTED_SCHEMA_PRUNING_ENABLED ->
+          sqlConf.nestedSchemaPruningEnabled,
+        SQLConf.CASE_SENSITIVE -> sqlConf.caseSensitiveAnalysis,
+        SQLConf.PARQUET_BINARY_AS_STRING -> sqlConf.isParquetBinaryAsString,
+        SQLConf.PARQUET_INT96_AS_TIMESTAMP ->
+          sqlConf.isParquetINT96AsTimestamp,
+        SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED ->
+          sqlConf.parquetInferTimestampNTZEnabled,
+        SQLConf.LEGACY_PARQUET_NANOS_AS_LONG ->
+          sqlConf.legacyParquetNanosAsLong,
+        SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION ->
+          sqlConf.parquetReaderRespectUnknownTypeAnnotation)
+        .foreach { case (k, v) => c.setBoolean(k.key, v) }
+      c
+    }
+
+    /** `f` over the rows of `file`, whose footer is `footer`; the file
+      * is closed when `f` returns. */
+    def read[A](file: Path, footer: ParquetMetadata)(
+        f: Iterator[InternalRow] => A): A = {
+      val meta = footer.getFileMetaData
+      val kv = meta.getKeyValueMetaData
+      // INT96 values are shifted to the session zone only for files
+      // another writer than parquet-mr made, as a scan does
+      val convertTz =
+        if (sqlConf.isParquetINT96TimestampConversion &&
+            !meta.getCreatedBy.startsWith("parquet-mr"))
+          Some(DateTimeUtils.getZoneId(sqlConf.sessionLocalTimeZone))
+        else None
+      val reader = new ParquetRecordReader[InternalRow](
+        new ParquetReadSupport(convertTz, false,
+          DataSourceUtils.datetimeRebaseSpec(kv.get,
+            options.datetimeRebaseModeInRead),
+          DataSourceUtils.int96RebaseSpec(kv.get,
+            options.int96RebaseModeInRead)))
+      val rows = new RecordReaderIterator(reader)
+      try {
+        // the whole file: every row group's midpoint lies in the split
+        reader.initialize(
+          new FileSplit(file, 0L, Long.MaxValue, Array.empty[String]),
+          new TaskAttemptContextImpl(conf, new TaskAttemptID()))
+        f(rows.map(toUnsafe))
+      } finally rows.close()
+    }
+  }
+
   /** The rows of a small parquet directory, decoded on the driver with no
     * Spark job: what `spark.read.parquet(dir).as[T].collect()` returns, in
-    * file-name order, through Spark's own file reader (`ParquetFileFormat`) with `T`'s
-    * schema as the requested schema and the session's conf, time zone
-    * and rebase rules. Files Spark would not list are skipped, so a
+    * file-name order, through [[ParquetRows]] with `T`'s schema as the
+    * requested schema. Files Spark would not list are skipped, so a
     * hidden partial write is invisible here too; a directory with no
     * data file reads as empty. The rows are held in driver memory. */
   def readParquetRows[T: Encoder](spark: SparkSession, dir: Path): Seq[T] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val files = dir.getFileSystem(conf).listStatus(dir).toSeq
+    val enc = encoderFor[T]
+    val parquet = new ParquetRows(spark, enc.schema.asNullable)
+    val decode = enc.resolveAndBind(DataTypeUtils.toAttributes(parquet.schema))
+      .createDeserializer()
+    dir.getFileSystem(parquet.conf).listStatus(dir).toSeq
       .filter(s => s.isFile && !hidden(s.getPath.getName))
       .sortBy(_.getPath.getName)
-    if (files.isEmpty) Seq.empty
-    else {
-      val enc = encoderFor[T]
-      val schema = enc.schema.asNullable
-      val read = new ParquetFileFormat().buildReaderWithPartitionValues(
-        spark, schema, new StructType(), schema, Nil,
-        Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), conf)
-      val decode = enc.resolveAndBind(DataTypeUtils.toAttributes(schema))
-        .createDeserializer()
-      files.flatMap { s =>
-        read(PartitionedFile(InternalRow.empty, SparkPath.fromPath(s.getPath),
-          0L, s.getLen, Array.empty, s.getModificationTime, s.getLen))
-          .map(decode(_)).toVector
+      .flatMap { s =>
+        val file = s.getPath
+        parquet.read(file, parquetFooter(parquet.conf, file))(
+          _.map(decode(_)).toVector)
       }
-    }
+  }
+
+  /** The rows of `select(column).filter(condition)` over `rows` (rows of
+    * `schema`, each the caller's own) in a `LocalRelation`, built as one
+    * plan and analysed once, the executePlan-on-a-built-plan way. The
+    * optimizer folds the projection and the filter on the driver
+    * (`ConvertToLocalRelation`) and the physical plan's collect returns
+    * the folded rows, so no Spark job runs; an aggregate over the
+    * relation would still run one. The rows are collected from the
+    * physical plan, not through `Dataset.collect`, whose execution
+    * tracking (listener events, plan strings) costs about as much as the
+    * fold itself. */
+  def collectLocal(spark: SparkSession, schema: StructType,
+      rows: Seq[InternalRow], column: Column, condition: Column)
+      : Array[InternalRow] = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    session.sessionState.executePlan(
+      Filter(session.expression(condition),
+        Project(Seq(session.toRichColumn(column).named),
+          LocalRelation(DataTypeUtils.toAttributes(schema), rows))))
+      .executedPlan.executeCollect()
   }
 
   /** Writes `rows` on the driver as one new parquet file in `dir`

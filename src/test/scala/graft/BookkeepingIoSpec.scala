@@ -5,7 +5,7 @@ import java.sql.{Date, Timestamp}
 import java.time.Instant
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{GraftSqlBridge, SaveMode}
+import org.apache.spark.sql.{GraftSqlBridge, GraftTestBridge, SaveMode}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.catalog.DirInventory
@@ -102,8 +102,7 @@ class BookkeepingIoSpec extends AnyFunSuite {
     } finally gauge.close()
   }
 
-  test("a logged Scheduler.run runs two jobs per default-tier CHECKTABLE " +
-      "and none besides") {
+  test("a logged Scheduler.run over small tables runs no Spark job") {
     val dir = tmpDir("graft-bk-sched")
     val gauge = new Dev.Gauge(spark.sparkContext)
     try {
@@ -116,12 +115,22 @@ class BookkeepingIoSpec extends AnyFunSuite {
         .run())
       val tables = r.executedCommands.count(_.startsWith("CHECKTABLE"))
       assert(tables > 0 && r.violations === 0L && r.errors === 0L)
-      // adaptive execution submits each CHECKTABLE aggregate's shuffle
-      // map stage as a job of its own: two jobs per table
-      assert(gauge.jobs.get() === 2L * tables)
+      // every fixture table is within CHECKTABLE's local route ceilings
+      assert(gauge.jobs.get() === 0L)
     } finally gauge.close()
     assert(new StateStore(spark, s"$dir/state").load().size === 10)
     assert(spark.read.parquet(s"$dir/log").count() > 0L)
+  }
+
+  test("StateStore.load leaves no broadcast block behind") {
+    val dir = tmpDir("graft-bk-bcast")
+    val store = new StateStore(spark, s"$dir/state")
+    store.save(stateRows)
+    store.load() // warm-up
+    val before = GraftTestBridge.broadcastBlocks(spark.sparkContext)
+    (1 to 5).foreach(_ => assert(store.load().sortBy(_.id) === stateRows))
+    assert(GraftTestBridge.broadcastBlocks(spark.sparkContext) -- before ===
+      Set.empty)
   }
 
   test("a state directory written by a Spark write loads equal, under a " +

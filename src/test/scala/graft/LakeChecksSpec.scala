@@ -144,8 +144,7 @@ class LakeChecksSpec extends AnyFunSuite {
     assert(broken() >= 1L)
   }
 
-  test("CHECKALLOC and CHECKCATALOG run no Spark job, and a default-tier " +
-      "CHECKTABLE runs only its aggregate") {
+  test("CHECKALLOC, CHECKCATALOG and a small CHECKTABLE run no Spark job") {
     val tables = inv.objects("testdb")
     val manifests = tables.map(t =>
       (t.database_name, t.schema_name, t.object_name) ->
@@ -163,11 +162,62 @@ class LakeChecksSpec extends AnyFunSuite {
           physicalOnly = false, dataPurity = false, maxDop = 0,
           manifests.get((t.database_name, t.schema_name, t.object_name)))
         val v = gauge.measure(s"CHECKTABLE ${t.object_name}")(check())
-        // one action; adaptive execution submits the aggregate's shuffle
-        // map stage as a job of its own, so the action reads two jobs
-        assert((v, gauge.jobs.get()) === ((0L, 2L)), t.object_name)
+        // every fixture table is within the local route's ceilings: its
+        // files are decoded on the driver, no job
+        assert((v, gauge.jobs.get()) === ((0L, 0L)), t.object_name)
       }
     } finally gauge.close()
+  }
+
+  /** Writes `df` as one parquet file and pins it. */
+  private def pinnedTable(name: String, df: org.apache.spark.sql.DataFrame)
+      : (InventoryRow, TableManifest) = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-route")
+      .toString + s"/$name.parquet"
+    df.coalesce(1).write.parquet(dir)
+    val t = InventoryRow("testdb", "main", name, "U", 1L, dir)
+    (t, TableManifest.capture(spark, t))
+  }
+
+  /** The violations and Spark jobs of one default-tier CHECKTABLE. */
+  private def checkJobs(t: InventoryRow, m: TableManifest): (Long, Long) = {
+    val gauge = new Dev.Gauge(spark.sparkContext)
+    try {
+      val (_, check) = LakeChecks.checkTable(spark, t, physicalOnly = false,
+        dataPurity = false, maxDop = 0, Some(m))
+      (gauge.measure(s"CHECKTABLE ${t.object_name}")(check()),
+        gauge.jobs.get())
+    } finally gauge.close()
+  }
+
+  private def footerRows(m: TableManifest): Long = m.paths.map { p =>
+    val r = org.apache.spark.sql.GraftSqlBridge.openParquet(
+      spark.sparkContext.hadoopConfiguration, new org.apache.hadoop.fs.Path(p))
+    try r.getRecordCount finally r.close()
+  }.sum
+
+  test("a CHECKTABLE over the byte ceiling runs its aggregate's two jobs") {
+    // incompressible strings: over the byte ceiling, under the row one
+    val (t, m) = pinnedTable("wide", spark.range(15000).select(col("id"),
+      sha2(col("id").cast("string"), 512).as("s"),
+      when(col("id") % 1000 === 0, lit(Double.NaN))
+        .otherwise(col("id") * 0.5).as("x")))
+    assert(m.files.map(_.length).sum > LakeChecks.LocalMaxBytes)
+    assert(footerRows(m) <= LakeChecks.LocalMaxRows)
+    // one action; adaptive execution submits the aggregate's shuffle map
+    // stage as a job of its own, so the action reads two jobs
+    assert(checkJobs(t, m) === ((15L, 2L)))
+  }
+
+  test("a compressible CHECKTABLE over the row ceiling takes the Spark " +
+      "route") {
+    // a near-constant column: a small file of many rows
+    val (t, m) = pinnedTable("long", spark.range(LakeChecks.LocalMaxRows + 1)
+      .select(when(col("id") % 5000 === 0, lit(Double.NaN))
+        .otherwise(lit(1.0)).as("x")))
+    assert(m.files.map(_.length).sum <= LakeChecks.LocalMaxBytes)
+    assert(footerRows(m) > LakeChecks.LocalMaxRows)
+    assert(checkJobs(t, m) === ((5L, 2L)))
   }
 
   test("the driver-side footer schema equals Spark's inferred schema " +
