@@ -1,11 +1,15 @@
 package graft.maintenance
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.core.JacksonException
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Q
+import graft.tables.Json
 
 /** Small-file compaction planning — the lake-native analog of the vendored
   * IndexOptimize maintenance tier (ref ola/IndexOptimize.sql: rebuild
@@ -179,21 +183,6 @@ object Compaction {
   def supersededPaths(spark: SparkSession, tableDir: String): Set[String] = {
     val dir = new Path(tableDir)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val strRe = """"((?:[^"\\]|\\.)*)"""".r
-    def unescape(s: String): String = {
-      val b = new StringBuilder(s.length)
-      var i = 0
-      while (i < s.length) {
-        val c = s.charAt(i)
-        if (c == '\\' && i + 1 < s.length) s.charAt(i + 1) match {
-          case 'u' if i + 5 < s.length =>
-            b.append(Integer.parseInt(s.substring(i + 2, i + 6), 16)
-              .toChar); i += 6
-          case e => b.append(e); i += 2
-        } else { b.append(c); i += 1 }
-      }
-      b.toString
-    }
     def barePath(p: String): String =
       try new Path(new java.net.URI(p)).toUri.getPath
       catch { case _: Exception => p }
@@ -202,14 +191,11 @@ object Compaction {
       else fs.listStatus(d).toSeq
         .filter(s => s.isFile && s.getPath.getName.endsWith(".json"))
         .flatMap { st =>
-          val in = fs.open(st.getPath)
-          val txt = try scala.io.Source.fromInputStream(in, "UTF-8")
-            .mkString finally in.close()
-          val key = "\"supersedes\""
-          val idx = txt.indexOf(key)
-          if (idx < 0) Nil
-          else strRe.findAllMatchIn(txt.substring(idx + key.length))
-            .map(m => barePath(unescape(m.group(1)))).toSeq
+          // a torn in-flight manifest explains nothing: its group's
+          // originals are deleted only after it is complete
+          try Json.mapper.readTree(fs.open(st.getPath)).path("supersedes")
+            .elements().asScala.map(n => barePath(n.asText)).toSeq
+          catch { case _: JacksonException => Nil }
         }
     (readDir(new Path(dir, RecordDirName)) ++
       readDir(new Path(dir, ".compact-tmp"))).toSet
@@ -392,7 +378,8 @@ object Compaction {
 
       var budgetStop = false
       while (done < groups.length && !budgetStop) {
-        if (deadline.exists(d => !clock.observe().isBefore(d))) {
+        if (deadline.exists(d =>
+            graft.scheduler.Policy.reached(clock.observe(), d))) {
           // loud skip, reference-style: the operator sees what a
           // time-boxed run left for the next one
           println(s"compact: time budget exhausted before group $done " +

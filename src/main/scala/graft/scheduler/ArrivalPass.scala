@@ -187,10 +187,8 @@ object ArrivalPass {
       * reference's (work is SKIPPED with an audit row, never killed):
       * is there time left (IC:592), and — when the stage HAS work and
       * a duration history — will it FINISH in the time left (IC:677,
-      * predicted from the persisted incremental mean)? The prediction
-      * gets a 25 % grace (≥1 s): averages are noisy, and an admitted
-      * overrunner is now bounded anyway — the ingest stages stop at
-      * the deadline per micro-batch. `hasWork` = false (an input probe
+      * predicted from the persisted incremental mean, with
+      * [[Policy.arrivalGraceMs]])? `hasWork` = false (an input probe
       * already knows the stage will input-skip) bypasses the cost gate
       * so a cheap skip is never refused on the cost of the work it
       * won't do. `body` returns either a (status, detail) it decided
@@ -223,21 +221,19 @@ object ArrivalPass {
       // here rather than interleave with the usurper's streams)
       passLease.renew()
       val nowT = clock.now()
-      if (deadline.exists(d => !nowT.isBefore(d))) {
+      if (deadline.exists(d => Policy.reached(nowT, d))) {
         val d = "time budget exhausted before this stage " +
           s"(limit ${cfg.timeLimitSeconds.getOrElse(-1L)} s)"
         results += StageResult(name, "admission_skipped", 0.0, d)
         audit(name, "admission_skipped", 0.0, d)
         return
       }
-      val remainingMs =
-        deadline.map(d => d.toEpochMilli - nowT.toEpochMilli)
-      val predictedMs = remainingMs
-        .filter(_ => hasWork && !resumable)
-        .flatMap(rem => stats.wouldOverrun(name, rem))
-      (remainingMs, predictedMs) match {
-        case (Some(rem), Some(p)) =>
-          val d = f"predicted ${p / 1000.0}%.1f s > remaining " +
+      val predicted = stats.predictMs(name)
+      deadline match {
+        case Some(dl) if hasWork && !resumable && predicted.exists(p =>
+            !Policy.admits(nowT, p, dl, Policy.arrivalGraceMs(p))) =>
+          val rem = dl.toEpochMilli - nowT.toEpochMilli
+          val d = f"predicted ${predicted.get / 1000.0}%.1f s > remaining " +
             f"${rem / 1000.0}%.1f s (+25%% grace) from the persisted " +
             "stage duration history — admission refused (IC:677)"
           results += StageResult(name, "admission_skipped", 0.0, d)
@@ -799,7 +795,7 @@ object ArrivalPass {
                 // listing (20k tables would otherwise each pay a plan
                 // job after the budget is gone); compact() itself
                 // re-checks per merge group (IC:644)
-                if (deadline.exists(d => !clock.observe().isBefore(d)))
+                if (deadline.exists(d => Policy.reached(clock.observe(), d)))
                   budgetSkipped += 1
                 else if (!graft.maintenance.Compaction.worthPlanning(
                     spark, o.path, tb)) {

@@ -1,74 +1,44 @@
 package graft.scheduler
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
 
-/** Persisted per-unit duration history for predicted-cost admission
-  * (ref IntegrityChecks_VLDB.sql:677-680: the reference never STARTS a
-  * unit of work its average duration says cannot finish inside the
-  * remaining budget; the estimate is the same incremental-mean
-  * recurrence the batch scheduler's state rows keep, `avg += (new -
-  * avg) / n`, IC:706 / state/StateStore.recordRun). One tiny
-  * driver-side JSON file next to the caller's checkpoints; the unit
-  * key is whatever granularity the caller admits at (ArrivalPass:
-  * stage names; IncrementalScheduler: `db.schema.table`).
+import graft.tables.Json
+
+/** Persisted per-unit duration history: the running average each unit's
+  * admission reads (ref IntegrityChecks_VLDB.sql:677-680). The gate is
+  * [[Policy.admits]] and the average is [[Policy.fold]]; this class only
+  * keeps the history. One tiny driver-side JSON file next to the caller's
+  * checkpoints, `{"format":1,"stages":{"<unit>":{"n":N,"avg_ms":M}}}`;
+  * the unit key is whatever granularity the caller admits at
+  * (ArrivalPass: stage names; IncrementalScheduler: `db.schema.table`).
   *
   * [[record]] folds into MEMORY only; [[flush]] persists the whole
-  * map ONCE — callers record per unit and flush once per PASS (the
-  * round-14 shape rewrote the full file per record(), which on a
-  * 20k-table inventory is O(tables²) bytes of driver JSON per pass).
-  * The file is a plain overwrite: a crash mid-pass loses at most the
+  * map ONCE — callers record per unit and flush once per PASS. The
+  * file is a plain overwrite: a crash mid-pass loses at most the
   * in-pass updates (nothing was flushed yet), and admission degrades
   * to the time-remaining gate — never to wrong work. In-memory state
   * is COMPLETE either way: this pass's own admission decisions see
-  * every record() regardless of flush timing, exactly as before. */
+  * every record() regardless of flush timing. An unreadable file reads
+  * as no history. */
 private[scheduler] final class DurationStats(spark: SparkSession,
     path: String) {
   private val p = new org.apache.hadoop.fs.Path(path)
   private def fs = p.getFileSystem(
     spark.sparkContext.hadoopConfiguration)
-  private val entryRe =
-    """"((?:[^"\\]|\\.)+)":\{"n":(\d+),"avg_ms":(\d+)\}""".r
   private var m: Map[String, (Long, Long)] =
     try {
       if (!fs.exists(p)) Map.empty
-      else {
-        val in = fs.open(p)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8")
-          .mkString finally in.close()
-        entryRe.findAllMatchIn(txt).map(g =>
-          unescape(g.group(1)) ->
-            (g.group(2).toLong, g.group(3).toLong)).toMap
-      }
+      else Json.mapper.readTree(fs.open(p)).path("stages").properties()
+        .asScala.map(e => (e.getKey, e.getValue.path("n"),
+          e.getValue.path("avg_ms")))
+        .collect { case (u, n, avg)
+            if n.isIntegralNumber && avg.isIntegralNumber =>
+          u -> (n.asLong, avg.asLong)
+        }.toMap
     } catch { case NonFatal(_) => Map.empty }
-
-  private def escape(s: String): String = s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-  /** Single-pass inverse of escape(): handles \uXXXX (which the old
-    * replace-chain left literal, so a unit key with a control char
-    * never round-tripped — its history entry was unmatched forever and
-    * the IC:677 gate silently inert for that unit) and is immune to
-    * the chained-replace ambiguity on backslash-then-quote sequences. */
-  private def unescape(s: String): String = {
-    val b = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) s.charAt(i + 1) match {
-        case 'u' if i + 5 < s.length =>
-          b.append(Integer.parseInt(s.substring(i + 2, i + 6), 16)
-            .toChar)
-          i += 6
-        case e => b.append(e); i += 2
-      } else { b.append(c); i += 1 }
-    }
-    b.toString
-  }
 
   /** Predicted duration for a unit = its running average; None until
     * the unit has run at least once (a never-seen unit is always
@@ -76,20 +46,11 @@ private[scheduler] final class DurationStats(spark: SparkSession,
     * estimate either). */
   def predictMs(unit: String): Option[Long] = m.get(unit).map(_._2)
 
-  /** The IC:677 refusal test: true when the prediction overruns the
-    * remaining budget past the grace (25 % of the prediction, floor
-    * 1 s — averages are noisy, and callers bound an admitted
-    * overrunner's tail with their own inner-loop deadline checks). */
-  def wouldOverrun(unit: String, remainingMs: Long): Option[Long] =
-    predictMs(unit).filter(pMs =>
-      pMs > remainingMs + math.max(1000L, pMs / 4))
-
-  /** Fold one completed run into the IN-MEMORY history (IC:706
-    * recurrence, integer arithmetic). Not persisted until [[flush]]. */
+  /** Fold one completed run into the IN-MEMORY history. Not persisted
+    * until [[flush]]. */
   def record(unit: String, durMs: Long): Unit = {
     val (n0, avg0) = m.getOrElse(unit, (0L, 0L))
-    val n = n0 + 1
-    m += unit -> (n, avg0 + (durMs - avg0) / n)
+    m += unit -> (n0 + 1, Policy.fold(avg0, n0 + 1, durMs))
     dirty = true
   }
 
@@ -97,17 +58,19 @@ private[scheduler] final class DurationStats(spark: SparkSession,
 
   /** Persist the whole history in ONE write — call once per pass.
     * No-op when nothing was recorded since the last flush (a quiet
-    * pass must not even rewrite an unchanged file). Best-effort like
-    * the old per-record write: a failed flush degrades admission to
-    * the time gate, never to wrong work. */
+    * pass must not even rewrite an unchanged file). Best-effort: a
+    * failed flush degrades admission to the time gate, never to wrong
+    * work. */
   def flush(): Unit = if (dirty) {
     try {
-      val body = m.toSeq.sortBy(_._1).map { case (u, (cnt, avg)) =>
-        s""""${escape(u)}":{"n":$cnt,"avg_ms":$avg}"""
-      }.mkString(",")
+      val root = Json.mapper.createObjectNode().put("format", 1)
+      val stages = root.putObject("stages")
+      m.toSeq.sortBy(_._1).foreach { case (u, (cnt, avg)) =>
+        stages.putObject(u).put("n", cnt).put("avg_ms", avg)
+      }
       val out = fs.create(p, true)
-      out.writeBytes(s"""{"format":1,"stages":{$body}}\n""")
-      out.close()
+      try { out.write(Json.mapper.writeValueAsBytes(root)); out.write('\n') }
+      finally out.close()
       dirty = false
       DurationStats.flushes.incrementAndGet()
       ()

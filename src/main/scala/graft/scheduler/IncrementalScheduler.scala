@@ -90,13 +90,7 @@ object IncrementalScheduler {
     // (DurationStats; the batch scheduler's analog is its state rows)
     val stats = new DurationStats(spark,
       s"$checkpointRoot/table_stats.json")
-    // ONE history write per pass (flushed in the finally below): the
-    // old per-table record() rewrote the full file per table — O(tables²)
-    // bytes of driver JSON on a 20k-table inventory (round-14 verdict
-    // #2). Admission behavior is unchanged: this pass's own IC:677
-    // decisions read the in-memory map, which sees every record()
-    // immediately; a crash mid-pass loses only the in-pass updates and
-    // admission degrades to the time gate.
+    // ONE history write per pass, flushed in the finally below
     try {
     inventory.databases().foreach { db =>
       inventory.objects(db).foreach { o =>
@@ -232,19 +226,19 @@ object IncrementalScheduler {
           // left" and IC:677 "will THIS table finish in it" from the
           // persisted per-table mean; a table refused by either is a
           // loud skip, never a mid-check kill
-          val remainingMs = deadline.map(d =>
-            d.toEpochMilli - clock.now().toEpochMilli)
-          if (remainingMs.exists(_ <= 0L)) {
-            skippedTime += 1
-            skipRow("time budget exhausted before this table (IC:592)")
-          } else remainingMs.flatMap(stats.wouldOverrun(obj, _)) match {
-            case Some(pMs) =>
+          val predicted = stats.predictMs(obj)
+          deadline.map(d => (d, clock.now())) match {
+            case Some((d, now)) if Policy.reached(now, d) =>
+              skippedTime += 1
+              skipRow("time budget exhausted before this table (IC:592)")
+            case Some((d, now)) if predicted.exists(p =>
+                !Policy.admits(now, p, d, Policy.arrivalGraceMs(p))) =>
               skippedCost += 1
-              skipRow(f"predicted ${pMs / 1000.0}%.1f s > remaining " +
-                f"${remainingMs.get / 1000.0}%.1f s from the " +
+              val remainingMs = d.toEpochMilli - now.toEpochMilli
+              skipRow(f"predicted ${predicted.get / 1000.0}%.1f s > " +
+                f"remaining ${remainingMs / 1000.0}%.1f s from the " +
                 "persisted table duration history (IC:677)")
-            case None =>
-              runTable()
+            case _ => runTable()
           }
         }
       }

@@ -1,7 +1,5 @@
 package graft.scheduler
 
-import java.time.Instant
-
 import scala.collection.mutable
 
 import org.apache.spark.sql.SparkSession
@@ -16,16 +14,7 @@ import graft.state.StateStore
 /** The reference's main loop (SURVEY.md §3.1 stages 5-13;
   * ref IntegrityChecks_VLDB.sql:505-744), re-expressed with an injectable
   * clock so priority/admission behavior is deterministic under test.
-  *
-  * Policy, faithfully reproduced:
-  *  - Phase 1: CHECKALLOC + CHECKCATALOG per database, deadline-gated
-  *    (ref IC:505-577).
-  *  - Phase 2: databases by oldest MIN(LastCheckDate) first (ref IC:583-595);
-  *    within a database, tables least-recently-checked first; after HALF the
-  *    budget, smallest-first (ref IC:647-668); skip a table whose predicted
-  *    duration (persisted incremental average) would overrun the deadline
-  *    plus a 1-minute grace (ref IC:677-680); a table already checked today
-  *    is not re-checked (ref IC:664-665).
+  * Every scheduling decision is [[Policy]]'s, which lists the policy.
   *
   * CHECKALLOC and CHECKCATALOG run no Spark job (driver-side listings and
   * footers); each CHECKTABLE is one Spark action, and the cluster is the
@@ -47,15 +36,11 @@ final class Scheduler(
     config: CheckConfig,
     clock: Clock) {
 
-  private val HalfwayDivisor = 2 // ref IC:647-649
-  private val GraceMs = 60L * 1000 // ref IC:677-680 "+ 1 minute"
-
   def run(): SchedulerReport = {
     config.validate().left.foreach(e => throw new IllegalArgumentException(e))
     val jobStart = clock.now() // captured ONCE (ref IC:71)
-    val deadline = config.timeLimitSeconds.map(s => jobStart.plusSeconds(s))
-    val halfway = config.timeLimitSeconds
-      .map(s => jobStart.plusMillis(s * 1000 / HalfwayDivisor))
+    val deadline = config.timeLimitSeconds.map(jobStart.plusSeconds)
+    val halfway = Policy.halfway(jobStart, config.timeLimitSeconds)
 
     val executor = new CommandExecutor(log, clock, config.execute)
     val executed = mutable.ArrayBuffer.empty[String]
@@ -119,33 +104,10 @@ final class Scheduler(
     var state = StateStore.reconcile(stateStore.load(), scan)
 
     def pastDeadline(): Boolean =
-      deadline.exists(d => !clock.now().isBefore(d))
+      deadline.exists(d => Policy.reached(clock.now(), d))
 
-    // Ordering strategy (ref DIC:1003-1089); default LastGoodCheckAsc is
-    // the IC:583-595 oldest-first behavior. Per-db keys come from ONE
-    // pass over state (a per-db filter inside sortBy is O(dbs·state) —
-    // noticeable at a 100k-table state).
-    val dbOrder = {
-      import graft.model.DatabaseOrder._
-      val activeByDb = state.filter(_.active).groupBy(_.database_name)
-      def minCheck(db: String): java.time.LocalDate =
-        activeByDb.getOrElse(db, Seq.empty)
-          .map(_.last_check_date.toLocalDate)
-          .minOption.getOrElse(java.time.LocalDate.of(1900, 1, 1))
-      def size(db: String): Long =
-        activeByDb.getOrElse(db, Seq.empty).map(_.used_page_count).sum
-      config.databaseOrder match {
-        case NameAsc => selectedDbs.sorted
-        case NameDesc => selectedDbs.sorted.reverse
-        case SizeAsc => selectedDbs.sortBy(db => (size(db), db))
-        case SizeDesc => selectedDbs.sortBy(db => (-size(db), db))
-        case LastGoodCheckAsc => selectedDbs.sortBy(db => (minCheck(db), db))
-        case LastGoodCheckDesc =>
-          selectedDbs.sortBy(db => (minCheck(db), db))(
-            Ordering.Tuple2(Ordering[java.time.LocalDate].reverse,
-              Ordering[String]))
-      }
-    }
+    val dbOrder =
+      Policy.databaseOrder(config.databaseOrder, selectedDbs, state)
 
     // Bounded pool for the reference's parallel mode (SURVEY §2.11):
     // created once, shared by phase 1's independent per-db pair and
@@ -197,21 +159,11 @@ final class Scheduler(
       } else skipped += ((db, "time limit reached before phase 1"))
     }
 
-    // Stage 11 — Phase 2 priority: oldest MIN(LastCheckDate) database first
-    // (ref IC:583-595).
+    // Stage 11 — Phase 2 work queues, one per database, each sorted once
+    // (Policy.sortQueue: O(n log n), not an argmin scan per pick).
     val stateByKey = mutable.Map.empty[(String, String, String), CheckObject]
     state.foreach(o =>
       stateByKey((o.database_name, o.schema_name, o.object_name)) = o)
-    // Work queue discipline: the reference re-evaluates its argmin
-    // (TOP 1 ... ORDER BY) before every check (IC:651-668). An object's
-    // priority key is STATIC within a run — last_check_date only changes
-    // for the object just checked (which leaves the due set), and the
-    // only dynamic sort input is the one-way smallest-first flip — so a
-    // list pre-sorted per database, re-sorted once if the flip occurs,
-    // picks the IDENTICAL sequence while costing O(n log n) driver work
-    // instead of the O(n²) of an argmin-scan per pick (at the 100k-table
-    // states this scheduler is for, that is the difference between
-    // milliseconds and minutes of driver time per run).
     // Key index per db, built ONCE (keys are stable for the whole run —
     // recordRun replaces values in place). The due SET for a database is
     // computed when that database's phase-2 loop starts, under foldLock,
@@ -227,20 +179,9 @@ final class Scheduler(
       keysByDb.getOrElse(db, Seq.empty).flatMap(stateByKey.get)
         .filter(o => o.active &&
           workKeys((o.database_name, o.schema_name, o.object_name)) &&
-          StateStore.isDueOn(o, jobStart))
+          Policy.isDue(o, jobStart))
     }
-    def sortQueue(q: Seq[CheckObject], smallestFirst: Boolean)
-        : List[CheckObject] =
-      q.sortBy(o => (o.last_check_date.toLocalDate,
-        if (smallestFirst) o.used_page_count else 0L,
-        o.object_name, o.schema_name)).toList
-
-    // First-run heuristic (ref IC:602-604): when most objects have never
-    // been checked, go smallest-first immediately to maximize coverage.
-    val allActive = state.filter(_.active)
-    val firstRunMode =
-      allActive.count(_.number_of_executions == 0) >
-        allActive.count(_.number_of_executions > 0)
+    val firstRunMode = Policy.firstRunMode(state)
 
     // Stage 12 — Phase 2 nested loop. The inventory row lookup is a map
     // hit, not a per-pick linear scan of the db's table list.
@@ -265,9 +206,9 @@ final class Scheduler(
     // and fold lock are shared with phase 1 above; phase 2 acquires the
     // permit EXPLICITLY so the clock read happens after the wait.)
     dbOrder.foreach { db =>
-      var smallestFirst = firstRunMode ||
-        halfway.exists(h => !clock.now().isBefore(h)) // ref IC:647-649 flip
-      var queue = sortQueue(dueQueue(db), smallestFirst)
+      var smallestFirst =
+        Policy.smallestFirst(firstRunMode, halfway, clock.now())
+      var queue = Policy.sortQueue(dueQueue(db), smallestFirst)
       while (queue.nonEmpty && !pastDeadline()) {
         // budget-check-before-submit: take the slot FIRST so the clock
         // reads below describe the moment this check could actually start
@@ -275,20 +216,15 @@ final class Scheduler(
         var submitted = false
         try {
           val now = clock.now()
-          val flipNow = firstRunMode || halfway.exists(h => !now.isBefore(h))
+          val flipNow = Policy.smallestFirst(firstRunMode, halfway, now)
           if (flipNow != smallestFirst) { // the flip is one-way: re-sort once
             smallestFirst = flipNow
-            queue = sortQueue(queue, smallestFirst)
+            queue = Policy.sortQueue(queue, smallestFirst)
           }
-          // argmin work pick (ref IC:651-668): least-recently-checked, then
-          // smallest-or-name per the flip flag — the sorted queue's head IS
-          // the argmin (keys are static; see the queue-discipline note).
-          val pick = queue.head
+          val pick = queue.head // the argmin (ref IC:651-668)
           queue = queue.tail
-          // admission control (ref IC:677-680).
-          val predictedEnd = now.plusMillis(pick.avg_run_duration_ms)
-          val admit = deadline.forall(d =>
-            !predictedEnd.isAfter(d.plusMillis(GraceMs)))
+          val admit = deadline.forall(d => Policy.admits(now,
+            pick.avg_run_duration_ms, d, Policy.SchedulerGraceMs))
           val key = (pick.database_name, pick.schema_name, pick.object_name)
           if (!admit) {
             skipped += ((s"${pick.database_name}.${pick.schema_name}." +
@@ -309,17 +245,12 @@ final class Scheduler(
             // the same way.)
             val pinned = manifests.get(key)
             val stillExists = try {
-              pinned match {
-                case Some(m) if m.files.isEmpty => false
-                case Some(m) =>
-                  val p = new org.apache.hadoop.fs.Path(m.files.head.path)
+              pinned.fold(Option(t.path))(_.files.headOption.map(_.path))
+                .exists { f =>
+                  val p = new org.apache.hadoop.fs.Path(f)
                   p.getFileSystem(spark.sparkContext.hadoopConfiguration)
                     .exists(p)
-                case None =>
-                  val p = new org.apache.hadoop.fs.Path(t.path)
-                  p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-                    .exists(p)
-              }
+                }
             } catch { case _: Throwable => false }
             if (!stillExists) {
               skipped += ((s"${t.database_name}.${t.schema_name}." +

@@ -16,7 +16,7 @@ import graft.state.StateStore
   * throwaway state, dry-run or in-memory log. */
 object SchedulerQueries {
 
-  private val FixedStart = Instant.parse("2026-01-01T00:00:00Z")
+  private[graft] val FixedStart = Instant.parse("2026-01-01T00:00:00Z")
 
   /** Dry-run over the sf dir as database "testdb": returns the exact
     * command list the reference would print with @Execute='N'
@@ -98,16 +98,18 @@ object SchedulerQueries {
       log: Option[CommandLog] = None): SchedulerReport = {
     val statePath = java.nio.file.Files
       .createTempDirectory("graft-schedq").toString + "/state"
-    // real runs use the concurrent phase 2 (4 in-flight table checks —
-    // the reference's parallel queue mode, SURVEY §2.11); the goldens are
-    // submission-ordered / sorted, so they are identical to sequential.
-    // Dry-run stays sequential: there is no action to overlap.
-    val cfg = CheckConfig(databases = "testdb", execute = execute,
-      logToTable = false, concurrency = if (execute) 8 else 1)
     new Scheduler(s, new DirInventory(s, Map("testdb" -> sfDir)),
       new StateStore(s, statePath), log.getOrElse(new CommandLog(s, None)),
-      cfg, new ManualClock(FixedStart, tickMs = 10)).run()
+      config(execute), new ManualClock(FixedStart, tickMs = 10)).run()
   }
+
+  /** Real runs use the concurrent phase 2 (8 in-flight table checks —
+    * the reference's parallel queue mode, SURVEY §2.11); the goldens are
+    * submission-ordered / sorted, so they are identical to sequential.
+    * Dry-run stays sequential: there is no action to overlap. */
+  private[graft] def config(execute: Boolean): CheckConfig =
+    CheckConfig(databases = "testdb", execute = execute,
+      logToTable = false, concurrency = if (execute) 8 else 1)
 
   val queries: Seq[Q] = Seq(
     schedulerDryrun, schedulerStateAfterRun, schedulerCommandLog)

@@ -8,6 +8,7 @@ import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
 
 import graft.catalog.InventoryRow
 import graft.model.CheckObject
+import graft.scheduler.Policy
 import graft.tables.Generations
 
 /** Persistent check-history state (SURVEY.md §7.1 step 4) — the lake
@@ -96,13 +97,11 @@ object StateStore {
 
   /** Post-run stat update (ref IC:700-722): shuffles current run into the
     * Previous* columns, bumps the execution count, and folds the duration
-    * into the running average with the reference's exact recurrence
-    * `avg += (new - avg) / n` (integer arithmetic, ref IC:706). */
+    * into the running average ([[Policy.fold]], ref IC:706). */
   def recordRun(o: CheckObject, command: String, start: Instant, end: Instant)
       : CheckObject = {
     val durationMs = end.toEpochMilli - start.toEpochMilli
     val n = o.number_of_executions + 1
-    val newAvg = o.avg_run_duration_ms + (durationMs - o.avg_run_duration_ms) / n
     o.copy(
       previous_run_date = o.start_time,
       previous_run_duration_ms = o.run_duration_ms,
@@ -111,13 +110,9 @@ object StateStore {
       run_duration_ms = durationMs,
       command = command,
       number_of_executions = n,
-      avg_run_duration_ms = newAvg,
+      avg_run_duration_ms =
+        Policy.fold(o.avg_run_duration_ms, n, durationMs),
       last_check_date = Date.valueOf(
         LocalDate.ofInstant(start, ZoneOffset.UTC)))
   }
-
-  /** Daily idempotence predicate (ref IC:664-665): a row is due when its
-    * last check date differs from the job's start date. */
-  def isDueOn(o: CheckObject, jobStart: Instant): Boolean =
-    o.last_check_date.toLocalDate != LocalDate.ofInstant(jobStart, ZoneOffset.UTC)
 }

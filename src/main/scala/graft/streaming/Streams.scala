@@ -520,7 +520,7 @@ object Streams {
       clock: graft.model.Clock, what: String): Unit =
     deadline.foreach { d =>
       val t = clock.observe()
-      if (!t.isBefore(d)) throw new DeadlineReached(
+      if (graft.scheduler.Policy.reached(t, d)) throw new DeadlineReached(
         s"$what: pass deadline $d reached (clock $t) before this " +
           "micro-batch; stopping after the committed prefix — the " +
           "checkpoint holds the remainder for the next pass (IC:644)")
@@ -612,22 +612,23 @@ object Streams {
     }
 
     /** Paths named by the listings `keep(batchId, isCompact)` accepts. */
-    def paths(keep: (Long, Boolean) => Boolean): Set[String] = {
-      val pathRe = """"path":"((?:[^"\\]|\\.)*)"""".r
+    def paths(keep: (Long, Boolean) => Boolean): Set[String] =
       listings.filter { case (id, compact, _) => keep(id, compact) }
         .flatMap { case (_, _, f) =>
           val in = fs.open(f)
-          val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-          pathRe.findAllMatchIn(txt).map { m =>
-            // entries are file URIs; normalize to the bare path so they
-            // compare against listDataFiles regardless of scheme spelling
-            val p = m.group(1).replace("\\/", "/")
-            try new Path(new java.net.URI(p)).toUri.getPath
-            catch { case _: Exception => p }
-          }
+          // Spark's `v1` header, then one JSON entry per line
+          val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
+            .getLines().drop(1).filter(_.nonEmpty).toList finally in.close()
+          lines.flatMap(l =>
+            Option(graft.tables.Json.mapper.readTree(l).get("path")))
+            .map { node =>
+              // entries are file URIs; normalize to the bare path so they
+              // compare against listDataFiles regardless of scheme spelling
+              val p = node.asText
+              try new Path(new java.net.URI(p)).toUri.getPath
+              catch { case _: Exception => p }
+            }
         }.toSet
-    }
 
     /** Files of COMMITTED batches (id ≤ the commit frontier, `.compact`
       * included). A `.compact` past the last commit folds committed

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.catalog.DirInventory
 import graft.executor.CommandLog
 import graft.model.{CheckConfig, ManualClock}
-import graft.scheduler.Scheduler
+import graft.scheduler.{Policy, PolicySpec, Scheduler, SchedulerQueries}
 import graft.state.StateStore
 import graft.tables.Tables
 
@@ -28,6 +28,14 @@ class SchedulerSpec extends AnyFunSuite {
 
   def tmp(): String =
     java.nio.file.Files.createTempDirectory("graft-sched").toString + "/state"
+
+  /** PolicySpec's reference night on the scheduler queries' fixtures,
+    * clock and config. */
+  def policyNight(execute: Boolean): PolicySpec.Night =
+    PolicySpec.night(spark,
+      new DirInventory(spark, Map("testdb" -> SparkTestSession.sfDir)),
+      Nil, SchedulerQueries.config(execute),
+      new ManualClock(SchedulerQueries.FixedStart, tickMs = 10))
 
   test("dry-run golden: exact command list for a 2-object selection") {
     val cfg = CheckConfig(databases = "testdb",
@@ -50,14 +58,17 @@ class SchedulerSpec extends AnyFunSuite {
     // the full fixture dry-run, gated file-exactly: any change to command
     // synthesis, selection, or ordering must consciously update the
     // committed golden (src/test/resources/golden_scheduler_dryrun.txt)
-    val got = graft.scheduler.SchedulerQueries.schedulerDryrun
+    val rows = graft.scheduler.SchedulerQueries.schedulerDryrun
       .run(spark, SparkTestSession.sfDir)
       .collect().sortBy(_.getInt(0))
-      .map(r => s"${r.getInt(0)}|${r.getString(1)}")
+    val got = rows.map(r => s"${r.getInt(0)}|${r.getString(1)}")
     val golden = scala.io.Source
       .fromResource("golden_scheduler_dryrun.txt").getLines().toSeq
       .filter(_.nonEmpty)
     assert(got.toSeq === golden)
+    // and it is the policy's night
+    assert(rows.map(_.getString(1)).toSeq ===
+      policyNight(execute = false).executed)
   }
 
   test("incremental tier: second run touches only newly arrived files " +
@@ -456,6 +467,13 @@ class SchedulerSpec extends AnyFunSuite {
       .fromResource("golden_command_log.txt").getLines().toSeq
       .filter(_.nonEmpty).sorted
     assert(logRows.toSeq === goldenLog)
+    // both are the policy's night on the same fixtures, clock and config
+    val m = policyNight(execute = true)
+    assert(state.toSeq === m.state.map(o => Seq(o.object_name,
+        o.number_of_executions, if (o.active) "True" else "False",
+        o.last_check_date, o.avg_run_duration_ms, o.command).mkString("|"))
+      .sorted)
+    assert(logRows.map(_.split('|')(1)).sorted.toSeq === m.executed.sorted)
   }
 
   test("incremental tier: entirely-null rows count as violations (8939)") {
@@ -546,7 +564,7 @@ class SchedulerSpec extends AnyFunSuite {
     val st = par.state.find(_.object_name == "corrupt").get
     assert(st.number_of_executions === 0L,
       "a thrown concurrent check must not count as an execution")
-    assert(StateStore.isDueOn(st, t0), "the table must remain due")
+    assert(Policy.isDue(st, t0), "the table must remain due")
     // healthy tables completed and recorded despite the sibling failure
     Seq("region", "nation").foreach { n =>
       assert(par.state.find(_.object_name == n).get
@@ -787,7 +805,7 @@ class SchedulerSpec extends AnyFunSuite {
     val st = r.state.find(_.object_name == "corrupt").get
     assert(st.number_of_executions === 0L,
       "a thrown check must not count as an execution")
-    assert(StateStore.isDueOn(st, t0), "the table must remain due")
+    assert(Policy.isDue(st, t0), "the table must remain due")
   }
 
   test("TOCTOU: object dropped between inventory and check is skipped " +

@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.catalog.InventoryRow
 import graft.model.CheckObject
+import graft.scheduler.Policy
 import graft.state.StateStore
 
 /** MERGE arms + incremental-mean recurrence + daily idempotence
@@ -76,12 +77,12 @@ class StateStoreSpec extends AnyFunSuite {
   test("daily idempotence: checked today is not due (ref IC:664-665)") {
     val t0 = Instant.parse("2026-08-12T10:00:00Z")
     val o = StateStore.recordRun(obj(1, "a"), "C", t0, t0.plusMillis(10))
-    assert(!StateStore.isDueOn(o, t0.plusSeconds(7200)))
+    assert(!Policy.isDue(o, t0.plusSeconds(7200)))
     // the reference's manual time-travel fixture: -1 day makes it due again
     // (ref IC:787-790)
     val yesterday = o.copy(last_check_date =
       java.sql.Date.valueOf(o.last_check_date.toLocalDate.minusDays(1)))
-    assert(StateStore.isDueOn(yesterday, t0.plusSeconds(7200)))
+    assert(Policy.isDue(yesterday, t0.plusSeconds(7200)))
   }
 
   test("save/load round-trips through parquet atomically") {
