@@ -23,7 +23,8 @@ object Dev {
       "genskew <srcDir> <dstDir> | " +
       "plans <name,...> <sfDir> [<outDir>[:<suffix>]] | " +
       "jobs <name,...> <sfDir> | stress <skewDir> [<mode>,...] | " +
-      "routes <table.parquet> <rows,...>"
+      "routes <table.parquet> <rows,...> | " +
+      "routes dedup <documents.parquet> <storeRows,...>"
 
   def main(args: Array[String]): Unit = {
     // parse before the session starts: a bad command line fails fast
@@ -43,6 +44,8 @@ object Dev {
       case List("jobs", names, sf) => jobs(_, list(names), sf)
       case List("stress", dir) => stress(_, dir, Seq("throw", "truncate"))
       case List("stress", dir, modes) => stress(_, dir, list(modes))
+      case List("routes", "dedup", docs, rows) =>
+        dedupRoutes(_, docs, list(rows).map(_.toLong))
       case List("routes", table, rows) =>
         routes(_, table, list(rows).map(_.toLong))
       case _ => throw new IllegalArgumentException(Usage)
@@ -197,6 +200,93 @@ object Dev {
       val tmp = new org.apache.hadoop.fs.Path(root.toUri)
       tmp.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .delete(tmp, true)
+    }
+  }
+
+  /** The arrival dedup route crossover behind
+    * `IncrementalDedup.LocalMaxRows`: for each N, a fan-out-1 signature
+    * store of N documents (the table's rows, repeated past its size with
+    * every word suffixed by the copy number, so each copy signs anew)
+    * and one batch of the table's first 250 documents under new ids.
+    * Each route ingests the batch into its own copy of the store (copied
+    * outside the timing), twice untimed, then five times; prints one `ROUTE` line per size with each
+    * route's median ms and the jobs of its last run. The routes must
+    * write the same pairs and the same store. */
+  private def dedupRoutes(spark: SparkSession, docs: String,
+      sizes: Seq[Long]): Unit = {
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    import graft.pipeline.{Dedup, IncrementalDedup}
+    val gauge = new Gauge(spark.sparkContext)
+    val root = java.nio.file.Files.createTempDirectory("graft-routes")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(root.toUri).getFileSystem(conf)
+    val table = spark.read.parquet(docs).select("doc_id", "text")
+    val tableRows = table.count()
+    table.limit(250).withColumn("doc_id", col("doc_id") + (1L << 40))
+      .coalesce(1).write.parquet(s"$root/batch")
+    val batchFile = fs.listStatus(new Path(s"$root/batch")).map(_.getPath)
+      .find(_.getName.endsWith(".parquet")).get
+    val schema = spark.read.parquet(batchFile.toString).schema
+    def rows(dir: String) = spark.read.parquet(dir).collect()
+      .map(_.mkString(",")).sorted.toSeq
+    try sizes.foreach { n =>
+      val store = s"$root/store$n"
+      val corpus = spark.range((n + tableRows - 1) / tableRows)
+        .crossJoin(table)
+        .select((col("doc_id") + col("id") * (1L << 32)).as("doc_id"),
+          when(col("id") === 0, col("text")).otherwise(regexp_replace(
+            col("text"), lit("(\\S+)"), concat(lit("$1_"), col("id")))).as("text"))
+        .orderBy("doc_id").limit(n.toInt)
+      val st = new IncrementalDedup.SigStore(spark, store)
+      st.withLease(st.save(IncrementalDedup.initialStore(
+        Dedup.minhashSig(corpus)), fanOut = 1))
+      val storeRows = st.load().get.count()
+      // a route's median ms, the jobs of its last timed run, and the
+      // directory of its last (untimed) run: `<dir>/store`, `<dir>/pairs`
+      def time(name: String)(
+          route: (IncrementalDedup.SigStore, String) => Unit)
+          : (Double, Long, String) = {
+        var run = 0
+        // (the run's directory, the untimed copy of the store in it)
+        def fresh(): (String, IncrementalDedup.SigStore) = {
+          run += 1
+          val dir = s"$root/$name$n-$run"
+          FileUtil.copy(fs, new Path(store), fs, new Path(s"$dir/store"),
+            false, conf)
+          (dir, new IncrementalDedup.SigStore(spark, s"$dir/store"))
+        }
+        def once(dir: String, copy: IncrementalDedup.SigStore): Unit =
+          copy.withLease(route(copy, s"$dir/pairs"))
+        Seq.fill(2)((once _).tupled(fresh()))
+        val ms = Seq.fill(5) {
+          val (dir, copy) = fresh()
+          val t0 = System.nanoTime()
+          gauge.measure(s"$name route $n")(once(dir, copy))
+          (System.nanoTime() - t0) / 1e6
+        }.sorted
+        val jobs = gauge.jobs.get()
+        val (dir, copy) = fresh()
+        once(dir, copy)
+        (ms(2), jobs, dir)
+      }
+      val (sparkMs, sparkJobs, sparkDir) = time("spark") { (s, out) =>
+        IncrementalDedup.sparkRoute(s,
+          spark.read.schema(schema).parquet(batchFile.toString), out)(())
+      }
+      val (localMs, localJobs, localDir) = time("local") { (s, out) =>
+        require(IncrementalDedup.localRoute(spark, s, Seq(batchFile), schema,
+          out, maxRows = Long.MaxValue)(()), "the local route declined")
+      }
+      val pairs = rows(s"$sparkDir/pairs")
+      require(pairs == rows(s"$localDir/pairs") &&
+        rows(s"$sparkDir/store") == rows(s"$localDir/store"),
+        s"routes disagree at $n store rows")
+      println(f"ROUTE dedup store_rows=$storeRows batch_docs=250 " +
+        f"spark_ms=$sparkMs%.1f spark_jobs=$sparkJobs " +
+        f"local_ms=$localMs%.1f local_jobs=$localJobs pairs=${pairs.size}")
+    } finally {
+      gauge.close()
+      fs.delete(new Path(root.toUri), true)
     }
   }
 

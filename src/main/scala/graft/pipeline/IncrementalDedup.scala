@@ -1,12 +1,20 @@
 package graft.pipeline
 
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
+import com.fasterxml.jackson.core.JsonProcessingException
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.spark.sql.{DataFrame, Encoders, GraftSqlBridge, Row,
+  SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.Q
+import graft.functions.{MinhashSig, Shingles}
 import graft.tables.Checkpoints.CheckpointOps
-import graft.tables.Tables
+import graft.tables.{Json, Tables}
 
 /** INCREMENTAL near-dup detection for ARRIVING data — the dedup analog
   * of the incremental integrity tier (scheduler.IncrementalScheduler,
@@ -357,6 +365,222 @@ object IncrementalDedup {
       rectCache = if (keepRect) Some(rect) else None)
   }
 
+  /** The arrival dedup drain's driver-local route ([[localRoute]]) takes
+    * a micro-batch while store rows plus batch rows, read from the
+    * parquet footers, stay within this many rows; a larger one takes
+    * [[sparkRoute]].
+    *
+    * Crossover (`Dev routes dedup`, a fan-out-1 store of N signature
+    * rows, one batch of 250 documents, 4-core host, median of five):
+    *
+    * {{{
+    *   store rows   Spark route (25 jobs)   local route (0 jobs)
+    *        1,000              3,323 ms                 164 ms
+    *        5,000              2,645 ms                 210 ms
+    *       20,000              2,784 ms                 464 ms
+    *       50,000              2,957 ms                 529 ms
+    *      100,000              3,502 ms               1,365 ms
+    * }}}
+    *
+    * The Spark route costs about 3 s at any size; the local route about
+    * 150 ms plus 5-12 µs per store row, so the two would cross past
+    * 200,000 rows. The bound sits well below that because the local
+    * route holds the whole store on the driver, twice (the rows read
+    * and the next generation): at 50,000 rows that is on the order of
+    * 100 MB of heap. */
+  private[graft] val LocalMaxRows: Long = 50000L
+
+  /** One micro-batch of the arrival dedup drain through Spark: [[ingest]]
+    * against the loaded store, the pairs written to `pairsDir`
+    * (overwriting it), `afterPairs`, then the store update: a bootstrap
+    * writes a whole generation ([[SigStore.save]]), a steady batch
+    * rewrites the partitions it touched ([[SigStore.saveIncremental]]).
+    * The route of every store size and fan-out. */
+  private[graft] def sparkRoute(store: SigStore, batch: DataFrame,
+      pairsDir: String, maxBucket: Int = 1000)(afterPairs: => Unit): Unit = {
+    val prev = store.load()
+    val r = ingest(
+      prev.getOrElse(initialStore(Dedup.minhashSig(batch.limit(0)))),
+      Dedup.minhashSig(batch), maxBucket,
+      // prune with the fan-out the store was WRITTEN with
+      buckets = if (prev.isEmpty) StoreBuckets else store.buckets,
+      // steady state: keep the pruned-rectangle cache alive so the store
+      // update's retained-rows scan reads executor blocks instead of the
+      // same partitions from disk a second time
+      keepRect = prev.nonEmpty)
+    try {
+      r.pairs.coalesce(1).write.mode("overwrite").parquet(pairsDir)
+      afterPairs
+      if (prev.isEmpty) store.save(r.updatedStore)
+      else store.saveIncremental(r.touched, r.touchedParts,
+        rect = r.rectCache)
+    } finally r.rectCache.foreach(_.unpersist(false))
+  }
+
+  /** A signature row: [[SigStore]]'s columns without the bucket ones. */
+  private final case class SigRow(key: String, doc: Long, m: Seq[String],
+      rep: Long) {
+    def b0: String = m.take(4).mkString("|")
+    def b1: String = m.drop(4).mkString("|")
+  }
+
+  private val DocSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("text", StringType)))
+
+  /** [[sparkRoute]] on the driver, with no Spark job, for a batch whose
+    * files are `files` (`schema` is the stream's). It runs when the store
+    * is absent or at fan-out 1 and the footers hold at most `maxRows`
+    * store plus batch rows; it reads both through Spark's parquet row
+    * reader ([[GraftSqlBridge.ParquetRows]]), derives the batch's
+    * signatures with the static kernels [[Dedup.minhashSig]] runs
+    * (distinct bigrams, then [[graft.functions.MinhashSig]], rows of one
+    * doc_id folded by element-wise min), and applies [[ingest]]'s
+    * membership, representatives, banding and new-endpoint restriction
+    * to the same row sets, so both bucket-cap modes see the same buckets.
+    * It writes what [[sparkRoute]] writes: the pairs, then `afterPairs`,
+    * then a fan-out-1 generation with the same columns and metadata (none
+    * for a steady batch without a signature).
+    *
+    * Returns false, having written nothing, where [[sparkRoute]] must run
+    * instead: over the bounds, a doc_id that is not BIGINT or text that
+    * is not STRING, a batch file whose footer does not read (a vanished
+    * file is skipped, as the stream's `ignoreMissingFiles` skips it), an
+    * unknown bucket-cap mode, and the two batches on which [[ingest]]
+    * raises (a signed document with a null doc_id, which breaks the
+    * one-row-per-doc contract, and a bucket over `maxBucket` in throw
+    * mode), so those raise the Spark route's own errors. */
+  private[graft] def localRoute(spark: SparkSession, store: SigStore,
+      files: Seq[Path], schema: StructType, pairsDir: String,
+      maxRows: Long = LocalMaxRows, maxBucket: Int = 1000)(
+      afterPairs: => Unit): Boolean = {
+    val mode = spark.conf.getOption("spark.graft.bucketCap.mode")
+      .getOrElse("throw")
+    def typed(name: String, t: DataType) =
+      schema.find(_.name == name).exists(_.dataType == t)
+    if (!Set("throw", "truncate")(mode) || !typed("doc_id", LongType) ||
+        !typed("text", StringType)) return false
+    val stored = store.flatFiles().getOrElse(return false)
+    val bootstrap = stored.isEmpty
+    val docs = new GraftSqlBridge.ParquetRows(spark, DocSchema)
+    val batch = files.flatMap { f =>
+      try Some(f -> GraftSqlBridge.parquetFooter(docs.conf, f))
+      catch {
+        case _: java.io.FileNotFoundException => None
+        case NonFatal(_) => return false
+      }
+    }
+    def rows(footers: Seq[(Path, ParquetMetadata)]) =
+      footers.map(_._2.getBlocks.asScala.map(_.getRowCount).sum).sum
+    val batchRows = rows(batch)
+    if (rows(stored) + batchRows > maxRows ||
+        bootstrap && chooseBuckets(batchRows) != 1) return false
+
+    // the batch's signatures, one per doc_id
+    val sigs = scala.collection.mutable.LinkedHashMap.empty[Long, Seq[String]]
+    var unkeyed = false
+    batch.foreach { case (f, footer) =>
+      try docs.read(f, footer)(_.foreach { r =>
+        if (!r.isNullAt(1)) {
+          val sh = Shingles.bigrams(r.getUTF8String(1), distinct = true)
+          if (sh.numElements() > 0) {
+            val sig = MinhashSig.sig(sh)
+            val m: Seq[String] =
+              (0 until MinhashSig.K).map(sig.getUTF8String(_).toString)
+            if (r.isNullAt(0)) unkeyed = true
+            else {
+              val d = r.getLong(0)
+              sigs(d) = sigs.get(d).fold(m)(_.zip(m).map { case (a, b) =>
+                if (a.compareTo(b) <= 0) a else b })
+            }
+          }
+        }
+      })
+      catch { case _: java.io.FileNotFoundException => () }
+    }
+    if (unkeyed) return false
+    val fresh = sigs.toSeq.map { case (d, m) => (m.mkString("|"), d, m) }
+    val old = {
+      val p = new GraftSqlBridge.ParquetRows(spark, StoreSchema)
+      stored.flatMap { case (f, footer) => p.read(f, footer)(_.map { r =>
+        SigRow(r.getUTF8String(0).toString, r.getLong(1),
+          (2 until 10).map(r.getUTF8String(_).toString), r.getLong(10))
+      }.toVector) }
+    }
+
+    // ingest's row sets (at fan-out 1 its rectangle is the whole store)
+    val newIds = fresh.map(_._2).toSet
+    val touchedKeys = fresh.map(_._1).toSet
+    val members = old.filter(r => touchedKeys(r.key) && !newIds(r.doc))
+      .map(r => (r.key, r.doc, r.m)) ++ fresh
+    val reps = members.groupMapReduce(_._1)(_._2)(math.min)
+    val touched = members.map { case (k, d, m) => SigRow(k, d, m, reps(k)) }
+    val bandKeys = touched.filter(r => r.doc == r.rep && newIds(r.doc))
+      .flatMap(r => Seq((0, r.b0), (1, r.b1))).toSet
+    val pruned = old.filter(r => r.doc == r.rep && !touchedKeys(r.key) &&
+        (bandKeys((0, r.b0)) || bandKeys((1, r.b1))))
+      .groupBy(_.doc).values.map(_.head)
+    val pairs = lshPairsLocal(touched ++ pruned, maxBucket,
+      truncate = mode == "truncate").getOrElse(return false)
+      .filter(p => newIds(p._1) || newIds(p._2))
+
+    val out = new Path(pairsDir)
+    out.getFileSystem(docs.conf).delete(out, true)
+    if (mode == "truncate")
+      GraftSqlBridge.writeParquetFile(spark, out,
+        pairs.map { case (a, b, t) => Row(a, b, t) })(
+        Encoders.row(PairSchema.add("bucket_truncated", BooleanType)))
+    else
+      GraftSqlBridge.writeParquetFile(spark, out,
+        pairs.map { case (a, b, _) => Row(a, b) })(Encoders.row(PairSchema))
+    afterPairs
+    if (bootstrap || fresh.nonEmpty)
+      store.writeFlat((old.filterNot(r => touchedKeys(r.key)) ++ touched)
+        .map(r => Row.fromSeq(r.key +: r.doc +: r.m :+ r.rep :+ 0 :+ 0)))
+    true
+  }
+
+  private val PairSchema = StructType(Seq(
+    StructField("doc_a", LongType), StructField("doc_b", LongType)))
+
+  /** The stored columns, in the order [[SigStore]] writes them. */
+  private val StoreSchema = StructType(
+    StructField("sig_key", StringType) +: StructField("doc_id", LongType) +:
+      (0 until 8).map(k => StructField(s"m$k", StringType)) :+
+      StructField("rep", LongType) :+ StructField("pb0", IntegerType) :+
+      StructField("pb1", IntegerType))
+
+  /** [[Dedup.lshPairsFromRep]] over driver rows: (doc_a, doc_b,
+    * bucket_truncated) per pair. None where the Spark form raises (a
+    * bucket over `maxBucket` in throw mode); in truncate mode an oversize
+    * bucket keeps its first `maxBucket` entries by md5 of
+    * `band|band_key|doc_id`, then doc_id. */
+  private def lshPairsLocal(rows: Seq[SigRow], maxBucket: Int,
+      truncate: Boolean): Option[Seq[(Long, Long, Boolean)]] = {
+    val star = rows.filter(r => r.doc != r.rep).map(r => (r.rep, r.doc, false))
+    // (band, band_key, doc_id, prev_key): band 1 suppresses the pairs
+    // band 0 already emitted
+    val entries = rows.filter(r => r.doc == r.rep).flatMap(r =>
+      Seq((0, r.b0, r.doc, r.doc.toString), (1, r.b1, r.doc, r.b0)))
+    val banded = entries.groupBy(e => (e._1, e._2)).toSeq.map {
+      case ((band, key), es) =>
+        val over = es.size > maxBucket
+        if (over && !truncate) return None
+        val kept = if (!over) es else es.sortBy(e =>
+          (md5Hex(s"$band|$key|${e._3}"), e._3)).take(maxBucket)
+        val ids = kept.map(e => (e._3, e._4)).sorted
+        for {
+          i <- ids.indices
+          j <- i + 1 until ids.size
+          if ids(i)._2 != ids(j)._2
+        } yield (ids(i)._1, ids(j)._1, over)
+    }
+    Some(star ++ banded.flatten)
+  }
+
+  private def md5Hex(s: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+
   /** Parquet-backed signature store, partitioned by the band-key bucket
     * columns (pb0, pb1) so [[ingest]]'s reads and
     * [[saveIncremental]]'s writes prune to the partitions a batch
@@ -388,9 +612,13 @@ object IncrementalDedup {
     * to cure.
     *
     * The fan-out the store was written with is persisted in
-    * `_graft_meta.json` inside the store directory ([[buckets]] reads
-    * it); a store without the metadata is refused loudly rather than
-    * scanned with a guessed modulus that would silently mis-prune.
+    * `_graft_meta.json` inside the store directory (`{"format":2,
+    * "buckets":N}`; [[buckets]] reads it); a store without the metadata
+    * is refused loudly rather than scanned with a guessed modulus that
+    * would silently mis-prune.
+    *
+    * A fan-out-1 store is one flat file, which [[localRoute]] reads
+    * ([[flatFiles]]) and rewrites ([[writeFlat]]) on the driver.
     *
     * Single-writer is enforced best-effort by the shared
     * [[graft.tables.StoreLease]] ([[acquireLease]], [[renewLease]],
@@ -451,16 +679,14 @@ object IncrementalDedup {
       }
     }
 
+    /** The fan-out in `root`'s `_graft_meta.json`; None when the file is
+      * absent, does not parse or holds no integral `buckets`. */
     private def readMeta(root: String): Option[Int] = {
       val mp = metaPath(root)
       if (!fs.exists(mp)) None
-      else {
-        val in = fs.open(mp)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-        """"buckets"\s*:\s*(\d+)""".r.findFirstMatchIn(txt)
-          .map(_.group(1).toInt)
-      }
+      else try Some(Json.mapper.readTree(fs.open(mp)).path("buckets"))
+        .filter(_.isIntegralNumber).map(_.asInt)
+      catch { case _: JsonProcessingException => None }
     }
 
     private def writeMeta(root: String, b: Int): Unit = {
@@ -472,6 +698,26 @@ object IncrementalDedup {
     /** The live generation ([[graft.tables.Generations.read]]): None
       * before the first save and after a whole-corpus forget. */
     def load(): Option[DataFrame] = gens.read()
+
+    /** [[load]]'s generation as [[localRoute]] reads it, listed on the
+      * driver: its data files with their footers. Recovers first, like
+      * [[load]]. Empty where [[load]] is None (no generation, or one a
+      * whole-corpus forget emptied); None for a partitioned store (a
+      * fan-out above 1), which only [[sparkRoute]] reads. */
+    private[pipeline] def flatFiles(): Option[Seq[(Path, ParquetMetadata)]] = {
+      gens.recover()
+      val root = new Path(gens.serveRoot())
+      if (!fs.exists(root)) return Some(Nil)
+      val (dirs, files) = fs.listStatus(root).toSeq
+        .filterNot(s => GraftSqlBridge.hidden(s.getPath.getName))
+        .partition(_.isDirectory)
+      if (dirs.nonEmpty || files.nonEmpty && buckets != 1) None
+      else {
+        val conf = spark.sessionState.newHadoopConf()
+        Some(files.map(s =>
+          s.getPath -> GraftSqlBridge.parquetFooter(conf, s.getPath)))
+      }
+    }
 
     /** Full-generation swap — bootstrap and rebuilds. `storeFrame` may
       * lazily read from `path` (it usually derives from [[load]]): the
@@ -500,7 +746,7 @@ object IncrementalDedup {
     private def writeGeneration(frame: DataFrame, bkts: Int): Unit = {
       val bucketed =
         withStoreBuckets(frame.select((sigCols :+ col("rep")): _*), bkts)
-      gens.writeGeneration { tmp =>
+      commitGeneration(bkts) { tmp =>
         // one file per populated cell: cluster rows by cell before the
         // partitioned write. At fan-out 1 the store IS one cell, so the
         // degraded layout is literally the flat one — a single file with
@@ -514,8 +760,20 @@ object IncrementalDedup {
           bucketed.repartition(col("pb0"), col("pb1"))
             .write.mode(SaveMode.Overwrite)
             .partitionBy("pb0", "pb1").parquet(tmp)
-        writeMeta(tmp, bkts)
       }
+    }
+
+    /** A fan-out-1 generation of `rows` (the stored columns, pb0 = pb1 =
+      * 0), written on the driver: the one file and the metadata
+      * [[writeGeneration]] leaves for a one-cell store, with no job. */
+    private[pipeline] def writeFlat(rows: Seq[Row]): Unit =
+      commitGeneration(1)(tmp => GraftSqlBridge.writeParquetFile(spark,
+        new Path(tmp), rows)(Encoders.row(StoreSchema)))
+
+    /** `write` the data of the next generation into its tmp directory,
+      * record the fan-out beside it, and swap it in. */
+    private def commitGeneration(bkts: Int)(write: String => Unit): Unit = {
+      gens.writeGeneration { tmp => write(tmp); writeMeta(tmp, bkts) }
       try {
         val st = fs.getFileStatus(metaPath(path))
         metaCache = Some((bkts, st.getModificationTime, st.getLen))

@@ -7,11 +7,14 @@ import java.util.UUID
 import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Encoders, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.types.{BooleanType, StructField, StructType}
 
 import graft.catalog.DirInventory
 import graft.executor.CommandLog
 import graft.model.{Clock, CommandLogEntry}
+import graft.tables.Tables
 
 /** Result of one stage of the composed arrival pass. `status`:
   * `ran` | `failed` | `admission_skipped` (time budget exhausted
@@ -362,12 +365,17 @@ object ArrivalPass {
         "with no compaction record — pending data vanished before " +
         "ingest"
     }
+    // the landing schemas, inferred (one Spark job each) at most once a
+    // pass: dedup_ingest and oov_qc drain the same documents landing
+    lazy val docsSchema = spark.read.parquet(docsDir).schema
+    lazy val vecsSchema = spark.read.parquet(vecsDir).schema
     // one ingest stage: its two input-skip arms, else the drain of `dir`
     // through `run` against `<checkpointRoot>/<ckpt>`
-    def ingestStage(name: String, dir: String, ckpt: String,
-        landedHere: Boolean, isNew: Boolean, what: String, normal: String)(
-        run: (org.apache.spark.sql.types.StructType, String) =>
-          graft.streaming.Streams.DrainReport): Unit =
+    def ingestStage(name: String, dir: String, schema: => StructType,
+        ckpt: String, landedHere: Boolean, isNew: Boolean, what: String,
+        normal: String)(
+        run: (StructType, String) => graft.streaming.Streams.DrainReport)
+        : Unit =
       stage(name, hasWork = isNew, resumable = true) {
         if (!landedHere)
           ("skipped_empty", s"no arrivals under $dir" +
@@ -376,22 +384,22 @@ object ArrivalPass {
           ("skipped_empty", s"no NEW $what files since the last pass " +
             s"under $dir (checkpoint covers the landing; stream " +
             "spin-up skipped)")
-        else ("ran", run(spark.read.parquet(dir).schema,
+        else ("ran", run(schema,
           s"${cfg.checkpointRoot}/$ckpt").detail(normal))
       }
     // the pass deadline flows INTO the drain (IC:644's inner-loop clock
     // check): a backlogged landing zone admitted late in the budget
     // stops at a batch boundary instead of overrunning unboundedly; the
     // checkpoint keeps the remainder
-    ingestStage("dedup_ingest", docsDir, "dedup", docsLanded, docsNew,
-        "document", s"store=${cfg.sigStorePath} pairs under " +
+    ingestStage("dedup_ingest", docsDir, docsSchema, "dedup", docsLanded,
+        docsNew, "document", s"store=${cfg.sigStorePath} pairs under " +
           cfg.dedupOut) { (schema, ckpt) =>
       graft.streaming.Streams.incrementalDedupStream(spark, docsDir,
         schema, cfg.sigStorePath, ckpt, cfg.dedupOut, deadline, clock,
         Some(cfg.maxFilesPerBatch), heartbeat = () => passLease.renew())
     }
-    ingestStage("ann_ingest", vecsDir, "ann", vecsLanded, vecsNew,
-        "vector", s"index=${cfg.annStorePath}") { (schema, ckpt) =>
+    ingestStage("ann_ingest", vecsDir, vecsSchema, "ann", vecsLanded,
+        vecsNew, "vector", s"index=${cfg.annStorePath}") { (schema, ckpt) =>
       graft.streaming.Streams.incrementalAnnStream(spark, vecsDir, schema,
         cfg.annStorePath, ckpt, deadline, clock,
         Some(cfg.maxFilesPerBatch), heartbeat = () => passLease.renew())
@@ -707,8 +715,7 @@ object ArrivalPass {
           // (an accumulating landing zone must not be re-scored
           // nightly), per-batch reports land under batch_id partitions
           // idempotent under replay
-          val schema = spark.read.parquet(docsDir).schema
-          val resDocs = spark.read.parquet(res).select("text")
+          val resDocs = Tables.memoizedParquet(spark, res).select("text")
           val out = s"${cfg.checkpointRoot}/oov"
           // batch ids THIS pass committed — the stage detail must
           // report tonight's QC, not re-announce last week's flags
@@ -720,7 +727,7 @@ object ArrivalPass {
           // (checkpoint resumes), and the pass lease stays live
           val r =
             graft.streaming.Streams.incrementalCheckById(spark, docsDir,
-              schema,
+              docsSchema,
               (batch, id) => {
                 passBatches.add(id)
                 graft.pipeline.TextAnalysis.oovReport(
@@ -744,13 +751,14 @@ object ArrivalPass {
           else {
             import scala.jdk.CollectionConverters._
             val ids = passBatches.asScala.toSeq
-            val rows = spark.read.parquet(out)
-              .filter(org.apache.spark.sql.functions.col("batch_id")
-                .isInCollection(ids))
-            val flagged = rows.filter(org.apache.spark.sql.functions
-              .col("flagged")).count()
+            // a report holds at most one row per source per batch: read
+            // on the driver, no job
+            val flags = ids.flatMap(id => GraftSqlBridge.readParquetRows(
+              spark, new Path(out, s"batch_id=$id"))(Encoders.row(
+                StructType(Seq(StructField("flagged", BooleanType))))))
+            val flagged = flags.count(r => !r.isNullAt(0) && r.getBoolean(0))
             ("ran", r.detail(s"batches=${ids.size} " +
-              s"report_rows=${rows.count()} flagged=$flagged " +
+              s"report_rows=${flags.size} flagged=$flagged " +
               s"report=$out resident=$res"))
           }
       }

@@ -23,8 +23,9 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation,
   Project}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.datasources.{DataSourceUtils,
-  RecordReaderIterator}
+  FileScanRDD, RecordReaderIterator}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetOptions, ParquetReadSupport, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.internal.SQLConf
@@ -107,9 +108,31 @@ object GraftSqlBridge {
     ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
       new ParquetToSparkSchemaConverter(spark.sessionState.conf)).asNullable
 
+  /** The files a streaming micro-batch scans, found without running it:
+    * `foreachBatch` hands over a `LogicalRDD` over the batch's planned
+    * scan (so `Dataset.inputFiles` reads empty), and the scan's
+    * `FileScanRDD` in that RDD's lineage holds the file splits Spark
+    * planned, empty files already left out. None when `batch` is not
+    * such a frame or its lineage holds no file scan. */
+  def batchFiles(batch: DataFrame): Option[Seq[Path]] = {
+    def scans(rdd: org.apache.spark.rdd.RDD[_]): Seq[FileScanRDD] =
+      rdd match {
+        case f: FileScanRDD => Seq(f)
+        case r => r.dependencies.flatMap(d => scans(d.rdd))
+      }
+    batch.queryExecution.analyzed match {
+      case r: LogicalRDD => scans(r.rdd) match {
+        case Seq() => None
+        case fs => Some(fs.flatMap(_.filePartitions.flatMap(
+          _.files.map(_.toPath))).distinct)
+      }
+      case _ => None
+    }
+  }
+
   /** Names Spark never reads as data files (`PartitioningAwareFileIndex`):
     * markers, checksums and in-flight files. */
-  private def hidden(name: String): Boolean =
+  def hidden(name: String): Boolean =
     name.startsWith("_") || name.startsWith(".") || name.endsWith("._COPYING_")
 
   /** Spark's parquet row reader, driven on the driver: no Spark job, and
