@@ -24,7 +24,8 @@ object Dev {
       "plans <name,...> <sfDir> [<outDir>[:<suffix>]] | " +
       "jobs <name,...> <sfDir> | stress <skewDir> [<mode>,...] | " +
       "routes <table.parquet> <rows,...> | " +
-      "routes dedup <documents.parquet> <storeRows,...>"
+      "routes dedup <documents.parquet> <storeRows,...> | " +
+      "routes oov <documents.parquet> <residentRows,...>"
 
   def main(args: Array[String]): Unit = {
     // parse before the session starts: a bad command line fails fast
@@ -46,6 +47,8 @@ object Dev {
       case List("stress", dir, modes) => stress(_, dir, list(modes))
       case List("routes", "dedup", docs, rows) =>
         dedupRoutes(_, docs, list(rows).map(_.toLong))
+      case List("routes", "oov", docs, rows) =>
+        oovRoutes(_, docs, list(rows).map(_.toLong))
       case List("routes", table, rows) =>
         routes(_, table, list(rows).map(_.toLong))
       case _ => throw new IllegalArgumentException(Usage)
@@ -284,6 +287,82 @@ object Dev {
       println(f"ROUTE dedup store_rows=$storeRows batch_docs=250 " +
         f"spark_ms=$sparkMs%.1f spark_jobs=$sparkJobs " +
         f"local_ms=$localMs%.1f local_jobs=$localJobs pairs=${pairs.size}")
+    } finally {
+      gauge.close()
+      fs.delete(new Path(root.toUri), true)
+    }
+  }
+
+  /** The OOV report route crossover behind `OovQc.LocalMaxRows`: for
+    * each N, a resident corpus of N documents (the table's rows,
+    * repeated past its size with every word suffixed by the copy number
+    * and doc_id / 4, so the vocabulary grows with N), its kept
+    * vocabulary, and one batch
+    * of the table's first 250 documents under new ids. Each route
+    * resolves the kept vocabulary and reports the batch into a fresh
+    * directory, twice untimed, then five times; prints one `ROUTE` line
+    * per size with the vocabulary's rows, each route's median ms and the
+    * jobs of its last timed run. The routes must write the same report. */
+  private def oovRoutes(spark: SparkSession, docs: String,
+      sizes: Seq[Long]): Unit = {
+    import org.apache.hadoop.fs.Path
+    import graft.pipeline.OovQc
+    val gauge = new Gauge(spark.sparkContext)
+    val root = java.nio.file.Files.createTempDirectory("graft-routes")
+    val fs = new Path(root.toUri)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val table = spark.read.parquet(docs).select("doc_id", "source", "text")
+    val tableRows = table.count()
+    table.limit(250).withColumn("doc_id", col("doc_id") + (1L << 40))
+      .coalesce(1).write.parquet(s"$root/batch")
+    val batchFile = fs.listStatus(new Path(s"$root/batch")).map(_.getPath)
+      .find(_.getName.endsWith(".parquet")).get
+    val schema = spark.read.parquet(batchFile.toString).schema
+    def rows(dir: String) =
+      spark.read.parquet(dir).collect().map(_.mkString(",")).toSeq
+    try sizes.foreach { n =>
+      val resident = s"$root/resident$n"
+      spark.range((n + tableRows - 1) / tableRows).crossJoin(table)
+        .select(when(col("id") === 0, col("text")).otherwise(regexp_replace(
+          col("text"), lit("(\\S+)"), concat(lit("$1_"), col("id"), lit("_"),
+            (col("doc_id") / 4).cast("long")))).as("text"))
+        .limit(n.toInt).coalesce(1).write.parquet(resident)
+      val store = new OovQc.VocabStore(spark, s"$root/vocab$n")
+      val vocabRows = store.resolve(resident).rows
+      // a route's median ms, the jobs of its last timed run, and the
+      // report directory of its last (untimed) run
+      def time(name: String)(route: (OovQc.Vocab, Path) => Unit)
+          : (Double, Long, String) = {
+        var run = 0
+        def once(): String = {
+          run += 1
+          val dir = s"$root/$name$n-$run"
+          route(store.resolve(resident), new Path(dir))
+          dir
+        }
+        Seq.fill(2)(once())
+        val ms = Seq.fill(5) {
+          val t0 = System.nanoTime()
+          gauge.measure(s"$name route $n")(once())
+          (System.nanoTime() - t0) / 1e6
+        }.sorted
+        val jobs = gauge.jobs.get()
+        (ms(2), jobs, once())
+      }
+      val (sparkMs, sparkJobs, sparkDir) = time("spark") { (v, out) =>
+        OovQc.sparkRoute(v,
+          spark.read.schema(schema).parquet(batchFile.toString), out)
+      }
+      val (localMs, localJobs, localDir) = time("local") { (v, out) =>
+        require(OovQc.localRoute(spark, v, Seq(batchFile), schema, out,
+          maxRows = Long.MaxValue), "the local route declined")
+      }
+      val report = rows(sparkDir)
+      require(report == rows(localDir), s"routes disagree at $n rows")
+      println(f"ROUTE oov resident_rows=$n vocab_rows=$vocabRows " +
+        f"batch_docs=250 spark_ms=$sparkMs%.1f spark_jobs=$sparkJobs " +
+        f"local_ms=$localMs%.1f local_jobs=$localJobs " +
+        f"report_rows=${report.size}")
     } finally {
       gauge.close()
       fs.delete(new Path(root.toUri), true)

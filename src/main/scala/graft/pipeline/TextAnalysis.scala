@@ -1504,9 +1504,9 @@ object TextAnalysis {
     * broadcasts while it fits (vocabularies are ~10⁷ rows at web
     * scale; beyond that: shuffle join on token, where the pre-collapse
     * plus AQE skew-split keep reducers bounded). The report is
-    * |sources| rows; work is ∝ batch + one resident vocab build that a
-    * production deployment amortizes across batches (it only changes
-    * when the resident corpus does). */
+    * |sources| rows; work is ∝ batch + one resident vocab build, which
+    * the arrival pass amortizes across batches ([[OovQc.VocabStore]]
+    * rebuilds it only when the resident corpus's files change). */
   val tx23ArrivalOov: Q = Q(
     "tx23_arrival_oov",
     """WITH tag AS (
@@ -1546,18 +1546,31 @@ object TextAnalysis {
     oovReport(docs.filter(isNew), docs.filter(!isNew))
   }
 
-  /** The tx23 computation over EXPLICIT arriving/resident frames — the
-    * composed arrival pass (scheduler.ArrivalPass) QCs a landing zone's
-    * documents against the user's resident corpus through this exact
-    * code path, so the gated query transitively covers the product
-    * stage. `arriving` needs (doc_id, source, text); `resident` needs
-    * (text). Scale shape documented on [[tx23ArrivalOov]]. */
-  def oovReport(arriving: DataFrame, resident: DataFrame): DataFrame = {
-    val vocab = resident
+  /** The tx23 computation over EXPLICIT arriving/resident frames:
+    * [[oovReportAgainst]] the resident corpus's [[vocabulary]], exactly.
+    * `arriving` needs (doc_id, source, text); `resident` needs (text).
+    * The composed arrival pass (scheduler.ArrivalPass) keeps the
+    * vocabulary half as a persisted generation rebuilt only when the
+    * resident corpus changes ([[OovQc.VocabStore]]) and reports each
+    * batch against it, so the gated query covers both halves of the
+    * product stage. Scale shape documented on [[tx23ArrivalOov]]. */
+  def oovReport(arriving: DataFrame, resident: DataFrame): DataFrame =
+    oovReportAgainst(arriving, vocabulary(resident))
+
+  /** The distinct non-empty tokens (`token`) of `resident`'s `text`,
+    * split on single spaces. */
+  def vocabulary(resident: DataFrame): DataFrame =
+    resident
       .select(explode(split(col("text"), " ")).as("token"))
       .filter(col("token") =!= "")
       .distinct()
-      .withColumn("inv", lit(1))
+
+  /** Per source of `arriving`: documents (`n_docs`, distinct non-null
+    * doc_ids), token instances, those outside `vocab` (a frame of
+    * distinct `token`s), the distinct new tokens, the OOV rate
+    * ([[StableRound.r4]]) and whether it exceeds 5 %, in `source` order.
+    * A source with no token gets no row. */
+  def oovReportAgainst(arriving: DataFrame, vocab: DataFrame): DataFrame = {
     val atok = arriving
       .select(col("doc_id"), col("source"),
         explode(split(col("text"), " ")).as("token"))
@@ -1571,7 +1584,8 @@ object TextAnalysis {
     // falls back to a shuffle join when a web-scale vocabulary
     // outgrows it — a hard hint would override that fallback and
     // drive the driver into the 8 GB broadcast wall instead
-    atok.join(vocab, Seq("token"), "left")
+    atok.join(vocab.select(col("token"), lit(1).as("inv")), Seq("token"),
+        "left")
       .withColumn("oov", when(col("inv").isNull, 1L).otherwise(0L))
       .groupBy("source")
       .agg(countDistinct("doc_id").as("n_docs"),

@@ -14,7 +14,6 @@ import org.apache.spark.sql.types.{BooleanType, StructField, StructType}
 import graft.catalog.DirInventory
 import graft.executor.CommandLog
 import graft.model.{Clock, CommandLogEntry}
-import graft.tables.Tables
 
 /** Result of one stage of the composed arrival pass. `status`:
   * `ran` | `failed` | `admission_skipped` (time budget exhausted
@@ -81,10 +80,16 @@ final case class ArrivalReport(stages: Seq[StageResult],
   *      the reference's nightly job runs IndexOptimize — AFTER the
   *      forget queue, so its measurements see the post-takedown store;
   *   6. `oov_qc`                — the arriving documents' vocabulary
-  *      drift against the resident corpus (TextAnalysis.oovReport —
-  *      tx23's exact code path), checkpointed like the ingest stages
+  *      drift against the resident corpus (TextAnalysis.oovReport's two
+  *      halves — tx23's code path), checkpointed like the ingest stages
   *      (only files arrived since the last pass are QC'd; per-batch
-  *      reports under `<checkpointRoot>/oov/batch_id=<n>`);
+  *      reports under `<checkpointRoot>/oov/batch_id=<n>`). The
+  *      vocabulary is kept under `<checkpointRoot>/oov_vocab` and
+  *      rebuilt only when the resident corpus's files change
+  *      ([[graft.pipeline.OovQc.VocabStore]]); a small batch is reported
+  *      on the driver, a large one through Spark
+  *      ([[graft.pipeline.OovQc.writeReport]]), and the detail names the
+  *      route and whether the vocabulary was kept or rebuilt;
   *   7. `table_compact`         — opt-in (`compactTargetBytes`):
   *      small-file compaction of every resident directory table, the
   *      IndexOptimize-job half of the reference's maintenance surface
@@ -264,13 +269,14 @@ object ArrivalPass {
     // schema inference needs a file), and has anything NEW landed
     // since the stage's checkpoint (the quiet fast path — an
     // accumulated landing zone must not pay three stream spin-ups per
-    // quiet night; same probe the integrity tier runs per table)
-    def landed(dir: String): Boolean =
-      graft.streaming.Streams.listDataFiles(spark, dir).nonEmpty
+    // quiet night; same probe the integrity tier runs per table). The
+    // listing also names the file a landing's schema is read from.
     val docsDir = s"${cfg.landing}/documents"
-    val docsLanded = landed(docsDir)
+    val docsFiles = graft.streaming.Streams.listDataStatuses(spark, docsDir)
+    val docsLanded = docsFiles.nonEmpty
     val vecsDir = s"${cfg.landing}/embeddings"
-    val vecsLanded = landed(vecsDir)
+    val vecsFiles = graft.streaming.Streams.listDataStatuses(spark, vecsDir)
+    val vecsLanded = vecsFiles.nonEmpty
     // a pending UNEXPLAINED VANISH counts as work (the integrity
     // tier's quiet-gate bypass, mirrored — round-15 review): the
     // vanish candidates are by definition files NOT on disk, so a
@@ -293,7 +299,8 @@ object ArrivalPass {
     // <landing>/forget, drained by this pass like every ingest stage —
     // same probes, so a quiet queue costs a driver listing, zero jobs
     val forgetDir = s"${cfg.landing}/forget"
-    val forgetLanded = landed(forgetDir)
+    val forgetLanded =
+      graft.streaming.Streams.listDataFiles(spark, forgetDir).nonEmpty
     val forgetNew = forgetLanded &&
       pendingWork(forgetDir, s"${cfg.checkpointRoot}/forget_ckpt")
     def rootExists(p: String): Boolean = {
@@ -365,10 +372,10 @@ object ArrivalPass {
         "with no compaction record — pending data vanished before " +
         "ingest"
     }
-    // the landing schemas, inferred (one Spark job each) at most once a
-    // pass: dedup_ingest and oov_qc drain the same documents landing
-    lazy val docsSchema = spark.read.parquet(docsDir).schema
-    lazy val vecsSchema = spark.read.parquet(vecsDir).schema
+    // the landing schemas, read at most once a pass: dedup_ingest and
+    // oov_qc drain the same documents landing
+    lazy val docsSchema = landingSchema(spark, docsDir, docsFiles)
+    lazy val vecsSchema = landingSchema(spark, vecsDir, vecsFiles)
     // one ingest stage: its two input-skip arms, else the drain of `dir`
     // through `run` against `<checkpointRoot>/<ckpt>`
     def ingestStage(name: String, dir: String, schema: => StructType,
@@ -715,28 +722,28 @@ object ArrivalPass {
           // (an accumulating landing zone must not be re-scored
           // nightly), per-batch reports land under batch_id partitions
           // idempotent under replay
-          val resDocs = Tables.memoizedParquet(spark, res).select("text")
           val out = s"${cfg.checkpointRoot}/oov"
-          // batch ids THIS pass committed — the stage detail must
-          // report tonight's QC, not re-announce last week's flags
-          // from older batch partitions (round-13 review)
+          // the kept vocabulary, resolved at the first batch (a drain
+          // that runs none lists nothing): rebuilt only when the resident
+          // corpus's files changed, so a steady batch reads no resident row
+          lazy val vocab = new graft.pipeline.OovQc.VocabStore(spark,
+            s"${cfg.checkpointRoot}/oov_vocab").resolve(res)
+          // batch id -> route, for the batches THIS pass committed: the
+          // stage detail must report tonight's QC, not re-announce last
+          // week's flags from older batch partitions (round-13 review)
           val passBatches =
-            java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+            new java.util.concurrent.ConcurrentHashMap[Long, String]()
           // deadline + heartbeat ride the drain like the ingest
           // stages: a backlogged landing admitted late QCs what fits
           // (checkpoint resumes), and the pass lease stays live
-          val r =
-            graft.streaming.Streams.incrementalCheckById(spark, docsDir,
-              docsSchema,
-              (batch, id) => {
-                passBatches.add(id)
-                graft.pipeline.TextAnalysis.oovReport(
-                  batch.select("doc_id", "source", "text"), resDocs)
-              },
-              s"${cfg.checkpointRoot}/oov_ckpt", out,
-              deadline = deadline, clock = clock,
-              maxFilesPerBatch = Some(cfg.maxFilesPerBatch),
-              heartbeat = () => passLease.renew())
+          val r = graft.streaming.Streams.drain(spark, docsDir, docsSchema,
+              s"${cfg.checkpointRoot}/oov_ckpt", "oov_qc", deadline, clock,
+              Some(cfg.maxFilesPerBatch), () => passLease.renew()) {
+            (batch, id) =>
+              passBatches.put(id, graft.pipeline.OovQc.writeReport(spark,
+                vocab, batch, new Path(out, s"batch_id=$id")))
+              ()
+          }
           // the drain report rides BOTH ran arms (round-15 advice): a
           // vanish pending only on the oov checkpoint (dedup already
           // committed the file) is consumed by the replay, so without
@@ -750,15 +757,18 @@ object ArrivalPass {
               s"pass (cumulative report under $out)"))
           else {
             import scala.jdk.CollectionConverters._
-            val ids = passBatches.asScala.toSeq
+            val ids = passBatches.keySet.asScala.toSeq
             // a report holds at most one row per source per batch: read
             // on the driver, no job
             val flags = ids.flatMap(id => GraftSqlBridge.readParquetRows(
               spark, new Path(out, s"batch_id=$id"))(Encoders.row(
                 StructType(Seq(StructField("flagged", BooleanType))))))
             val flagged = flags.count(r => !r.isNullAt(0) && r.getBoolean(0))
+            val routes = passBatches.values.asScala.toSeq.distinct.sorted
             ("ran", r.detail(s"batches=${ids.size} " +
               s"report_rows=${flags.size} flagged=$flagged " +
+              s"route=${routes.mkString("+")} vocab=" +
+              s"${if (vocab.rebuilt) "rebuilt" else "kept"} " +
               s"report=$out resident=$res"))
           }
       }
@@ -847,5 +857,22 @@ object ArrivalPass {
     // admission degrades to the time gate, never to wrong work
     stats.flush()
     ArrivalReport(results.toSeq, violations, errors)
+  }
+
+  /** The schema a landing's drain reads under, from `files`, the
+    * landing's data files ([[graft.streaming.Streams.listDataStatuses]]
+    * of `dir`): the footer schema of the first file by path, read on the
+    * driver with no Spark job — or, when a file sits below a
+    * subdirectory of `dir`, Spark's inference over `dir`, which adds the
+    * partition columns those directory names carry. */
+  private[graft] def landingSchema(spark: SparkSession, dir: String,
+      files: Seq[org.apache.hadoop.fs.FileStatus]): StructType = {
+    val p = new Path(dir)
+    val base = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(p)
+    if (files.isEmpty || files.exists(_.getPath.getParent != base))
+      spark.read.parquet(dir).schema
+    else GraftSqlBridge.parquetFooterSchema(spark,
+      files.map(_.getPath).minBy(_.toString))
   }
 }

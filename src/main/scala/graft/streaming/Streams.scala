@@ -3,7 +3,7 @@ package graft.streaming
 import java.time.Instant
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -550,7 +550,13 @@ object Streams {
     * skipped. Zero-length files carry no rows and are skipped unless
     * `includeEmpty` ([[archiveDrained]] must still sweep them). */
   private[graft] def listDataFiles(spark: SparkSession,
-      src: String, includeEmpty: Boolean = false): Seq[String] = {
+      src: String, includeEmpty: Boolean = false): Seq[String] =
+    listDataStatuses(spark, src, includeEmpty).map(_.getPath.toUri.getPath)
+
+  /** [[listDataFiles]]' files with their statuses (qualified path,
+    * length, modification time), from the same one listing. */
+  private[graft] def listDataStatuses(spark: SparkSession,
+      src: String, includeEmpty: Boolean = false): Seq[FileStatus] = {
     val raw = new Path(src)
     val fs = raw.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // QUALIFY the base before computing relative components: a relative
@@ -563,12 +569,11 @@ object Streams {
     else if (fs.getFileStatus(srcP).isFile) {
       // a single-file table (DuckDB COPY / pandas layout): the file was
       // explicitly named, so no hidden-component filtering applies
-      if (includeEmpty || fs.getFileStatus(srcP).getLen > 0)
-        Seq(srcP.toUri.getPath)
-      else Nil
+      val st = fs.getFileStatus(srcP)
+      if (includeEmpty || st.getLen > 0) Seq(st) else Nil
     } else {
       val basePath = srcP.toUri.getPath.stripSuffix("/") + "/"
-      val buf = scala.collection.mutable.ArrayBuffer.empty[String]
+      val buf = scala.collection.mutable.ArrayBuffer.empty[FileStatus]
       val it = fs.listFiles(srcP, true)
       while (it.hasNext) {
         val st = it.next()
@@ -576,7 +581,7 @@ object Streams {
         val hidden = rel.split("/").exists(c =>
           c.startsWith("_") || c.startsWith("."))
         if (st.isFile && (includeEmpty || st.getLen > 0) && !hidden)
-          buf += st.getPath.toUri.getPath
+          buf += st
       }
       buf.toSeq
     }
@@ -849,8 +854,9 @@ object Streams {
     * without it AvailableNow plans ONE batch over the whole backlog,
     * which has no check points. `leased` wraps the stream (an ingest
     * drain holds its store's writer lease exactly while it runs). */
-  private def drain(spark: SparkSession, srcDir: String, schema: StructType,
-      checkpoint: String, what: String, deadline: Option[Instant],
+  private[graft] def drain(spark: SparkSession, srcDir: String,
+      schema: StructType, checkpoint: String, what: String,
+      deadline: Option[Instant],
       clock: graft.model.Clock, maxFilesPerBatch: Option[Int],
       heartbeat: () => Unit, leased: (=> Boolean) => Boolean = run => run)(
       body: (DataFrame, Long) => Unit): DrainReport = {
